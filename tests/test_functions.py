@@ -366,3 +366,33 @@ def test_run_overlapped_cancels_pending_on_failure():
         run_overlapped([slow_ok, fail, never], max_workers=2)
     _time.sleep(0.1)
     assert "never" not in ran and ran.count("fail") == 1
+
+
+def test_ensure_parallel_scan_leaves_exchange_frames_unplanned(spark, tmp_path):
+    """A frame with an Exchange in its physical plan comes back unchanged
+    and without a Spark job (``df.rdd`` would run the upstream shuffle);
+    a one-file scan is still spread to ``defaultParallelism``."""
+    from vector_graph_rag_spark.functions.partitioning import ensure_parallel_scan
+
+    sc = spark.sparkContext
+    path = str(tmp_path / "one_file")
+    spark.range(64).coalesce(1).write.parquet(path)
+    grouped = (
+        spark.read.parquet(path).groupBy((F.col("id") % 5).alias("g")).count()
+    )
+    group = "ensure_parallel_scan_exchange"
+    sc.setJobGroup(group, group)
+    try:
+        out = ensure_parallel_scan(grouped)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60000)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert out is grouped
+
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() == 1
+    spread = ensure_parallel_scan(scan)
+    assert spread.rdd.getNumPartitions() == sc.defaultParallelism

@@ -572,3 +572,29 @@ def test_perplexity_buckets_rejects_null_scores(spark):
     )
     with pytest.raises(ValueError, match="contains NULLs"):
         perplexity_buckets(df)
+
+
+@pytest.mark.parametrize("quantized", [False, True])
+def test_out_of_range_bucket_contributes_zero_weight(spark, quantized):
+    """Precomputed features hashed with more buckets than the model's
+    ``n_buckets`` score as if the out-of-range buckets had weight 0.0 —
+    neither an error nor a NULL margin."""
+    from vector_graph_rag_spark.operators.lm_filter import quality_scores
+
+    model = {
+        "weights": {0: 1.0, 1: 2.0},
+        "bias": 0.0,
+        "n_buckets": 2,
+        "text_col": "text",
+        "quantized": quantized,
+    }
+    grouped = spark.createDataFrame(
+        [(1, [(0, 0.5), (7, 0.5)]), (2, [(1, 1.0)])],
+        "doc_id long, fs array<struct<bucket:int,x:double>>",
+    )
+    got = {
+        r["doc_id"]: r["score"]
+        for r in quality_scores(None, model, grouped_features=grouped).collect()
+    }
+    assert got[1] == pytest.approx(1.0 / (1.0 + math.exp(-0.5)))
+    assert got[2] == pytest.approx(1.0 / (1.0 + math.exp(-2.0)))

@@ -67,6 +67,14 @@ ALLOWED_DRIVER_MATERIALIZATION = {
 
 BANNED_ROW_UDF_NAMES = {"udf", "UserDefinedFunction"}
 
+# source text -> the one module (package-relative) allowed to contain it:
+# the Hadoop FS handle belongs to the batch-shard store, the under-parallel
+# scan guard to its helper.  A second copy fails the test.
+SINGLE_OWNER_PATTERNS = {
+    "getFileSystem(": "streaming/shards.py",
+    "getNumPartitions() < max(2": "functions/partitioning.py",
+}
+
 
 def _walk_sites():
     found = []
@@ -124,3 +132,22 @@ def test_no_row_at_a_time_python_udfs_anywhere():
         "row-wise Python UDF in source (use pandas_udf / mapInPandas / "
         f"applyInPandas instead): {offenders}"
     )
+
+
+def test_single_owner_patterns_have_one_home():
+    tools_root = os.path.join(os.path.dirname(SRC_ROOT), "tools")
+    holders = {pat: [] for pat in SINGLE_OWNER_PATTERNS}
+    for root in (SRC_ROOT, tools_root):
+        for dirpath, _, files in os.walk(root):
+            for fn in sorted(files):
+                if not fn.endswith(".py"):
+                    continue
+                path = os.path.join(dirpath, fn)
+                src = open(path).read()
+                for pat in SINGLE_OWNER_PATTERNS:
+                    if pat in src:
+                        holders[pat].append(os.path.relpath(path, SRC_ROOT))
+    for pat, owner in SINGLE_OWNER_PATTERNS.items():
+        assert holders[pat] == [owner], (
+            f"{pat!r} belongs only in {owner}; found in {sorted(holders[pat])}"
+        )

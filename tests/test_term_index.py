@@ -274,6 +274,7 @@ def test_inplace_term_compaction_delete_ordering(spark, tmp_path, monkeypatch):
     crash between the two leaves a harmless no-op tombstone set, never
     tombstoned postings with the record already spent."""
     import vector_graph_rag_spark.streaming.term_index as TI
+    import vector_graph_rag_spark.streaming.shards as S
     from vector_graph_rag_spark.sources.tables import load_table
     from vector_graph_rag_spark.streaming.term_index import (
         append_doc_tombstones,
@@ -291,7 +292,7 @@ def test_inplace_term_compaction_delete_ordering(spark, tmp_path, monkeypatch):
     )
 
     deletes: list[str] = []
-    real_fs = TI._fs
+    real_fs = S.hadoop_fs
 
     class _RecFS:
         def __init__(self, fs):
@@ -308,7 +309,7 @@ def test_inplace_term_compaction_delete_ordering(spark, tmp_path, monkeypatch):
         fs, p = real_fs(s, path)
         return _RecFS(fs), p
 
-    monkeypatch.setattr(TI, "_fs", rec_fs)
+    monkeypatch.setattr(S, "hadoop_fs", rec_fs)
     assert TI.compact_term_index(spark, idx, idx, compacted_id=2) == 2
     monkeypatch.undo()
 

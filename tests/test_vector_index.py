@@ -284,6 +284,7 @@ def test_inplace_compaction_crash_safe_ordering(spark, tmp_path, monkeypatch):
     (3) the crash-window state (sources gone, tombstones unspent) being
     a harmless no-op on the next compaction."""
     import vector_graph_rag_spark.streaming.vector_index as VI
+    import vector_graph_rag_spark.streaming.shards as S
     from vector_graph_rag_spark.streaming.vector_index import (
         append_tombstones,
         read_tombstones,
@@ -304,7 +305,7 @@ def test_inplace_compaction_crash_safe_ordering(spark, tmp_path, monkeypatch):
     append_tombstones(dels, idx, 0)
 
     deletes: list[str] = []
-    real_fs = VI._fs
+    real_fs = S.hadoop_fs
 
     class _RecFS:
         def __init__(self, fs):
@@ -321,7 +322,7 @@ def test_inplace_compaction_crash_safe_ordering(spark, tmp_path, monkeypatch):
         fs, p = real_fs(s, path)
         return _RecFS(fs), p
 
-    monkeypatch.setattr(VI, "_fs", rec_fs)
+    monkeypatch.setattr(S, "hadoop_fs", rec_fs)
     assert VI.compact_index(spark, idx, idx, compacted_id=2) == 2
     monkeypatch.undo()
 

@@ -2,17 +2,18 @@
 
 A small corpus arriving as ONE parquet file scans as one task, so every
 row-local map pass riding that scan — tokenize, shingle md5, minhash,
-feature hashing, mock embeddings — serializes on a single core until the
-first shuffle.  The conditional relayout below is the idiom three r15-r17
-sites already use (`pq.write_ivfpq_index`, `vector_index.append_to_index`,
-`term_index.append_term_batch`, measured 6x on the 10x smoke): repartition
-ONLY when the scan is under-parallel, so a multi-file corpus — every real
+feature hashing, mock embeddings, PQ encode — serializes on a single core
+until the first shuffle (measured 6x on the 10x smoke for the vector
+index append).  The conditional relayout below repartitions ONLY when
+the scan is under-parallel, so a multi-file corpus — every real
 deployment, and the 10x/100x smokes — skips the exchange entirely and the
 guard is a no-op at scale.
 
-Apply ONLY to scan-rooted frames (reads, or narrow projections/filters of
-reads): ``df.rdd`` on a frame with a shuffle in its lineage would execute
-the shuffle stages under AQE at call time.
+The guard only ever inspects scan-rooted frames: ``df.rdd`` on a frame
+with an Exchange in its physical plan would execute the upstream shuffle
+(or broadcast) stages at call time under AQE, work the later actions do
+not reuse.  Such a frame is returned unchanged without running a job —
+its partitioning is the Exchange's, not a file-split count.
 """
 
 from __future__ import annotations
@@ -23,7 +24,11 @@ from pyspark.sql import DataFrame
 def ensure_parallel_scan(df: DataFrame) -> DataFrame:
     """Conditionally repartition an under-parallel scan-rooted frame to
     ``defaultParallelism`` so downstream row-local map work spreads over
-    the cluster instead of the scan's file-split count."""
+    the cluster instead of the scan's file-split count.  Frames whose
+    physical plan holds an Exchange pass through untouched (planning
+    only, no Spark job)."""
+    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
+        return df
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < max(2, par // 2):
         return df.repartition(par)

@@ -504,14 +504,20 @@ def _weight_lookup(w: dict[int, float], n_buckets: int):
     ``pmod``-bounded in [0, n_buckets), and the sentinel bucket −1 (and
     the old map's missing-key NULL) resolves to the same 0.0 — so every
     margin term multiplies the same operands and the fold stays
-    bit-identical."""
+    bit-identical.  A bucket >= ``n_buckets`` (features hashed with a
+    different bucket count than the model's) also contributes 0.0: the
+    out-of-range lookup is NULL (``try_element_at``, ANSI-safe) and is
+    coalesced, instead of erroring or NULLing the whole margin."""
     from vector_graph_rag_spark.functions.literals import double_array_lit
 
     warr = double_array_lit([w.get(i, 0.0) for i in range(n_buckets)])
 
     def look(bucket) -> Column:
         return F.when(
-            bucket >= 0, F.element_at(warr, bucket.cast("int") + 1)
+            bucket >= 0,
+            F.coalesce(
+                F.try_element_at(warr, bucket.cast("int") + 1), F.lit(0.0)
+            ),
         ).otherwise(F.lit(0.0))
 
     return look

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_graph_rag_spark.functions.hashing import seeded_hash60, seeded_hash60_sql
+from vector_graph_rag_spark.functions.partitioning import ensure_parallel_scan
 from vector_graph_rag_spark.functions.text import tokens
 from vector_graph_rag_spark.queries.vector import _cos_sql as _vec_cos_sql
 from vector_graph_rag_spark.queries import register
@@ -794,10 +795,7 @@ def _kmeans_assignments(
     # corpus-sized relayout.
     from vector_graph_rag_spark.queries.pipeline import _embeddings_fingerprint
 
-    q = _quantized_vectors(spark, sf_dir)
-    par = spark.sparkContext.defaultParallelism
-    if q.rdd.getNumPartitions() < max(2, par // 2):
-        q = q.repartition(par)
+    q = ensure_parallel_scan(_quantized_vectors(spark, sf_dir))
     key = (_embeddings_fingerprint(sf_dir), k, 1)  # (data, k, updates)
     if key not in _KM_CENTROID_CACHE:
         _KM_CENTROID_CACHE[key] = _train_centroids(q, k, _KM_DIM, updates=1)

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from vector_graph_rag_spark.functions.concurrency import run_overlapped
 from vector_graph_rag_spark.functions.hashing import hash60_sql, hash60b_sql
 from vector_graph_rag_spark.functions.literals import inline_rows
+from vector_graph_rag_spark.functions.partitioning import ensure_parallel_scan
 from vector_graph_rag_spark.queries import register
 from vector_graph_rag_spark.queries.curation import _GRAMS5_CTE
 from vector_graph_rag_spark.queries.lmfilter import _LM_CE_SQL, _TOKS_CTE
@@ -1134,10 +1135,7 @@ def _pq_quantized_and_books(spark: SparkSession, sf_dir: str):
     # entirely, keeping the measured shuffle volume the ALGORITHM's
     # (partitions-bounded cells agg + WindowGroupLimit top-k), never a
     # corpus-sized relayout.
-    q = quantize_embeddings(emb)
-    par = spark.sparkContext.defaultParallelism
-    if q.rdd.getNumPartitions() < max(2, par // 2):
-        q = q.repartition(par)
+    q = ensure_parallel_scan(quantize_embeddings(emb))
     key = _embeddings_fingerprint(sf_dir)
     if key not in _PQ_BOOKS_CACHE:
         _PQ_BOOKS_CACHE[key] = train_pq_codebooks(q, updates=1)
@@ -1621,10 +1619,9 @@ def ann_index_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         search_index,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    par = spark.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < max(2, par // 2):
-        emb = emb.repartition(par)
+    emb = ensure_parallel_scan(
+        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    )
     _q, books = _pq_quantized_and_books(spark, sf_dir)
     if not any(books):
         return spark.createDataFrame(
@@ -1700,10 +1697,9 @@ def ann_index_streamed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_index_vectors,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    par = spark.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < max(2, par // 2):
-        emb = emb.repartition(par)
+    emb = ensure_parallel_scan(
+        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    )
     _q, books = _pq_quantized_and_books(spark, sf_dir)
     if not any(books):
         return spark.createDataFrame(
@@ -1774,10 +1770,9 @@ def ann_index_compacted_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         search_index,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    par = spark.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < max(2, par // 2):
-        emb = emb.repartition(par)
+    emb = ensure_parallel_scan(
+        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    )
     _q, books = _pq_quantized_and_books(spark, sf_dir)
     if not any(books):
         return spark.createDataFrame(
@@ -1977,10 +1972,9 @@ def ann_index_tombstone_delete_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         search_index,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    par = spark.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < max(2, par // 2):
-        emb = emb.repartition(par)
+    emb = ensure_parallel_scan(
+        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    )
     _q, books = _pq_quantized_and_books(spark, sf_dir)
     if not any(books):
         return spark.createDataFrame(
@@ -2078,10 +2072,9 @@ def ann_index_spend_readd_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         search_index,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    par = spark.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < max(2, par // 2):
-        emb = emb.repartition(par)
+    emb = ensure_parallel_scan(
+        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    )
     _q, books = _pq_quantized_and_books(spark, sf_dir)
     if not any(books):
         return spark.createDataFrame(

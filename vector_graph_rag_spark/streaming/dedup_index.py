@@ -5,9 +5,8 @@ that never re-signatures the corpus.
 SHAPE (one nightly batch banded against the whole corpus); at 100 TB the
 missing piece is persistence: the corpus side's shingling + minhashing
 must be paid ONCE, not per night.  This module stores the signature /
-band state as an overwrite-idempotent shard tree (the
-``streaming/lm_counts`` contract — a replayed batch id overwrites its own
-shard, so delivery is exactly-once under a streaming checkpoint):
+band state as a ``streaming/shards`` batch-shard tree (layout, replay
+delete-first and the Hadoop-FS listing live there):
 
     state_dir/batch=<id>/sigs/    (doc_id, sig array<long>[16])
     state_dir/bands/batch=<id>/   (doc_id, band, band_key) — ONE external
@@ -47,9 +46,7 @@ against the BROADCAST candidate set (batch-bounded: ≤ batch bands ×
 — every Exchange left in the probe plan is proportional to the nightly
 batch, never to the index.  Index growth is one band row per (doc, band)
 and one 16-long array per doc — O(corpus docs), ~100 bytes/doc, 1/1000th
-of a 100 KB-average corpus.  All filesystem probing goes through the
-Hadoop FileSystem API, so a non-local ``state_dir`` (object storage)
-behaves identically to a local one.
+of a 100 KB-average corpus.
 """
 
 from __future__ import annotations
@@ -71,6 +68,7 @@ from vector_graph_rag_spark.queries.dedup import (
     N_MINHASH,
     ROWS_PER_BAND,
 )
+from vector_graph_rag_spark.streaming import shards
 
 
 def batch_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -155,12 +153,6 @@ def _bands_table_name(state_dir: str) -> str:
     return f"vgr_dedup_bands_{digest}"
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
 # Serializes this module's catalog DDL (table create, partition add/drop)
 # so concurrent appends of DIFFERENT batch ids can overlap their DATA
 # writes (guide §2.6) while the metadata ops — cheap, driver-local —
@@ -172,21 +164,8 @@ _DDL_LOCK = threading.Lock()
 
 
 def list_batch_ids(spark: SparkSession, state_dir: str) -> list[int]:
-    """Batch ids present in the index, via the Hadoop FileSystem API —
-    works identically for local dirs and object-store URIs (a local-only
-    ``glob`` would silently report a remote index as empty)."""
-    fs, hpath = _hadoop_fs(spark, _index_loc(state_dir))
-    if not fs.exists(hpath):
-        return []
-    ids = []
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
-        if status.isDirectory() and name.startswith("batch="):
-            try:
-                ids.append(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
-    return sorted(ids)
+    """Batch ids present in the index (``shards.list_batch_ids``)."""
+    return shards.list_batch_ids(spark, _index_loc(state_dir))
 
 
 def _ensure_bands_table(spark: SparkSession, state_dir: str) -> str:
@@ -210,8 +189,7 @@ def _ensure_bands_table(spark: SparkSession, state_dir: str) -> str:
             # adopt partitions written by earlier sessions; a brand-new
             # index has no bands dir yet and RECOVER would throw on the
             # missing path
-            fs, hpath = _hadoop_fs(spark, loc)
-            if fs.exists(hpath):
+            if shards.exists(spark, loc):
                 spark.sql(f"ALTER TABLE {tbl} RECOVER PARTITIONS")
     return tbl
 
@@ -246,12 +224,12 @@ def append_to_index(
     nightly multi-batch flows overlap them (``dedup_index_incremental``:
     the former top bench row)."""
     spark = sig.sparkSession
-    base = os.path.join(state_dir, f"batch={batch_id}")
+    base = shards.batch_path(state_dir, batch_id)
     tbl = _ensure_bands_table(spark, state_dir)
-    part_dir = os.path.join(_index_loc(state_dir), "bands", f"batch={batch_id}")
-    fs, hpath = _hadoop_fs(spark, part_dir)
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
+    part_dir = shards.batch_path(
+        os.path.join(_index_loc(state_dir), "bands"), batch_id
+    )
+    if shards.clear(spark, part_dir):
         with _DDL_LOCK:
             spark.sql(
                 f"ALTER TABLE {tbl} DROP IF EXISTS PARTITION (batch={batch_id})"
@@ -341,7 +319,7 @@ def probe_index(
     tbl = _ensure_bands_table(spark, state_dir)
     idx_bands = spark.table(tbl).filter(F.col("batch").isin(ids))
     idx_sigs = spark.read.parquet(
-        *[os.path.join(state_dir, f"batch={i}", "sigs") for i in ids]
+        *[os.path.join(shards.batch_path(state_dir, i), "sigs") for i in ids]
     )
     if bucket_cap is not None:
         # bucketed scan ⇒ this aggregation needs NO Exchange: rows with

@@ -5,12 +5,12 @@ that never re-tokenizes the corpus.
 posting table in one shot; at 100 TB documents arrive nightly, and
 re-tokenizing (or rewriting) the accumulated postings per batch is the
 cost this module removes.  Each batch's documents are tokenized ONCE and
-their (doc_id, term, w) rows land in an overwrite-idempotent shard tree
-(the ``streaming/vector_index`` / ``streaming/dedup_index`` contract — a
-replayed batch id overwrites its own shard, so delivery is exactly-once
-under a streaming checkpoint):
+their (doc_id, term, w) rows land in a ``streaming/shards`` batch-shard
+tree, which owns the layout, replay delete-first, tombstones beside shards
+and the drop-sources-then-spend compaction order:
 
-    index_dir/batch=<id>/part-*.parquet   (doc_id, term, w)
+    index_dir/batch=<id>/part-*.parquet              (doc_id, term, w)
+    index_dir/tombstones/batch=<id>/part-*.parquet   (doc_id)
 
 Invariants (test-pinned + oracle-gated by the staged
 ``term_index_incremental`` query, whose oracle is ``sparse_dot_topk``'s
@@ -23,9 +23,9 @@ SQL verbatim):
   ``bm25_scores_from_index``'s dl/df/avgdl derivations) is a commutative
   aggregation over posting rows, so ANY sharding of the corpus into
   batches yields byte-identical search results.
-- **replay idempotence**: re-appending an existing batch id first deletes
-  that batch's shard dir (a metadata-only overwrite would resurface stale
-  files and double-count a document's terms), then rewrites it.
+- **replay idempotence**: re-appending an existing batch id rewrites its
+  shard (the shard store's delete-first rule — no document's terms are
+  double-counted).
 - **append-only doc ids**: batches carry NEW documents.  A revised
   document is a delete + re-append of its batch (or a new index) — the
   same contract as the LSH band table.
@@ -35,41 +35,22 @@ SQL verbatim):
   avgdl statistics reflect the post-delete corpus; ``compact_term_index``
   removes the postings physically and spends the tombstones (in place) —
   the same lifecycle as ``vector_index.append_tombstones``.
-
-The laziness caveat of ``dedup_index.probe_index`` applies: a search plan
-is pinned to the files its scan discovered, so materialize outstanding
-searches before REPLAYING a batch id (appends of new ids are safe —
-partition discovery happens at read time).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vector_graph_rag_spark.functions.partitioning import ensure_parallel_scan
 from vector_graph_rag_spark.functions.text import tokens
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
-
-
-def list_batch_ids(spark: SparkSession, index_dir: str) -> list[int]:
-    """Batch ids present in the index (Hadoop FS — object-store-safe: a
-    bad path fails loudly, never 'empty')."""
-    fs, root = _fs(spark, index_dir)
-    if not fs.exists(root):
-        return []
-    ids = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch="):
-            ids.append(int(name.split("=", 1)[1]))
-    return sorted(ids)
+from vector_graph_rag_spark.streaming import shards
+# the store's public listing/tombstone readers ARE the shard store's
+from vector_graph_rag_spark.streaming.shards import (
+    list_batch_ids,
+    list_tombstone_ids as list_doc_tombstone_ids,
+    read_tombstones as read_doc_tombstones,
+)
 
 
 def append_term_batch(
@@ -82,24 +63,22 @@ def append_term_batch(
     is the batch-local tf aggregation + the term-major repartition that
     co-locates each term's batch postings (bounded by BATCH tokens, never
     the accumulated corpus — the whole point)."""
-    spark = docs.sparkSession
-    # Under-parallel batch guard (see streaming/vector_index.append_to_index):
     # a one-file micro-batch scans as one task and serializes the tokenize
-    # map side; the tf groupBy re-parallelizes only after that scan.
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < max(2, par // 2):
-        docs = docs.repartition(par)
-    fs, _ = _fs(spark, index_dir)
-    batch_dir = os.path.join(index_dir, f"batch={batch_id}")
-    _, bpath = _fs(spark, batch_dir)
-    if fs.exists(bpath):  # replay: physically drop the stale shard first
-        fs.delete(bpath, True)
+    # map side; the tf groupBy re-parallelizes only after that scan
+    docs = ensure_parallel_scan(docs)
+    batch_dir = shards.batch_path(index_dir, batch_id)
+    shards.clear(docs.sparkSession, batch_dir)
     tf = (
         docs.select("doc_id", F.explode(tokens(text_col)).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    tf.repartition(F.col("term")).write.mode("overwrite").parquet(batch_dir)
+    _write_postings(tf, batch_dir)
+
+
+def _write_postings(rows: DataFrame, path: str) -> None:
+    """One posting shard, term-major (co-locates each term's postings)."""
+    rows.repartition(F.col("term")).write.mode("overwrite").parquet(path)
 
 
 def append_doc_tombstones(
@@ -111,43 +90,12 @@ def append_doc_tombstones(
 
         index_dir/tombstones/batch=<id>/part-*.parquet   (doc_id)
 
-    with the same overwrite-idempotent replay contract as posting batches.
-    The logical posting table (``read_term_index``) anti-joins them, so
-    EVERY consumer — search scores, df/dl/avgdl statistics — sees the
-    post-delete corpus; ``compact_term_index`` removes the postings
-    physically and spends the tombstones."""
-    spark = ids.sparkSession
-    tomb_dir = os.path.join(index_dir, "tombstones", f"batch={batch_id}")
-    fs, tpath = _fs(spark, tomb_dir)
-    if fs.exists(tpath):  # replay: drop the stale shard first
-        fs.delete(tpath, True)
-    ids.select(F.col(id_col).cast("long").alias("doc_id")).write.mode(
-        "overwrite"
-    ).parquet(tomb_dir)
-
-
-def list_doc_tombstone_ids(spark: SparkSession, index_dir: str) -> list[int]:
-    """Tombstone batch ids present under ``index_dir/tombstones``."""
-    root = os.path.join(index_dir, "tombstones")
-    fs, rpath = _fs(spark, root)
-    if not fs.exists(rpath):
-        return []
-    return sorted(
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(rpath)
-        if st.isDirectory() and st.getPath().getName().startswith("batch=")
-    )
-
-
-def read_doc_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    """The union of all doc tombstone shards (None when none exist)."""
-    ids = list_doc_tombstone_ids(spark, index_dir)
-    if not ids:
-        return None
-    root = os.path.join(index_dir, "tombstones")
-    return spark.read.parquet(
-        *[os.path.join(root, f"batch={i}") for i in ids]
-    ).select("doc_id").distinct()
+    with the shard store's replay contract.  The logical posting table
+    (``read_term_index``) anti-joins them, so EVERY consumer — search
+    scores, df/dl/avgdl statistics — sees the post-delete corpus;
+    ``compact_term_index`` removes the postings physically and spends the
+    tombstones."""
+    shards.write_tombstones(ids, index_dir, batch_id, id_col, "doc_id")
 
 
 def read_term_index(
@@ -164,15 +112,15 @@ def read_term_index(
     ids = list_batch_ids(spark, index_dir)
     if not ids:
         return spark.createDataFrame([], "doc_id long, term string, w long")
-    rows = (
-        spark.read.option("basePath", index_dir)
-        .parquet(*[os.path.join(index_dir, f"batch={i}") for i in ids])
-        .select("doc_id", "term", "w")
-    )
+    return _postings(spark, index_dir, ids, exclude_tombstoned)
+
+
+def _postings(
+    spark: SparkSession, index_dir: str, ids: list[int], exclude_tombstoned: bool
+) -> DataFrame:
+    rows = shards.read_batches(spark, index_dir, ids).select("doc_id", "term", "w")
     if exclude_tombstoned:
-        tombs = read_doc_tombstones(spark, index_dir)
-        if tombs is not None:
-            rows = rows.join(tombs, "doc_id", "left_anti")
+        rows = shards.drop_tombstoned(spark, index_dir, rows, "doc_id")
     return rows
 
 
@@ -211,42 +159,19 @@ def stream_index_documents(
     spark: SparkSession,
     docs_dir: str,
     index_dir: str,
-    max_files_per_trigger: int = 1,
-    schema: str = "doc_id long, text string",
     text_col: str = "text",
 ) -> int:
-    """Stream parquet document files from ``docs_dir`` into the posting
-    index, one ``append_term_batch`` shard per micro-batch (the
-    ``streaming/vector_index`` pattern).  Structured Streaming's batch ids
-    are monotonically unique under a checkpoint and replays re-deliver the
-    SAME id, which lands exactly on the shard tree's overwrite-idempotence
-    contract — at-least-once delivery is safe.  Returns the number of
-    micro-batches processed.  Bounded run (``availableNow``) for tests /
-    backfills; a live pipeline drops the trigger and keeps the
-    checkpointLocation."""
-    n_batches = [0]
+    """Stream parquet document files ``(doc_id long, text_col string)``
+    from ``docs_dir`` into the posting index, one ``append_term_batch``
+    shard per micro-batch (``shards.stream_batches``).  Returns the number
+    of micro-batches processed."""
 
-    def _append(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_term_batch(batch_df, index_dir, int(batch_id), text_col=text_col)
-        n_batches[0] += 1
+    def _append(batch_df: DataFrame, batch_id: int) -> None:
+        append_term_batch(batch_df, index_dir, batch_id, text_col=text_col)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    return shards.stream_batches(
+        spark, docs_dir, f"doc_id long, {text_col} string", index_dir, _append
     )
-    q = (
-        stream.writeStream.foreachBatch(_append)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", os.path.join(index_dir, "_stream_checkpoint")
-        )
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches[0]
 
 
 def compact_term_index(
@@ -259,39 +184,15 @@ def compact_term_index(
     doc-disjoint by the append contract, so concatenation IS the merged
     index: a search of the compacted tree returns row-identical results.
     With ``out_dir != index_dir`` the source shards stay intact
-    (publish-then-swap); in-place, the source shards are dropped here
-    BEFORE the tombstones are spent — the crash-safe ordering
-    ``vector_index.compact_index`` documents.  Returns the number of
+    (publish-then-swap); in place, the source shards are dropped and the
+    tombstones spent in the crash-safe order of ``shards.compact``.
+    Doc tombstones are applied, so compaction is their PHYSICAL removal
+    (the ``vector_index.compact_index`` semantic).  Returns the number of
     source batches merged.
 
     At 100 TB this bounds the files-per-term growth the nightly appends
     accumulate (a term's posting list spans every batch that saw it)."""
-    ids = list_batch_ids(spark, index_dir)
-    if not ids:
-        return 0
-    # read_term_index applies doc tombstones — compaction is their
-    # PHYSICAL removal (the vector_index.compact_index semantic).
-    rows = read_term_index(spark, index_dir)
-    batch_dir = os.path.join(out_dir, f"batch={compacted_id}")
-    fs, bpath = _fs(spark, batch_dir)
-    if fs.exists(bpath):  # replay-idempotent like append_term_batch
-        fs.delete(bpath, True)
-    rows.repartition(F.col("term")).write.mode("overwrite").parquet(batch_dir)
-    # In-place compaction: drop source shards FIRST, then spend the
-    # applied tombstones (ids re-open for legitimate re-indexing) —
-    # crash between the two leaves only a harmless no-op tombstone set,
-    # never tombstoned postings with a spent record (r15 ADVICE;
-    # ordering contract documented at vector_index.compact_index).
-    if os.path.abspath(out_dir) == os.path.abspath(index_dir):
-        for i in ids:
-            if i == compacted_id:
-                continue
-            sdir = os.path.join(index_dir, f"batch={i}")
-            sfs, spath = _fs(spark, sdir)
-            if sfs.exists(spath):
-                sfs.delete(spath, True)
-        troot = os.path.join(index_dir, "tombstones")
-        tfs, tpath = _fs(spark, troot)
-        if tfs.exists(tpath):
-            tfs.delete(tpath, True)
-    return len(ids)
+    return shards.compact(
+        spark, index_dir, out_dir, compacted_id,
+        lambda ids: _postings(spark, index_dir, ids, True), _write_postings,
+    )

@@ -5,11 +5,12 @@ never re-encodes the corpus.
 in one shot; at 100 TB the corpus arrives nightly, and re-encoding (or
 rewriting) the accumulated index per batch is the cost this module
 removes.  Each batch's vectors are assigned + PQ-encoded ONCE and land in
-an overwrite-idempotent shard tree (the ``streaming/lm_counts`` /
-``streaming/dedup_index`` contract — a replayed batch id overwrites its
-own shard, so delivery is exactly-once under a streaming checkpoint):
+a ``streaming/shards`` batch-shard tree, which owns the layout, replay
+delete-first, tombstones beside shards and the drop-sources-then-spend
+compaction order:
 
     index_dir/batch=<id>/cell_id=<c>/part-*.parquet   (vec_id, codes)
+    index_dir/tombstones/batch=<id>/part-*.parquet    (vec_id)
 
 Both levels are Hive partition columns, so a probe reads
 ``basePath=index_dir`` with a ``cell_id IN (probed)`` filter and Spark
@@ -22,52 +23,32 @@ Invariants (test-pinned):
   ``pq.ivfpq_search`` over ``pq.write_ivfpq_index`` of the full corpus —
   assignment and encoding are row-local against the same frozen
   centroids/codebooks, so shard boundaries cannot change any code.
-- **replay idempotence**: re-appending an existing batch id first deletes
-  that batch's partition dir (a metadata-only overwrite would resurface
-  stale files and double-count), then rewrites it byte-compatibly.
+- **replay idempotence**: re-appending an existing batch id rewrites it
+  byte-compatibly (the shard store's delete-first rule).
 - **frozen quantizers**: centroids and codebooks are TRAINING artifacts
   (sample-train, encode-all — the PQ deployment recipe); append never
   retrains, so old shards never go stale.  Re-training is a new index.
-
-The laziness caveat of ``dedup_index.probe_index`` applies here too: a
-search plan is pinned to the files the scan discovered, so materialize
-outstanding searches before REPLAYING a batch id (appends of NEW ids are
-safe — partition discovery happens at read time).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vector_graph_rag_spark.functions.partitioning import ensure_parallel_scan
 from vector_graph_rag_spark.operators.pq import (
     Codebooks,
     adc_score,
     encode_pq_np,
     quantize_embeddings,
 )
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
-
-
-def list_batch_ids(spark: SparkSession, index_dir: str) -> list[int]:
-    """Batch ids present in the index (Hadoop FS — object-store-safe, the
-    dedup_index ADVICE-r9 rule: a bad path fails loudly, never 'empty')."""
-    fs, root = _fs(spark, index_dir)
-    if not fs.exists(root):
-        return []
-    ids = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch="):
-            ids.append(int(name.split("=", 1)[1]))
-    return sorted(ids)
+from vector_graph_rag_spark.streaming import shards
+# the store's public listing/tombstone readers ARE the shard store's
+from vector_graph_rag_spark.streaming.shards import (
+    list_batch_ids,
+    list_tombstone_ids,
+    read_tombstones,
+)
 
 
 def append_to_index(
@@ -89,21 +70,12 @@ def append_to_index(
     not once per append."""
     from vector_graph_rag_spark.operators.ivf import assign_cells
 
-    spark = batch.sparkSession
-    # Under-parallel batch guard: a micro-batch arriving as one small file
-    # (the Structured-Streaming maxFilesPerTrigger=1 shape) scans as ONE
-    # task, serializing the encode/assign expression work — measured 6x on
-    # the 10x smoke (37s vs 6.8s for the same appends from a well-
-    # partitioned frame).  Same conditional-relayout aid as
-    # queries/pipeline._pq_quantized_and_books: a multi-file batch skips it.
-    par = spark.sparkContext.defaultParallelism
-    if batch.rdd.getNumPartitions() < max(2, par // 2):
-        batch = batch.repartition(par)
-    fs, _ = _fs(spark, index_dir)
-    batch_dir = os.path.join(index_dir, f"batch={batch_id}")
-    _, bpath = _fs(spark, batch_dir)
-    if fs.exists(bpath):  # replay: physically drop the stale shard first
-        fs.delete(bpath, True)
+    # a micro-batch arriving as one small file (the stream driver's
+    # one-file trigger) scans as ONE task and serializes the encode/assign
+    # work — measured 6x on the 10x smoke (37s vs 6.8s)
+    batch = ensure_parallel_scan(batch)
+    batch_dir = shards.batch_path(index_dir, batch_id)
+    shards.clear(batch.sparkSession, batch_dir)
 
     # Bit-exact numpy encode (operators/pq.encode_pq_np): per-batch
     # encoding is the dominant cost of the ingest path at the 100x smoke
@@ -130,12 +102,18 @@ def append_to_index(
         assigned, id_col=corpus_id, vec_col=corpus_vec, keep=("cell_id",)
     )
     enc = encode_pq_np(q, codebooks, passthrough=("cell_id",), emit_qv=False)
+    _write_codes(enc, batch_dir)
+
+
+def _write_codes(rows: DataFrame, path: str) -> None:
+    """One code shard, partitionBy(cell_id) with the salted repartition
+    bounding files-per-cell (same rationale as ``pq.write_ivfpq_index``)."""
     (
-        enc.select("vec_id", "codes", "cell_id")
+        rows.select("vec_id", "codes", "cell_id")
         .repartition(F.col("cell_id"), F.pmod(F.hash("vec_id"), F.lit(4)))
         .write.mode("overwrite")
         .partitionBy("cell_id")
-        .parquet(batch_dir)
+        .parquet(path)
     )
 
 
@@ -149,41 +127,10 @@ def append_tombstones(
 
         index_dir/tombstones/batch=<id>/part-*.parquet   (vec_id)
 
-    under the SAME overwrite-idempotent replay contract as code batches
-    (a replayed tombstone batch id overwrites its own shard).  Search
-    anti-joins the tombstone set; ``compact_index`` is the physical-removal
-    path (Milvus segment compaction applies deltas the same way)."""
-    spark = ids.sparkSession
-    tomb_dir = os.path.join(index_dir, "tombstones", f"batch={batch_id}")
-    fs, tpath = _fs(spark, tomb_dir)
-    if fs.exists(tpath):  # replay: drop the stale shard first
-        fs.delete(tpath, True)
-    ids.select(F.col(id_col).cast("long").alias("vec_id")).write.mode(
-        "overwrite"
-    ).parquet(tomb_dir)
-
-
-def list_tombstone_ids(spark: SparkSession, index_dir: str) -> list[int]:
-    """Tombstone batch ids present under ``index_dir/tombstones``."""
-    root = os.path.join(index_dir, "tombstones")
-    fs, rpath = _fs(spark, root)
-    if not fs.exists(rpath):
-        return []
-    return sorted(
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(rpath)
-        if st.isDirectory() and st.getPath().getName().startswith("batch=")
-    )
-
-
-def read_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    """The union of all tombstone shards (None when none exist)."""
-    ids = list_tombstone_ids(spark, index_dir)
-    if not ids:
-        return None
-    root = os.path.join(index_dir, "tombstones")
-    dirs = [os.path.join(root, f"batch={i}") for i in ids]
-    return spark.read.parquet(*dirs).select("vec_id").distinct()
+    under the shard store's replay contract.  Search anti-joins the
+    tombstone set; ``compact_index`` is the physical-removal path (Milvus
+    segment compaction applies deltas the same way)."""
+    shards.write_tombstones(ids, index_dir, batch_id, id_col, "vec_id")
 
 
 def search_index(
@@ -254,15 +201,11 @@ def search_index(
     for r in probed:
         seen.setdefault(int(r["vec_id"]), list(r["qv"]))
     qvecs = sorted(seen.items())
-    index = (
-        spark.read.option("basePath", index_dir)
-        .parquet(*[os.path.join(index_dir, f"batch={i}") for i in ids])
-        .filter(F.col("cell_id").isin(cells))
+    index = shards.read_batches(spark, index_dir, ids).filter(
+        F.col("cell_id").isin(cells)
     )
     if exclude_tombstoned:
-        tombs = read_tombstones(spark, index_dir)
-        if tombs is not None:
-            index = index.join(tombs, "vec_id", "left_anti")
+        index = shards.drop_tombstoned(spark, index_dir, index, "vec_id")
     from vector_graph_rag_spark.functions.literals import inline_rows
 
     pairs = inline_rows(
@@ -290,20 +233,13 @@ def stream_index_vectors(
     centroids: DataFrame,
     codebooks: Codebooks,
     index_dir: str,
-    max_files_per_trigger: int = 1,
-    schema: str = "vec_id long, embedding array<float>",
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
 ) -> int:
-    """Stream parquet vector files from ``vectors_dir`` into the IVF-PQ
-    index, one ``append_to_index`` shard per micro-batch (the
-    ``streaming/index.py`` pattern).  Structured Streaming's batch ids are
-    monotonically unique under a checkpoint and replays re-deliver the
-    SAME id, which lands exactly on the shard tree's overwrite-idempotence
-    contract — at-least-once delivery is safe.  Returns the number of
-    micro-batches processed.  Bounded run (``availableNow``) for tests /
-    backfills; a live pipeline drops the trigger and keeps the
-    checkpointLocation."""
+    """Stream parquet vector files ``(corpus_id long, corpus_vec
+    array<float>)`` from ``vectors_dir`` into the IVF-PQ index, one
+    ``append_to_index`` shard per micro-batch (``shards.stream_batches``).
+    Returns the number of micro-batches processed."""
     from vector_graph_rag_spark.operators.ivf import collect_centroids
 
     # one bounded centroid collect for the whole run — not one scan job
@@ -311,37 +247,17 @@ def stream_index_vectors(
     # micro-batch's fixed cost at sf0.1 was this repeated collect)
     if not isinstance(centroids, list):
         centroids = collect_centroids(centroids)
-    n_batches = [0]
 
-    def _append(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _append(batch_df: DataFrame, batch_id: int) -> None:
         append_to_index(
-            batch_df,
-            centroids,
-            codebooks,
-            index_dir,
-            int(batch_id),
-            corpus_id=corpus_id,
-            corpus_vec=corpus_vec,
+            batch_df, centroids, codebooks, index_dir, batch_id,
+            corpus_id=corpus_id, corpus_vec=corpus_vec,
         )
-        n_batches[0] += 1
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(vectors_dir)
+    return shards.stream_batches(
+        spark, vectors_dir, f"{corpus_id} long, {corpus_vec} array<float>",
+        index_dir, _append,
     )
-    q = (
-        stream.writeStream.foreachBatch(_append)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", os.path.join(index_dir, "_stream_checkpoint")
-        )
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches[0]
 
 
 def compact_index(
@@ -363,9 +279,9 @@ def compact_index(
     intact; the caller swaps directories once the compacted tree is
     verified — the same publish-then-swap discipline as the versioned
     store.  With ``out_dir == index_dir`` (the nightly-CLI flow) the
-    SOURCE shards are removed here, then the tombstones are spent — in
-    that order, so a crash anywhere in the window leaves the index
-    consistent (see below).  Returns the number of source batches merged.
+    source shards are dropped and the tombstones spent in the crash-safe
+    order of ``shards.compact``.  Returns the number of source batches
+    merged.
 
     At 100 TB compaction bounds the files-per-probe growth: a probe reads
     nprobe cells x n_batches shard files; nightly appends push n_batches
@@ -376,49 +292,14 @@ def compact_index(
     sealed segments, after which the deltas are gone.  The compacted tree
     carries no tombstones; a probe of it equals a tombstone-excluded probe
     of the source (pinned by tests/test_vector_index.py)."""
-    ids = list_batch_ids(spark, index_dir)
-    if not ids:
-        return 0
-    rows = spark.read.option("basePath", index_dir).parquet(
-        *[os.path.join(index_dir, f"batch={i}") for i in ids]
-    )
-    if apply_tombstones:
-        tombs = read_tombstones(spark, index_dir)
-        if tombs is not None:
-            rows = rows.join(tombs, "vec_id", "left_anti")
-    batch_dir = os.path.join(out_dir, f"batch={compacted_id}")
-    fs, bpath = _fs(spark, batch_dir)
-    if fs.exists(bpath):  # replay-idempotent like append_to_index
-        fs.delete(bpath, True)
-    (
-        rows.select("vec_id", "codes", "cell_id")
-        .repartition(F.col("cell_id"), F.pmod(F.hash("vec_id"), F.lit(4)))
-        .write.mode("overwrite")
-        .partitionBy("cell_id")
-        .parquet(batch_dir)
-    )
-    # In-place compaction (out_dir == index_dir, the nightly-CLI flow):
-    # the source shards are dropped HERE, and only then are the applied
-    # tombstones SPENT (re-opening the ids for legitimate re-indexing).
-    # Ordering is the crash-safety contract (r15 ADVICE): a crash after
-    # the compacted shard lands but before the source drop leaves
-    # duplicates that the unspent tombstones still exclude and the next
-    # compaction folds; a crash after the source drop but before the
-    # spend leaves tombstones pointing at rows that no longer exist — a
-    # harmless no-op anti-join, re-spent next compaction.  Spending
-    # FIRST (the old order) had a window where tombstoned rows survived
-    # in source shards with no record left to exclude them.
-    if os.path.abspath(out_dir) == os.path.abspath(index_dir):
-        for i in ids:
-            if i == compacted_id:
-                continue
-            sdir = os.path.join(index_dir, f"batch={i}")
-            sfs, spath = _fs(spark, sdir)
-            if sfs.exists(spath):
-                sfs.delete(spath, True)
+
+    def rows_of(ids: list[int]) -> DataFrame:
+        rows = shards.read_batches(spark, index_dir, ids)
         if apply_tombstones:
-            troot = os.path.join(index_dir, "tombstones")
-            tfs, tpath = _fs(spark, troot)
-            if tfs.exists(tpath):
-                tfs.delete(tpath, True)
-    return len(ids)
+            rows = shards.drop_tombstoned(spark, index_dir, rows, "vec_id")
+        return rows
+
+    return shards.compact(
+        spark, index_dir, out_dir, compacted_id, rows_of, _write_codes,
+        spend_tombstones=apply_tombstones,
+    )
