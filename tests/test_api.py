@@ -172,6 +172,24 @@ def test_import_route(client, tmp_path_factory):
     stats = client.get("/graph/imp/stats").get_json()
     assert stats["passages"] == 2 and stats["relations"] > 0
     assert client.post("/import", json={"graph_name": "imp"}).status_code == 400
+    assert client.post("/import", json={"graph_name": "imp", "sources": [1]}).status_code == 400
+
+
+def test_import_sources_come_back_byte_identical(client):
+    """Import paths never pass through SQL text, where the parser would
+    substitute ``${env:X}`` and ``${<conf key>}`` before parsing."""
+    sources = ["x/${env:HOME}.zzz", "${spark.app.name}.zzz", "/no/such/${system:user.dir}.txt"]
+    r = client.post("/import", json={"graph_name": "imp_sub", "sources": sources})
+    assert r.status_code == 200
+    assert sorted(s["source"] for s in r.get_json()["skipped"]) == sorted(sources)
+
+
+@pytest.mark.parametrize("bad", ["g1__aside", "g1__staging", "", ".."])
+def test_reserved_graph_names_are_400(client, bad):
+    before = client.get("/graphs").get_json()["graphs"]
+    r = client.post("/add_documents", json={"graph_name": bad, "documents": DOCS[:1]})
+    assert r.status_code == 400 and "invalid graph name" in r.get_json()["error"]
+    assert client.get("/graphs").get_json()["graphs"] == before
 
 
 def test_upload_route(client):

@@ -67,6 +67,9 @@ ALLOWED_DRIVER_MATERIALIZATION = {
 
 BANNED_ROW_UDF_NAMES = {"udf", "UserDefinedFunction"}
 
+# packages (package-relative) that serve API requests
+REQUEST_PATH_PACKAGES = ("api/", "graph/")
+
 # source text -> the one module (package-relative) allowed to contain it:
 # the Hadoop FS handle belongs to the batch-shard store, the under-parallel
 # scan guard to its helper.  A second copy fails the test.
@@ -103,6 +106,8 @@ def _walk_sites():
                             found.append(
                                 ("materialize", rel, self.stack[-1] if self.stack else "<module>", node.func.attr)
                             )
+                        if node.func.attr == "createDataFrame":
+                            found.append(("create_df", rel, self.stack[-1] if self.stack else "<module>", node.func.attr))
                         if node.func.attr in BANNED_ROW_UDF_NAMES:
                             found.append(("row_udf", rel, self.stack[-1] if self.stack else "<module>", node.func.attr))
                     elif isinstance(node.func, ast.Name) and node.func.id in BANNED_ROW_UDF_NAMES:
@@ -132,6 +137,18 @@ def test_no_row_at_a_time_python_udfs_anywhere():
         "row-wise Python UDF in source (use pandas_udf / mapInPandas / "
         f"applyInPandas instead): {offenders}"
     )
+
+
+def test_no_python_rdd_frames_on_the_request_path():
+    """``spark.createDataFrame(<python data>)`` backs a frame with a Python
+    RDD; the API and graph layers build request frames with
+    ``functions/literals.inline_rows`` / ``arrow_rows`` instead (lineage
+    pinned in ``tests/test_request_frames.py``)."""
+    offenders = [
+        s for s in _walk_sites()
+        if s[0] == "create_df" and s[1].startswith(REQUEST_PATH_PACKAGES)
+    ]
+    assert not offenders, f"createDataFrame on the request path: {offenders}"
 
 
 def test_single_owner_patterns_have_one_home():

@@ -3,7 +3,7 @@
 The reference's Graph facade does per-record read-modify-upsert against
 Milvus (graph.py:102-672).  On Spark the same semantics are pure DataFrame
 transforms — each op takes the five GraphTables and returns new
-GraphTables; the caller persists via GraphCatalog.write_graph (or an
+GraphTables; the caller persists via GraphCatalog.replace_graph (or an
 external MERGE-capable table format when available).
 
 Cascade-delete parity (graph.py:634-672 passages, :430-475 relations,
@@ -39,6 +39,13 @@ def _strip(col_name: str, doomed: list[str]):
     return F.array_except(F.coalesce(F.col(col_name), F.array()), F.lit(doomed))
 
 
+def _anti(df: DataFrame, doomed: DataFrame, key: str) -> DataFrame:
+    """Rows of ``df`` whose ``key`` is not in ``doomed``, in ``df``'s own
+    column order (a USING join moves the key first, and the catalog
+    refuses tables whose order differs from its declared schemas)."""
+    return df.join(doomed, key, "left_anti").select(*df.columns)
+
+
 def delete_passages(g: GraphTables, passage_ids) -> GraphTables:
     """Cascade passage delete (graph.py:634-672): drop passage rows and
     relation→passage edges; strip the ids from entities'/relations'
@@ -49,13 +56,9 @@ def delete_passages(g: GraphTables, passage_ids) -> GraphTables:
     return GraphTables(
         entities=g.entities.withColumn("passage_ids", _strip("passage_ids", doomed)),
         relations=g.relations.withColumn("passage_ids", _strip("passage_ids", doomed)),
-        passages=g.passages.join(
-            doomed_df.withColumnRenamed("passage_id", "id"), "id", "left_anti"
-        ),
+        passages=_anti(g.passages, doomed_df.withColumnRenamed("passage_id", "id"), "id"),
         entity_relation=g.entity_relation,
-        relation_passage=g.relation_passage.join(
-            F.broadcast(doomed_df), "passage_id", "left_anti"
-        ),
+        relation_passage=_anti(g.relation_passage, F.broadcast(doomed_df), "passage_id"),
     )
 
 
@@ -67,16 +70,10 @@ def delete_relations(g: GraphTables, relation_ids) -> GraphTables:
     doomed_df = inline_rows(spark, [(i,) for i in doomed], "relation_id string")
     return GraphTables(
         entities=g.entities.withColumn("relation_ids", _strip("relation_ids", doomed)),
-        relations=g.relations.join(
-            doomed_df.withColumnRenamed("relation_id", "id"), "id", "left_anti"
-        ),
+        relations=_anti(g.relations, doomed_df.withColumnRenamed("relation_id", "id"), "id"),
         passages=g.passages.withColumn("relation_ids", _strip("relation_ids", doomed)),
-        entity_relation=g.entity_relation.join(
-            F.broadcast(doomed_df), "relation_id", "left_anti"
-        ),
-        relation_passage=g.relation_passage.join(
-            F.broadcast(doomed_df), "relation_id", "left_anti"
-        ),
+        entity_relation=_anti(g.entity_relation, F.broadcast(doomed_df), "relation_id"),
+        relation_passage=_anti(g.relation_passage, F.broadcast(doomed_df), "relation_id"),
     )
 
 
@@ -87,14 +84,10 @@ def delete_entities(g: GraphTables, entity_ids) -> GraphTables:
     spark = g.entities.sparkSession
     doomed_df = inline_rows(spark, [(i,) for i in doomed], "entity_id string")
     return GraphTables(
-        entities=g.entities.join(
-            doomed_df.withColumnRenamed("entity_id", "id"), "id", "left_anti"
-        ),
+        entities=_anti(g.entities, doomed_df.withColumnRenamed("entity_id", "id"), "id"),
         relations=g.relations,
         passages=g.passages.withColumn("entity_ids", _strip("entity_ids", doomed)),
-        entity_relation=g.entity_relation.join(
-            F.broadcast(doomed_df), "entity_id", "left_anti"
-        ),
+        entity_relation=_anti(g.entity_relation, F.broadcast(doomed_df), "entity_id"),
         relation_passage=g.relation_passage,
     )
 

@@ -69,18 +69,15 @@ def expand_subgraph(
     rp = graph.relation_passage  # relation_id, passage_id
 
     entities = _ids(seed_entities, "entity_id")
-    seed_rel = (
-        _ids(seed_relations, "relation_id")
-        if seed_relations is not None
-        else seed_entities.sparkSession.createDataFrame([], "relation_id string")
-    )
 
     # Step 0 (knowledge_graph.py:281-301): seed-entity-adjacent relations.
     # `er` holds distinct (entity, relation) pairs, so a semi join keeps it
     # un-fanned-out; the union with seed relations stays lazy/undeduped —
     # it is deduped when it becomes the hop-1 broadcast frontier below.
+    # Without seed relations there is nothing to union.
     step0 = er.join(F.broadcast(entities), "entity_id", "left_semi").select("relation_id")
-    relations_raw = seed_rel.unionByName(step0)
+    seed_rel = None if seed_relations is None else _ids(seed_relations, "relation_id")
+    relations_raw = step0 if seed_rel is None else seed_rel.unionByName(step0)
 
     # History parity (knowledge_graph.py:281-346): the reference records the
     # per-step NEW id lists plus running totals.  The lists are frontier-sized
@@ -108,11 +105,11 @@ def expand_subgraph(
     if collect_history:
         step0_sets = _collect_tagged(
             ("ent", entities, "entity_id"),
-            ("seed_rel", seed_rel, "relation_id"),
             ("step0", step0.distinct(), "relation_id"),
+            *([] if seed_rel is None else [("seed_rel", seed_rel, "relation_id")]),
         )
         ent_set = step0_sets["ent"]
-        rel_set = step0_sets["seed_rel"]
+        rel_set = step0_sets.get("seed_rel", set())
         step0_ids = step0_sets["step0"]
         new0 = sorted(step0_ids - rel_set)
         rel_set |= step0_ids

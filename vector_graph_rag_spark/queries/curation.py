@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_graph_rag_spark.functions.hashing import seeded_hash60, seeded_hash60_sql
+from vector_graph_rag_spark.functions.literals import inline_rows
 from vector_graph_rag_spark.functions.partitioning import ensure_parallel_scan
 from vector_graph_rag_spark.functions.text import tokens
 from vector_graph_rag_spark.queries.vector import _cos_sql as _vec_cos_sql
@@ -801,7 +802,7 @@ def _kmeans_assignments(
         _KM_CENTROID_CACHE[key] = _train_centroids(q, k, _KM_DIM, updates=1)
     centroids = _KM_CENTROID_CACHE[key]
     if not centroids:  # empty corpus — no seeds, nothing to assign
-        return spark.createDataFrame([], "vec_id long, cluster long, dist long")
+        return inline_rows(spark, [], "vec_id long, cluster long, dist long")
     assign = _km_assign_np if numpy_assign else _km_assign
     return assign(q, centroids).select("vec_id", "cluster", "dist")
 
@@ -837,7 +838,6 @@ def train_ivf_centroids(
         _KM_CENTROID_CACHE[key] = _train_centroids(q, nlist, _KM_DIM, updates=updates)
     cents = _KM_CENTROID_CACHE[key]
     rows = [(cid, [v / _KM_SCALE for v in vec]) for cid, vec in cents]
-    from vector_graph_rag_spark.functions.literals import inline_rows
 
     return inline_rows(spark, rows, "centroid_id int, cvec array<double>")
 

@@ -1244,7 +1244,7 @@ def source_temperature_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in d.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     if not counts:
-        return spark.createDataFrame([], "source string, doc_id long, rk int")
+        return inline_rows(spark, [], "source string, doc_id long, rk int")
     import math
 
     u = {s: math.isqrt(n) for s, n in counts.items()}

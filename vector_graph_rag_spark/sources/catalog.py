@@ -11,6 +11,24 @@ relation_passage}.parquet`.  Catalog ops map 1:1:
   reference's add_documents is full-rebuild overwrite (rag.py:354-356),
   which is exactly `mode("overwrite")`.
 
+Schemas.  The five tables have fixed columns, declared once in
+``GRAPH_SCHEMAS``.  ``read_graph`` passes them to the reader, so a read
+runs no schema-inference job (one per table otherwise), and
+``write_graph`` refuses a table whose names, order or types differ, so
+the declaration cannot drift from what is on disk.
+
+Swaps.  ``replace_graph`` is the one way a live graph changes: the new
+graph is written to ``<name>__staging``, the live directory is renamed
+to ``<name>__aside``, the staging copy is renamed in, and only then is
+the aside copy deleted.  A crash leaves the before-state or the
+after-state: the next catalog call on the graph renames a lone aside
+copy back (died between the renames) or deletes one beside a live graph
+(died before the delete).  ``list_graphs`` never lists the staging or
+aside directories, and a graph name may not end in either suffix or
+hold a path separator (``GraphNameError``), so no user graph can be
+taken for one.  One process-wide lock orders swaps against recovery,
+whichever ``GraphCatalog`` object each goes through.
+
 At 100 TB each table write is partition-parallel parquet; `entities` and
 `relations` are written repartitioned by id so later point-lookup joins
 co-locate (and downstream readers can bucket on id).
@@ -20,19 +38,66 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
 from vector_graph_rag_spark.graph.builder import GraphTables
 
-TABLE_NAMES = [
-    "entities",
-    "relations",
-    "passages",
-    "entity_relation",
-    "relation_passage",
-]
+# Column order is the order ``graph/builder.build_graph`` emits and every
+# writer keeps (``graph/crud`` preserves its inputs' order).
+GRAPH_SCHEMAS = {
+    "entities": "id string, name string, passage_ids array<string>, relation_ids array<string>",
+    "relations": (
+        "id string, text string, subject string, predicate string, object string, "
+        "src_entity_id string, dst_entity_id string, passage_ids array<string>"
+    ),
+    "passages": "id string, text string, entity_ids array<string>, relation_ids array<string>",
+    "entity_relation": "entity_id string, relation_id string",
+    "relation_passage": "relation_id string, passage_id string",
+}
+TABLE_NAMES = list(GRAPH_SCHEMAS)
+
+# repartition key per table when ``write_graph`` is given ``partitions``
+PARTITION_KEYS = {
+    "entities": "id",
+    "relations": "id",
+    "passages": "id",
+    "entity_relation": "entity_id",
+    "relation_passage": "relation_id",
+}
+
+STAGING = "__staging"
+ASIDE = "__aside"
+
+# Serializes swaps, and recovery against a swap in flight: without it a
+# reader's recovery could rename a running swap's aside copy back.
+_SWAP_LOCK = threading.RLock()
+
+
+class GraphNameError(ValueError):
+    """A graph name the catalog cannot store (module notes)."""
+
+
+def _is_graph_name(name) -> bool:
+    return (
+        isinstance(name, str)
+        and name not in ("", ".", "..")
+        and "/" not in name
+        and not (os.altsep and os.altsep in name)
+        and "\0" not in name
+        and not name.endswith((STAGING, ASIDE))
+    )
+
+
+def _check_name(name) -> None:
+    if not _is_graph_name(name):
+        raise GraphNameError(
+            f"invalid graph name {name!r}: it may not be empty, '.' or '..', "
+            f"hold a path separator, or end in {STAGING!r} or {ASIDE!r}"
+        )
 
 
 @dataclass
@@ -40,16 +105,40 @@ class GraphCatalog:
     root: str
 
     def _graph_dir(self, name: str) -> str:
+        _check_name(name)
         return os.path.join(self.root, name)
+
+    def _recover(self, name: str) -> None:
+        """Finish or undo a swap that a crash interrupted (module notes)."""
+        live = self._graph_dir(name)
+        aside = live + ASIDE
+        if not os.path.isdir(aside):
+            return
+        with _SWAP_LOCK:
+            if not os.path.isdir(aside):
+                return
+            if os.path.isdir(live):
+                shutil.rmtree(aside)
+            else:
+                os.rename(aside, live)
+
+    def exists(self, name: str) -> bool:
+        """True if graph ``name`` is present, after recovering a swap a
+        crash interrupted."""
+        self._recover(name)
+        return os.path.isdir(self._graph_dir(name))
 
     def list_graphs(self) -> list[dict]:
         """[{name, has_all_tables}] sorted by name (milvus.py:847-924)."""
         if not os.path.isdir(self.root):
             return []
+        for entry in os.listdir(self.root):
+            if entry.endswith(ASIDE) and _is_graph_name(entry[: -len(ASIDE)]):
+                self._recover(entry[: -len(ASIDE)])
         out = []
         for name in sorted(os.listdir(self.root)):
-            d = self._graph_dir(name)
-            if not os.path.isdir(d):
+            d = os.path.join(self.root, name)
+            if not os.path.isdir(d) or name.endswith((STAGING, ASIDE)):
                 continue
             present = {
                 t for t in TABLE_NAMES if os.path.exists(os.path.join(d, f"{t}.parquet"))
@@ -59,28 +148,51 @@ class GraphCatalog:
 
     def delete_graph(self, name: str) -> bool:
         """Drop the graph's directory (milvus.py:926-978). True if it existed."""
-        d = self._graph_dir(name)
-        if not os.path.isdir(d):
+        if not self.exists(name):
             return False
-        shutil.rmtree(d)
+        shutil.rmtree(self._graph_dir(name))
         return True
 
     def write_graph(self, name: str, tables: GraphTables, partitions: int | None = None) -> None:
-        """Overwrite-write all five tables (add_documents semantics,
-        rag.py:354-356).  Node tables are repartitioned by id."""
-        d = self._graph_dir(name)
+        """Overwrite-write all five tables in place (add_documents
+        semantics, rag.py:354-356).  With ``partitions``, each table is
+        repartitioned by its ``PARTITION_KEYS`` column.  Raises
+        ``ValueError`` before writing anything if a table's columns differ
+        from ``GRAPH_SCHEMAS``, and ``GraphNameError`` for a name the
+        catalog cannot store."""
+        self._write_tables(self._graph_dir(name), tables, partitions)
+
+    def _write_tables(self, d: str, tables: GraphTables, partitions: int | None) -> None:
+        for t in TABLE_NAMES:
+            got = getattr(tables, t).schema.simpleString()
+            want = StructType.fromDDL(GRAPH_SCHEMAS[t]).simpleString()
+            if got != want:
+                raise ValueError(f"write_graph: table {t} is {got}, declared {want}")
         os.makedirs(d, exist_ok=True)
+        for t in TABLE_NAMES:
+            df = getattr(tables, t)
+            if partitions:
+                df = df.repartition(partitions, PARTITION_KEYS[t])
+            df.write.mode("overwrite").parquet(os.path.join(d, f"{t}.parquet"))
 
-        def _write(df, fname: str, key: str | None):
-            if partitions and key:
-                df = df.repartition(partitions, key)
-            df.write.mode("overwrite").parquet(os.path.join(d, f"{fname}.parquet"))
-
-        _write(tables.entities, "entities", "id")
-        _write(tables.relations, "relations", "id")
-        _write(tables.passages, "passages", "id")
-        _write(tables.entity_relation, "entity_relation", "entity_id")
-        _write(tables.relation_passage, "relation_passage", "relation_id")
+    def replace_graph(
+        self, name: str, tables: GraphTables, partitions: int | None = None
+    ) -> None:
+        """Make ``tables`` the graph ``name`` with a crash-safe swap (module
+        notes).  ``tables`` may be a lazy plan over the live graph: it is
+        fully written before the live directory moves."""
+        live = self._graph_dir(name)
+        staging, aside = live + STAGING, live + ASIDE
+        with _SWAP_LOCK:
+            self._recover(name)
+            if os.path.isdir(staging):
+                shutil.rmtree(staging)
+            self._write_tables(staging, tables, partitions)
+            if os.path.isdir(live):
+                os.rename(live, aside)
+            os.rename(staging, live)
+            if os.path.isdir(aside):
+                shutil.rmtree(aside)
 
     def compact_graph(
         self, spark: SparkSession, name: str, target_files: int = 1
@@ -93,36 +205,32 @@ class GraphCatalog:
         parquet files; at 100 TB scan cost is dominated by file-open and
         footer reads, so periodic compaction (here `coalesce`, on a cluster
         the same job with a size-based target) restores scan efficiency.
-        Writes go through a staging directory + atomic swap so concurrent
-        readers never see a half-compacted table.  Returns files-per-table
-        after compaction.
+        The rewrite goes through ``replace_graph``, so readers never see a
+        half-compacted graph.  Returns files-per-table after compaction.
         """
+        g = self.read_graph(spark, name)
+        self.replace_graph(
+            name,
+            GraphTables(**{t: getattr(g, t).coalesce(target_files) for t in TABLE_NAMES}),
+        )
         d = self._graph_dir(name)
-        out: dict[str, int] = {}
-        for t in TABLE_NAMES:
-            path = os.path.join(d, f"{t}.parquet")
-            staging = path + ".compacting"
-            spark.read.parquet(path).coalesce(target_files).write.mode(
-                "overwrite"
-            ).parquet(staging)
-            shutil.rmtree(path)
-            os.rename(staging, path)
-            out[t] = sum(
+        return {
+            t: sum(
                 1
-                for f in os.listdir(path)
+                for f in os.listdir(os.path.join(d, f"{t}.parquet"))
                 if f.startswith("part-") and not f.endswith(".crc")
             )
-        return out
+            for t in TABLE_NAMES
+        }
 
     def read_graph(self, spark: SparkSession, name: str) -> GraphTables:
+        self._recover(name)
         d = self._graph_dir(name)
-        r = {t: spark.read.parquet(os.path.join(d, f"{t}.parquet")) for t in TABLE_NAMES}
         return GraphTables(
-            entities=r["entities"],
-            relations=r["relations"],
-            passages=r["passages"],
-            entity_relation=r["entity_relation"],
-            relation_passage=r["relation_passage"],
+            **{
+                t: spark.read.schema(GRAPH_SCHEMAS[t]).parquet(os.path.join(d, f"{t}.parquet"))
+                for t in TABLE_NAMES
+            }
         )
 
     def graph_stats(self, spark: SparkSession, name: str) -> dict:

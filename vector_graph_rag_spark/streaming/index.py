@@ -9,15 +9,13 @@ at-least-once delivery is safe).  Streaming and batch indexing share one
 code path; the test asserts stream-built == batch-built.
 
 Scale: per micro-batch cost is proportional to the batch + the touched
-keys, not the stored graph (join + anti-join merges); the staging-swap
-write keeps readers consistent (api/app.py notes).  On a cluster the sink
+keys, not the stored graph (join + anti-join merges); the catalog's
+staging swap (``GraphCatalog.replace_graph``) keeps readers consistent.  On a cluster the sink
 would be a Delta MERGE with the stream's checkpointLocation providing
 exactly-once.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import SparkSession
 
@@ -44,20 +42,11 @@ def stream_index_documents(
 
     def _merge(batch_df, batch_id: int) -> None:
         docs = synthetic_triplet_docs(batch_df)
-        exists = os.path.isdir(os.path.join(catalog.root, graph_name))
-        if not exists:
-            tables = build_graph(docs)
-            catalog.write_graph(graph_name, tables)
+        if catalog.exists(graph_name):
+            tables = upsert_passages(catalog.read_graph(spark, graph_name), docs)
         else:
-            g = catalog.read_graph(spark, graph_name)
-            merged = upsert_passages(g, docs)
-            staging = graph_name + "__staging"
-            catalog.write_graph(staging, merged)
-            catalog.delete_graph(graph_name)
-            os.rename(
-                os.path.join(catalog.root, staging),
-                os.path.join(catalog.root, graph_name),
-            )
+            tables = build_graph(docs)
+        catalog.replace_graph(graph_name, tables)
         n_batches[0] += 1
 
     stream = (

@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vector_graph_rag_spark.functions.literals import inline_rows
 from vector_graph_rag_spark.functions.partitioning import ensure_parallel_scan
 from vector_graph_rag_spark.functions.text import tokens
 from vector_graph_rag_spark.streaming import shards
@@ -111,7 +112,7 @@ def read_term_index(
     correctness property a BM25-style consumer needs from deletes."""
     ids = list_batch_ids(spark, index_dir)
     if not ids:
-        return spark.createDataFrame([], "doc_id long, term string, w long")
+        return inline_rows(spark, [], "doc_id long, term string, w long")
     return _postings(spark, index_dir, ids, exclude_tombstoned)
 
 
