@@ -76,6 +76,12 @@ def test_declared_schemas_equal_inferred_for_every_writer(spark, tmp_path):
     _assert_declared_on_disk(spark, cat._graph_dir("cascaded"))
 
 
+def test_declared_tables_hold_no_arrays():
+    # adjacency is stored once, as edge tables; arrays are a read-side view
+    for t, ddl in GRAPH_SCHEMAS.items():
+        assert "array" not in StructType.fromDDL(ddl).simpleString(), t
+
+
 def test_cached_testdata_graph_matches_declared_schemas(spark):
     from tests.conftest import SF_SMOKE
     from vector_graph_rag_spark.queries.graphrag import _graph

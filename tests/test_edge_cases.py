@@ -23,11 +23,14 @@ def test_empty_text_tripletless_passage(spark):
     # Reference test_graph.py:304-311 — empty text, no triplets: the passage
     # row exists with empty adjacency; no entities or relations appear.
     g = _build(spark, [("p_empty", "", [])])
-    p = g.passages.collect()
+    from vector_graph_rag_spark.graph.builder import adjacency_arrays
+
+    p = adjacency_arrays(g).passages.collect()
     assert len(p) == 1 and p[0].id == "p_empty" and p[0].text == ""
     assert p[0].entity_ids == [] and p[0].relation_ids == []
     assert g.entities.count() == 0 and g.relations.count() == 0
     assert g.entity_relation.count() == 0 and g.relation_passage.count() == 0
+    assert g.entity_passage.count() == 0
 
 
 def test_cjk_entities_collapse_to_one_normalized_key(spark):

@@ -24,6 +24,7 @@ import json
 import pytest
 
 from vector_graph_rag_spark.functions.text import entity_id_str, normalize_phrase_str
+from vector_graph_rag_spark.graph.builder import adjacency_arrays
 
 CORPUS = (
     "/root/reference/evaluation/data/"
@@ -75,7 +76,7 @@ def test_counts_after_dedup(golden):
 
 def test_einstein_adjacency(golden):
     eid = entity_id_str("Albert Einstein")
-    row = golden.entities.filter(f"id = '{eid}'").collect()
+    row = adjacency_arrays(golden).entities.filter(f"id = '{eid}'").collect()
     assert len(row) == 1
     assert row[0]["name"] == "albert einstein"  # normalized at eval load
     assert row[0]["passage_ids"] == ["doc00"]

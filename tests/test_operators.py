@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+from vector_graph_rag_spark.graph.builder import adjacency_arrays
 
 
 # --- chunker (reference tests chunk semantics implicitly via loaders) -------
@@ -88,7 +89,7 @@ def test_build_case_insensitive_dedup(small_graph):
     ents = {r.name for r in small_graph.entities.collect()}
     # first-seen raw forms kept
     assert ents == {"Alice", "Bob", "Carol", "Dave"}
-    rels = small_graph.relations.collect()
+    rels = adjacency_arrays(small_graph).relations.collect()
     assert len(rels) == 3  # "Alice knows Bob" == "alice knows bob"
     knows = [r for r in rels if r.predicate == "knows"][0]
     assert sorted(knows.passage_ids) == ["p1", "p2"]
@@ -99,7 +100,7 @@ def test_cascade_delete_passage(spark, small_graph):
 
     g2 = delete_passages(small_graph, ["p2"])
     assert g2.passages.count() == 2
-    knows = [r for r in g2.relations.collect() if r.predicate == "knows"][0]
+    knows = [r for r in adjacency_arrays(g2).relations.collect() if r.predicate == "knows"][0]
     assert knows.passage_ids == ["p1"]  # p2 stripped, relation kept
     # entities kept even if orphaned
     assert g2.entities.count() == 4
@@ -114,7 +115,7 @@ def test_cascade_delete_relation(spark, small_graph):
     assert g2.relations.count() == 2
     assert g2.entity_relation.filter(F.col("relation_id") == rid).count() == 0
     # passages keep rows; p3's relation_ids array stripped
-    p3 = [p for p in g2.passages.collect() if p.id == "p3"][0]
+    p3 = [p for p in adjacency_arrays(g2).passages.collect() if p.id == "p3"][0]
     assert p3.relation_ids == []
 
 
@@ -127,13 +128,40 @@ def test_upsert_passages(spark, small_graph):
     )
     g2 = upsert_passages(small_graph, new_docs)
     assert g2.passages.count() == 3
-    rels = {r.predicate: r for r in g2.relations.collect()}
+    rels = {r.predicate: r for r in adjacency_arrays(g2).relations.collect()}
     assert "meets" in rels
     # Reference cascade semantics: the old 'sees' relation is KEPT but its
     # passage ref is stripped (graph.py:656-670 rewrites arrays only).
     assert rels["sees"].passage_ids == []
     assert rels["meets"].passage_ids == ["p3"]
     assert {r.name for r in g2.entities.collect()} >= {"Eve"}
+
+
+def test_cascade_deletes_keep_mentions_apart_from_relations(spark, small_graph):
+    # delete_relations rewrites only relation_ids (graph.py:430-475):
+    # entities keep their passage_ids and passages their entity_ids.
+    # delete_entities strips the entity from passages' entity_ids.
+    from vector_graph_rag_spark.functions.text import entity_id_str
+    from vector_graph_rag_spark.graph.crud import delete_entities, delete_relations
+
+    rid = small_graph.relations.filter(F.col("predicate") == "sees").collect()[0].id
+    g2 = adjacency_arrays(delete_relations(small_graph, [rid]))
+    ents = {r.name: r for r in g2.entities.collect()}
+    assert ents["Dave"].passage_ids == ["p3"] and ents["Dave"].relation_ids == []
+    assert sorted(ents["Carol"].passage_ids) == ["p1", "p3"]
+    assert len(ents["Carol"].relation_ids) == 1
+    p3 = [p for p in g2.passages.collect() if p.id == "p3"][0]
+    assert p3.relation_ids == []
+    assert p3.entity_ids == sorted([entity_id_str("Carol"), entity_id_str("Dave")])
+
+    g3 = adjacency_arrays(delete_entities(small_graph, [entity_id_str("Carol")]))
+    assert g3.entities.count() == 3
+    passages = {p.id: p for p in g3.passages.collect()}
+    assert passages["p3"].entity_ids == [entity_id_str("Dave")]
+    assert passages["p1"].entity_ids == sorted([entity_id_str("Alice"), entity_id_str("Bob")])
+    assert len(passages["p3"].relation_ids) == 1  # the relation itself stays
+    rels = {r.predicate: r for r in g3.relations.collect()}
+    assert rels["sees"].passage_ids == ["p3"]
 
 
 # --- catalog round-trip (milvus.py:847-978 parity) --------------------------
@@ -361,7 +389,7 @@ def test_stream_incremental_index_equals_batch_build(spark, tmp_path):
 
     from tests.conftest import SF_SMOKE
     from vector_graph_rag_spark.graph.builder import build_graph, synthetic_triplet_docs
-    from vector_graph_rag_spark.sources.catalog import GraphCatalog
+    from vector_graph_rag_spark.sources.catalog import TABLE_NAMES, GraphCatalog
     from vector_graph_rag_spark.sources.tables import load_table
     from vector_graph_rag_spark.streaming.index import stream_index_documents
 
@@ -386,7 +414,7 @@ def test_stream_incremental_index_equals_batch_build(spark, tmp_path):
 
     streamed = cat.read_graph(spark, "inc")
     batch = build_graph(synthetic_triplet_docs(docs))
-    for t in ("entities", "relations", "passages", "entity_relation", "relation_passage"):
+    for t in TABLE_NAMES:
         # unionByName inside the merge path may reorder columns; compare on
         # a canonical (sorted-name) projection.
         cols = sorted(getattr(batch, t).columns)

@@ -31,7 +31,6 @@ ALLOWED_DRIVER_MATERIALIZATION = {
     ("api/app.py", "list_documents", "collect"): "limit()-paginated listing endpoint",
     ("api/app.py", "neighbors", "collect"): "1-hop neighborhood of one entity (HTTP response)",
     ("api/app.py", "query", "collect"): "final_top_k passages (<= 10) for an HTTP response",
-    ("graph/crud.py", "_id_list", "collect"): "ids of one client CRUD request batch",
     ("graph/expand.py", "_collect_tagged", "collect"): "opt-in history mode only; ONE tagged-union action per expansion step over frontier-sized (eviction-bounded) id lists — r12 fold of the former per-list collects",
     ("operators/bloom.py", "build_bloom", "collect"): "packed bitset words: n_bits/64 longs (128 KiB at default), never items",
     ("operators/bpe.py", "train_bpe", "collect"): "argmax pair (limit(1)) per merge + final vocab list (vocab-sized)",
@@ -56,6 +55,7 @@ ALLOWED_DRIVER_MATERIALIZATION = {
     ("queries/curation.py", "_train_centroids", "collect"): "k centroids per k-means iteration",
     ("queries/sampling.py", "rebalance_source_mix", "collect"): "per-source counts (|sources| rows)",
     ("sources/versioned.py", "merge", "collect"): "duplicate-source-key guard, limit(1)",
+    ("sources/catalog.py", "graph_stats", "collect"): "one (table, count) row per node table: 3 rows",
     ("streaming/lm_counts.py", "lm_from_counts", "collect"): "2 scalar totals",
     ("streaming/vector_index.py", "search_index", "collect"): "|queries| x nprobe probe-cell ids + the bounded quantized query batch (the ivfpq_search contract)",
     ("api/app.py", "search", "collect"): "HTTP response rows: k-bounded (topk/grouping) or limit-capped (range, default 1000) hits serialized to JSON — the API serving boundary",
@@ -168,3 +168,10 @@ def test_single_owner_patterns_have_one_home():
         assert holders[pat] == [owner], (
             f"{pat!r} belongs only in {owner}; found in {sorted(holders[pat])}"
         )
+
+
+def test_graph_crud_runs_no_driver_collect():
+    """Cascades and upserts are anti-joins and unions over the stored
+    tables; an id frame is joined as it is, never collected."""
+    src = open(os.path.join(SRC_ROOT, "graph", "crud.py")).read()
+    assert ".collect(" not in src

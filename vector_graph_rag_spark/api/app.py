@@ -545,7 +545,7 @@ def create_app(
             # which would win grouping mode's min(struct(-score, id))
             # reduce and pays the crossJoin for nothing in topk mode.
             g.passages.filter(F.col("text").isNotNull())
-            .select("id", "entity_ids", mock_embedding("text").alias("pvec"))
+            .select("id", mock_embedding("text").alias("pvec"))
             .crossJoin(F.broadcast(qdf))
             .withColumn("score", F.round(cosine("pvec", "qvec"), 6))
         )
@@ -585,12 +585,13 @@ def create_app(
             )
             # one kernel with the registered grouping_search_topk query:
             # map-side-combined min(struct(-score, id)), never a
-            # corpus-wide window; only the group-reduced frame is ranked
+            # corpus-wide window; only the group-reduced frame is ranked.
+            # A passage joins the entities it mentions.
+            mentions = g.entity_passage.select(
+                "entity_id", F.col("passage_id").alias("id")
+            )
             best = best_hit_per_group(
-                scored.select(
-                    "query_idx", "id", "score",
-                    F.explode("entity_ids").alias("entity_id"),
-                ),
+                scored.select("query_idx", "id", "score").join(mentions, "id"),
                 ["query_idx", "entity_id"],
                 id_col="id",
             )

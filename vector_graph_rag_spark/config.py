@@ -46,8 +46,9 @@ class EngineConfig:
     # Broadcast threshold hint for frontier joins (rows, not bytes)
     broadcast_frontier_max_rows: int = 10_000_000
 
-    # Storage layout: one directory per graph with five tables
-    # (entities / relations / passages / entity_relation / relation_passage),
+    # Storage layout: one directory per graph with six tables
+    # (entities / relations / passages / entity_relation / relation_passage /
+    # entity_passage),
     # mirroring the reference's collection_prefix multi-tenancy
     # (milvus.py:66-74).
     storage_root: str = "/tmp/vgrag_spark"

@@ -1,5 +1,6 @@
 from vector_graph_rag_spark.graph.builder import (
     GraphTables,
+    adjacency_arrays,
     explode_triplets,
     build_graph,
     synthetic_triplet_docs,
@@ -8,6 +9,7 @@ from vector_graph_rag_spark.graph.expand import expand_subgraph
 
 __all__ = [
     "GraphTables",
+    "adjacency_arrays",
     "explode_triplets",
     "build_graph",
     "synthetic_triplet_docs",

@@ -1,4 +1,4 @@
-"""Graph construction: documents + triplets → five graph tables.
+"""Graph construction: documents + triplets → six graph tables.
 
 Re-expresses the reference's in-memory GraphBuilder
 (/root/reference/src/vector_graph_rag/graph/builder.py:49-197) as pure
@@ -9,23 +9,25 @@ relational algebra:
   explicit arrival order (doc order, triplet index, subject-before-object)
   so the result is deterministic and oracle-checkable (SURVEY §7 risk list).
 - relation dedup on normalized "s p o" text (builder.py:63,97-109).
-- six adjacency relationships (builder.py:69-74) materialized BOTH ways:
-  * normalized edge tables `entity_relation`, `entity_passage`,
-    `relation_passage` — the scale path: joins on co-partitionable keys,
-    deletes are row deletes, no unbounded arrays;
-  * sorted array columns on the node tables — parity with the reference's
-    Milvus dynamic fields (rag.py:320-352).
+- the six adjacency relationships (builder.py:69-74) are stored once each,
+  as three edge tables `entity_relation`, `relation_passage` and
+  `entity_passage`; the node tables hold no adjacency.  Graph steps are
+  joins over these tables, and a delete is an anti-join of edge rows.
+
+The reference keeps adjacency as id arrays on each node (Milvus dynamic
+fields, rag.py:320-352).  Here those arrays are a read-side view,
+``adjacency_arrays``, built only by the readers that return arrays or
+their sizes.
 
 Scale design (100 TB): every groupBy shuffles on the dedup key, which is
 exactly the partitioning later joins want; the window that picks the
 first-seen form partitions by the same key, so Catalyst reuses one shuffle
-for dedup + representative-selection + adjacency aggregation.  No driver
-loops, no collects.
+for dedup + representative-selection.  No driver loops, no collects.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import dataclasses
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -38,24 +40,18 @@ from vector_graph_rag_spark.functions.text import (
 )
 
 
-@dataclass
+@dataclasses.dataclass
 class GraphTables:
-    """The five tables of one graph (SURVEY §1.4)."""
+    """The six tables of one graph (SURVEY §1.4): three node tables and
+    one edge table per adjacency."""
 
-    entities: DataFrame        # id, name, passage_ids, relation_ids
-    relations: DataFrame       # id, text, subject, predicate, object,
-                               # src_entity_id, dst_entity_id, passage_ids
-    passages: DataFrame        # id, text, entity_ids, relation_ids
-    entity_relation: DataFrame  # entity_id, relation_id
+    entities: DataFrame          # id, name
+    relations: DataFrame         # id, text, subject, predicate, object,
+                                 # src_entity_id, dst_entity_id
+    passages: DataFrame          # id, text
+    entity_relation: DataFrame   # entity_id, relation_id
     relation_passage: DataFrame  # relation_id, passage_id
-
-    def entity_passage(self) -> DataFrame:
-        """entity_id → passage_id edge table (derived)."""
-        return (
-            self.entity_relation.join(self.relation_passage, "relation_id")
-            .select("entity_id", "passage_id")
-            .distinct()
-        )
+    entity_passage: DataFrame    # entity_id, passage_id (mentions)
 
 
 def synthetic_triplet_docs(documents: DataFrame) -> DataFrame:
@@ -172,67 +168,56 @@ def build_graph(docs: DataFrame) -> GraphTables:
         .distinct()
     )
 
-    # ---- array-column parity views (sorted for determinism).
-    entities = (
-        entity_names.join(
-            entity_passage.groupBy("entity_id").agg(
-                F.sort_array(F.collect_set("passage_id")).alias("passage_ids")
-            ),
-            entity_names.id == F.col("entity_id"),
-            "left",
-        )
-        .drop("entity_id")
-        .join(
-            entity_relation.groupBy("entity_id").agg(
-                F.sort_array(F.collect_set("relation_id")).alias("relation_ids")
-            ),
-            entity_names.id == F.col("entity_id"),
-            "left",
-        )
-        .drop("entity_id")
-        .select("id", "name", "passage_ids", "relation_ids")
-    )
-    relations = relations_core.join(
-        relation_passage.groupBy("relation_id").agg(
-            F.sort_array(F.collect_set("passage_id")).alias("passage_ids")
-        ),
-        relations_core.id == F.col("relation_id"),
-        "left",
-    ).drop("relation_id")
-
-    passages = (
-        docs.select(F.col("doc_id").alias("id"), "text")
-        .join(
-            trips.groupBy("passage_id").agg(
-                F.sort_array(F.collect_set("rel_id")).alias("relation_ids")
-            ),
-            F.col("id") == F.col("passage_id"),
-            "left",
-        )
-        .drop("passage_id")
-        .join(
-            mentions.groupBy("passage_id").agg(
-                F.sort_array(F.collect_set("id")).alias("entity_ids")
-            ),
-            F.col("id") == F.col("passage_id"),
-            "left",
-        )
-        .drop("passage_id")
-        # Triplet-less passages (empty/short text) keep EMPTY adjacency
-        # arrays, not NULLs — the reference always stores lists
-        # (rag.py:347-352).
-        .select(
-            "id",
-            "text",
-            F.coalesce("entity_ids", F.array().cast("array<string>")).alias("entity_ids"),
-            F.coalesce("relation_ids", F.array().cast("array<string>")).alias("relation_ids"),
-        )
-    )
-
     return GraphTables(
-        entities=entities,
-        relations=relations,
-        passages=passages,
+        entities=entity_names,
+        relations=relations_core,
+        passages=docs.select(F.col("doc_id").alias("id"), "text"),
         entity_relation=entity_relation,
         relation_passage=relation_passage,
+        entity_passage=entity_passage,
+    )
+
+
+def adjacency_arrays(g: GraphTables) -> GraphTables:
+    """The reference's node-side adjacency arrays (rag.py:320-352) as a
+    view over the edge tables: ``entities`` gain ``passage_ids`` and
+    ``relation_ids``, ``relations`` gain ``passage_ids``, ``passages`` gain
+    ``entity_ids`` and ``relation_ids``.  Each array is sorted, and a node
+    without edges gets an EMPTY array, not NULL — the reference always
+    stores lists (rag.py:347-352).  The edge tables pass through."""
+
+    def with_arrays(nodes: DataFrame, *arrays) -> DataFrame:
+        out = nodes
+        for name, edges, key, member in arrays:
+            out = out.join(
+                edges.groupBy(F.col(key).alias("id")).agg(
+                    F.sort_array(F.collect_set(member)).alias(name)
+                ),
+                "id",
+                "left",
+            )
+        return out.select(
+            *nodes.columns,
+            *(
+                F.coalesce(name, F.array().cast("array<string>")).alias(name)
+                for name, *_ in arrays
+            ),
+        )
+
+    return dataclasses.replace(
+        g,
+        entities=with_arrays(
+            g.entities,
+            ("passage_ids", g.entity_passage, "entity_id", "passage_id"),
+            ("relation_ids", g.entity_relation, "entity_id", "relation_id"),
+        ),
+        relations=with_arrays(
+            g.relations,
+            ("passage_ids", g.relation_passage, "relation_id", "passage_id"),
+        ),
+        passages=with_arrays(
+            g.passages,
+            ("entity_ids", g.entity_passage, "passage_id", "entity_id"),
+            ("relation_ids", g.relation_passage, "passage_id", "relation_id"),
+        ),
     )

@@ -347,6 +347,7 @@ FROM rels r
     description="cascade passage delete: strip refs, keep nodes (graph.py:634-672)",
 )
 def crud_cascade_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from vector_graph_rag_spark.graph.builder import adjacency_arrays
     from vector_graph_rag_spark.graph.crud import delete_passages
 
     g = _graph(spark, sf_dir)
@@ -354,11 +355,11 @@ def crud_cascade_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     doomed = docs.filter(F.col("source") == "src0").select(
         F.col("doc_id").cast("string").alias("passage_id")
     )
-    g2 = delete_passages(g, doomed)
+    g2 = adjacency_arrays(delete_passages(g, doomed))
     return g2.relations.select(
-        "id",
-        F.size(F.coalesce("passage_ids", F.array())).cast("bigint").alias("n_passages"),
-    ).withColumnRenamed("id", "relation_id")
+        F.col("id").alias("relation_id"),
+        F.size("passage_ids").cast("bigint").alias("n_passages"),
+    )
 
 
 # --- degree-2 expansion (proves the driver loop generalizes) ----------------

@@ -12,7 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from vector_graph_rag_spark.graph.builder import build_graph, synthetic_triplet_docs
+from vector_graph_rag_spark.graph.builder import (
+    adjacency_arrays,
+    build_graph,
+    synthetic_triplet_docs,
+)
 from vector_graph_rag_spark.graph.expand import expand_subgraph
 from vector_graph_rag_spark.queries import register
 from vector_graph_rag_spark.queries.sql_common import TRIPS_CTE, norm_sql
@@ -28,7 +32,9 @@ _SEED_SQL_LIST = ", ".join(
 
 # Bump when builder/derivation semantics change — invalidates materialized
 # graph caches.
-_GRAPH_SCHEMA_VERSION = "v2"  # v2: triplet-less passages get empty (not NULL) adjacency arrays
+# v2: triplet-less passages get empty (not NULL) adjacency arrays;
+# v3: adjacency stored once, as edge tables (entity_passage added).
+_GRAPH_SCHEMA_VERSION = "v3"
 
 
 def _graph(spark: SparkSession, sf_dir: str):
@@ -90,12 +96,12 @@ FROM firsts f WHERE f.rn = 1
 
 @register("graph_build_entities", oracle=_ENTITIES_SQL, description="entity dedup + adjacency counts (builder.py:76-95)")
 def graph_build_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _graph(spark, sf_dir)
+    g = adjacency_arrays(_graph(spark, sf_dir))
     return g.entities.select(
         "id",
         "name",
-        F.size(F.coalesce("passage_ids", F.array())).cast("bigint").alias("n_passages"),
-        F.size(F.coalesce("relation_ids", F.array())).cast("bigint").alias("n_relations"),
+        F.size("passage_ids").cast("bigint").alias("n_passages"),
+        F.size("relation_ids").cast("bigint").alias("n_relations"),
     )
 
 
@@ -117,7 +123,7 @@ FROM firsts f WHERE f.rn = 1
 
 @register("graph_build_relations", oracle=_RELATIONS_SQL, description="relation dedup + first-seen S/P/O (builder.py:97-134)")
 def graph_build_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _graph(spark, sf_dir)
+    g = adjacency_arrays(_graph(spark, sf_dir))
     return g.relations.select(
         "id",
         "text",
@@ -126,7 +132,7 @@ def graph_build_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "object",
         "src_entity_id",
         "dst_entity_id",
-        F.size(F.coalesce("passage_ids", F.array())).cast("bigint").alias("n_passages"),
+        F.size("passage_ids").cast("bigint").alias("n_passages"),
     )
 
 
@@ -150,11 +156,11 @@ FROM docs d
 
 @register("graph_build_passages", oracle=_PASSAGES_SQL, description="passage adjacency arrays (rag.py:347-352)")
 def graph_build_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _graph(spark, sf_dir)
+    g = adjacency_arrays(_graph(spark, sf_dir))
     return g.passages.select(
         "id",
-        F.array_join(F.coalesce("entity_ids", F.array()), ",").alias("entity_ids_csv"),
-        F.array_join(F.coalesce("relation_ids", F.array()), ",").alias("relation_ids_csv"),
+        F.array_join("entity_ids", ",").alias("entity_ids_csv"),
+        F.array_join("relation_ids", ",").alias("relation_ids_csv"),
     )
 
 

@@ -1,9 +1,9 @@
-"""Graph catalog: one directory per graph, five parquet tables each.
+"""Graph catalog: one directory per graph, six parquet tables each.
 
 Mirrors the reference's collection_prefix multi-tenancy
 (/root/reference/src/vector_graph_rag/storage/milvus.py:66-74): a "graph"
 named `g` is `{root}/g/{entities,relations,passages,entity_relation,
-relation_passage}.parquet`.  Catalog ops map 1:1:
+relation_passage,entity_passage}.parquet`.  Catalog ops map 1:1:
 
 - list_graphs  ← MilvusStore.list_graphs suffix-matching (milvus.py:847-924)
 - delete_graph ← drop of the 3 collections (milvus.py:926-978)
@@ -11,11 +11,12 @@ relation_passage}.parquet`.  Catalog ops map 1:1:
   reference's add_documents is full-rebuild overwrite (rag.py:354-356),
   which is exactly `mode("overwrite")`.
 
-Schemas.  The five tables have fixed columns, declared once in
-``GRAPH_SCHEMAS``.  ``read_graph`` passes them to the reader, so a read
-runs no schema-inference job (one per table otherwise), and
-``write_graph`` refuses a table whose names, order or types differ, so
-the declaration cannot drift from what is on disk.
+Schemas.  The six tables have fixed columns, declared once in
+``GRAPH_SCHEMAS``; no column is an array (adjacency lives in the edge
+tables, see ``graph/builder``).  ``read_graph`` passes them to the
+reader, so a read runs no schema-inference job (one per table
+otherwise), and ``write_graph`` refuses a table whose names, order or
+types differ, so the declaration cannot drift from what is on disk.
 
 Swaps.  ``replace_graph`` is the one way a live graph changes: the new
 graph is written to ``<name>__staging``, the live directory is renamed
@@ -36,12 +37,14 @@ co-locate (and downstream readers can bucket on id).
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import threading
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from vector_graph_rag_spark.graph.builder import GraphTables
@@ -49,14 +52,15 @@ from vector_graph_rag_spark.graph.builder import GraphTables
 # Column order is the order ``graph/builder.build_graph`` emits and every
 # writer keeps (``graph/crud`` preserves its inputs' order).
 GRAPH_SCHEMAS = {
-    "entities": "id string, name string, passage_ids array<string>, relation_ids array<string>",
+    "entities": "id string, name string",
     "relations": (
         "id string, text string, subject string, predicate string, object string, "
-        "src_entity_id string, dst_entity_id string, passage_ids array<string>"
+        "src_entity_id string, dst_entity_id string"
     ),
-    "passages": "id string, text string, entity_ids array<string>, relation_ids array<string>",
+    "passages": "id string, text string",
     "entity_relation": "entity_id string, relation_id string",
     "relation_passage": "relation_id string, passage_id string",
+    "entity_passage": "entity_id string, passage_id string",
 }
 TABLE_NAMES = list(GRAPH_SCHEMAS)
 
@@ -67,6 +71,7 @@ PARTITION_KEYS = {
     "passages": "id",
     "entity_relation": "entity_id",
     "relation_passage": "relation_id",
+    "entity_passage": "entity_id",
 }
 
 STAGING = "__staging"
@@ -154,7 +159,7 @@ class GraphCatalog:
         return True
 
     def write_graph(self, name: str, tables: GraphTables, partitions: int | None = None) -> None:
-        """Overwrite-write all five tables in place (add_documents
+        """Overwrite-write all six tables in place (add_documents
         semantics, rag.py:354-356).  With ``partitions``, each table is
         repartitioned by its ``PARTITION_KEYS`` column.  Raises
         ``ValueError`` before writing anything if a table's columns differ
@@ -234,10 +239,13 @@ class GraphCatalog:
         )
 
     def graph_stats(self, spark: SparkSession, name: str) -> dict:
-        """Row counts per table (get_collection_stats, milvus.py:980-1014)."""
+        """Row counts of the node tables (get_collection_stats,
+        milvus.py:980-1014), counted in one query."""
         g = self.read_graph(spark, name)
-        return {
-            "entities": g.entities.count(),
-            "relations": g.relations.count(),
-            "passages": g.passages.count(),
-        }
+        counted = ("entities", "relations", "passages")
+        tagged = functools.reduce(
+            DataFrame.unionByName,
+            (getattr(g, t).select(F.lit(t).alias("table")) for t in counted),
+        )
+        rows = tagged.groupBy("table").count().collect()
+        return {t: 0 for t in counted} | {r["table"]: r["count"] for r in rows}
