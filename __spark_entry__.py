@@ -50,60 +50,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # row are always windowed, and the remaining slots go to the queries whose
 # last green row is oldest.  Each round therefore automatically rotates
 # verification onto the least-recently-checked queries, and the union of any
-# two consecutive rounds covers the full registry.  ``_STATIC_PRIORITY`` is
-# the round-4 hand-picked set, kept as the fallback if the history files are
-# absent or unreadable.  See COVERAGE.md §"driver window".
+# two consecutive rounds covers the full registry.  With no readable history
+# every query is never-green, so the window is the first 50 names by sort
+# order.  See COVERAGE.md §"driver window".
 _WINDOW_SIZE = 50
-
-_STATIC_PRIORITY = frozenset(
-    {
-        "minhash_lsh_pairs",
-        "minhash_lsh_pairs_capped",
-        "minhash_signatures",
-        "mock_embed_documents",
-        "multimodal_binary_profile",
-        "multimodal_decode_features",
-        "naive_rag_topk",
-        "nation_balance_full_outer",
-        "nation_setops",
-        "neardup_clusters",
-        "ner_cache_lookup",
-        "ngram_jaccard_pairs",
-        "orders_by_month",
-        "orders_grouping_sets",
-        "orders_moving_avg",
-        "passage_fanout_dedup",
-        "pricing_summary",
-        "quality_score",
-        "quantized_cosine_topk",
-        "recall_at_k",
-        "rerank_line_repair",
-        "returnflag_pivot",
-        "salted_token_counts",
-        "sessionize_events",
-        "shipping_priority",
-        "simhash_signatures",
-        "similarity_threshold_filter",
-        "stratified_sample_per_source",
-        "stream_dedup_users",
-        "stream_interval_join_15m",
-        "stream_session_window_30m",
-        "stream_sliding_15m",
-        "stream_tumbling_30m",
-        "subgraph_expand_d1",
-        "subgraph_expand_d2",
-        "subgraph_expand_passages",
-        "tfdf_top_terms",
-        "token_profile",
-        "topk_orders_per_customer",
-        "train_test_split_hash",
-        "winnow_fingerprints",
-        # new this round — never driver-checked, so window them immediately
-        "entity_ppr_seeds_k8",
-        "dedup_incremental",
-        "corpus_curation_funnel",
-    }
-)
 
 
 def _green_history(repo_dir: str) -> dict[str, int]:
@@ -151,16 +101,10 @@ def _select_window(names, history: dict[str, int]) -> frozenset:
 
 
 def _window_priority() -> frozenset:
-    try:
-        from vector_graph_rag_spark.queries import load_all
+    from vector_graph_rag_spark.queries import load_all
 
-        names = set(load_all())
-        hist = _green_history(os.path.dirname(os.path.abspath(__file__)))
-        if not hist:  # no history committed yet — use the hand-picked set
-            return _STATIC_PRIORITY
-        return _select_window(names, hist)
-    except Exception:
-        return _STATIC_PRIORITY
+    hist = _green_history(os.path.dirname(os.path.abspath(__file__)))
+    return _select_window(load_all(), hist)
 
 
 def _driver_keys() -> dict[str, str]:

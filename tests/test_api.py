@@ -155,6 +155,28 @@ def test_delete_graph(client):
     assert client.delete("/graph/g2").status_code == 404
 
 
+def test_graph_missing_a_table_is_409(spark, tmp_path):
+    """A five-table graph (written before ``entity_passage`` was stored)
+    answers 409 with the way out, not a 500 from the parquet reader."""
+    import shutil
+
+    from vector_graph_rag_spark.api import create_app
+
+    app = create_app(spark, catalog_root=str(tmp_path))
+    app.config["TESTING"] = True
+    c = app.test_client()
+    r = c.post("/add_documents", json={"graph_name": "old", "documents": DOCS[:1]})
+    assert r.status_code == 200
+    shutil.rmtree(tmp_path / "old" / "entity_passage.parquet")
+    r = c.post(
+        "/query",
+        json={"graph_name": "old", "seed_entities": ["beta"], "top_k": 3, "degree": 1},
+    )
+    assert r.status_code == 409
+    err = r.get_json()["error"]
+    assert "entity_passage" in err and "delete and re-add the graph" in err
+
+
 def test_import_route(client, tmp_path_factory):
     d = tmp_path_factory.mktemp("import_files")
     (d / "a.txt").write_text("red owns blue blue feeds green green likes gray tail tokens")

@@ -15,7 +15,7 @@ def _bench_source() -> str:
         return f.read()
 
 
-def test_headline_names_all_registered():
+def _bench_module():
     import importlib.util
     import sys
 
@@ -25,12 +25,28 @@ def test_headline_names_all_registered():
     mod = importlib.util.module_from_spec(spec)
     sys.modules["bench"] = mod
     spec.loader.exec_module(mod)
+    return mod
+
+
+def test_headline_names_all_registered():
     from vector_graph_rag_spark.queries import load_all
 
+    mod = _bench_module()
     registry = load_all(include_retired=True)
     missing = [n for n in mod.HEADLINE if n not in registry]
     assert not missing, missing
     assert len(mod.HEADLINE) == len(set(mod.HEADLINE))  # no double-timing
+
+
+def test_every_retired_query_is_benched():
+    """A retired query is off the driver surface; the headline is the only
+    thing left that runs it.  One that no headline row times is dead code
+    with an oracle and a parity run attached: delete it instead."""
+    from vector_graph_rag_spark.queries import RETIRED, load_all
+
+    load_all(include_retired=True)
+    unbenched = sorted(set(RETIRED) - set(_bench_module().HEADLINE))
+    assert not unbenched, unbenched
 
 
 def test_bench_defaults_to_noop_materialization():

@@ -28,6 +28,7 @@ from vector_graph_rag_spark.sources.catalog import (
     GRAPH_SCHEMAS,
     TABLE_NAMES,
     GraphCatalog,
+    GraphFormatError,
     GraphNameError,
 )
 
@@ -194,6 +195,19 @@ def test_reserved_graph_names_are_refused_and_never_touched(spark, tmp_path):
     assert sorted(os.listdir(cat.root)) == ["g"]
     assert cat.list_graphs() == [{"name": "g", "has_all_tables": True}]
     assert _state(spark, cat, "g") == before
+
+
+def test_read_graph_names_the_tables_a_graph_lacks(spark, tmp_path):
+    """A graph written before ``entity_passage`` was stored has five
+    tables.  The catalog still lists it, but reading it raises an error
+    that names the missing table instead of Spark's PATH_NOT_FOUND."""
+    cat = GraphCatalog(str(tmp_path / "root"))
+    cat.replace_graph("old", build_graph(_docs(spark, BEFORE)))
+    shutil.rmtree(os.path.join(cat.root, "old", "entity_passage.parquet"))
+    assert cat.exists("old")
+    assert cat.list_graphs() == [{"name": "old", "has_all_tables": False}]
+    with pytest.raises(GraphFormatError, match=r"\['entity_passage'\].*delete and re-add"):
+        cat.read_graph(spark, "old")
 
 
 def test_reader_recovery_waits_for_a_swap_in_flight(spark, tmp_path, monkeypatch):

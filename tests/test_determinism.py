@@ -21,10 +21,10 @@ REPARTITION_CHECKED = [
     "hybrid_rrf_topk",          # rank fusion across two lists
     "entity_pagerank_k3",       # iterative decimal-exact propagation
     "minhash_lsh_pairs",        # hash joins + est fraction
-    "orders_moving_avg",        # window frame over decimal sums
+    "topk_orders_per_customer",  # partitioned rank window over orders
     "entity_ppr_seeds_k8",      # deep iteration + eager localCheckpoint
     "ngram_jaccard_pairs",      # intra-bucket pair explosion + top-100
-    "customer_balance_quartiles",  # unrounded cume_dist (exact IEEE ratio)
+    "events_value_percentiles",  # exact interpolated percentiles
     "sequence_packing",         # per-shard sequential fold (partition-order risk)
     "kmeans_embedding_clusters",  # iterative centroid update (sum-order risk)
     "repetition_quality_filters",  # ratio thresholds on float divisions

@@ -76,7 +76,7 @@ def test_live_window_covers_all_non_green_from_committed_history():
 
     repo = os.path.dirname(os.path.abspath(entry.__file__))
     hist = entry._green_history(repo)
-    if not hist:  # fresh checkout without history — static fallback applies
+    if not hist:  # fresh checkout without history — covered below
         return
     from vector_graph_rag_spark.queries import load_all
 
@@ -89,6 +89,18 @@ def test_live_window_covers_all_non_green_from_committed_history():
         # union of last committed round's greens and this window = registry
         last_green = {n for n in names if hist.get(n) == latest}
         assert last_green | win >= names
+
+
+def test_window_without_history_is_first_50_registered(tmp_path, monkeypatch):
+    """A checkout with no CORRECTNESS_r*.json has no green history: every
+    query is never-green, so the window is the first 50 registered names."""
+    from vector_graph_rag_spark.queries import load_all
+
+    monkeypatch.setattr(entry, "__file__", str(tmp_path / "__spark_entry__.py"))
+    win = entry._window_priority()
+    names = sorted(load_all())
+    assert len(win) == entry._WINDOW_SIZE == 50
+    assert win == set(names[:50])
 
 
 def test_registered_names_never_use_reserved_prefix():

@@ -365,10 +365,11 @@ def test_ivf_index_partition_pruning(spark, tmp_path):
     )
     result = ivf_search(spark, path, queries, cent, k=10, nprobe=2)
 
-    # Matches the in-query IVF declared query (same centroids/probes/k).
-    from vector_graph_rag_spark.queries.extended import ann_ivf_topk
+    # Matches the logical IVF in DuckDB (same centroids/probes/k).
+    from vector_graph_rag_spark.queries.extended import _IVF_SQL
+    from vector_graph_rag_spark.testing import duck_connection
 
-    expected = sorted(map(tuple, ann_ivf_topk(spark, SF_SMOKE).collect()))
+    expected = sorted(duck_connection(SF_SMOKE).execute(_IVF_SQL).fetchall())
     assert sorted(map(tuple, result.collect())) == expected
 
     # The scan is partition-pruned: the probe filter reaches the file index

@@ -26,36 +26,21 @@ AUDITED = [
     "neardup_clusters",
     "knn_cosine_topk",
     "ann_lsh_topk",
-    "ann_ivf_topk",
     "graph_build_entities",
-    "entity_point_lookup",
     "entity_pagerank_k3",
     "entity_triangle_count",
-    "events_asof_last_purchase",
     "events_range_join_15m",
-    "train_test_split_hash",
-    "stratified_sample_per_source",
     "sessionize_events",
     "events_value_percentiles",
     "bm25_keyword_topk",
     "hybrid_rrf_topk",
-    "quantized_cosine_topk",
-    "ann_recall_eval",
-    "customer_balance_quartiles",
-    "orders_moving_avg",
-    "hamming_binary_topk",
     "orders_grouping_sets",
-    "minhash_estimate_quality",
     "entity_2hop_paths_beam",
     "nation_balance_full_outer",
-    "embedding_neardup_pairs",
     "ngram_jaccard_pairs",
-    "eviction_topk_branch",
-    "minhash_lsh_pairs_capped",
     "dedup_incremental",
     "corpus_curation_funnel",
     "entity_neighbor_jaccard",
-    "filtered_vector_search",
     # round-5 curation family (kmeans_embedding_clusters is eager — driver
     # centroid loop — and audited via its assignment stage below)
     "contamination_ngram_overlap",
@@ -73,7 +58,6 @@ AUDITED = [
     "lm_cross_entropy",
     "perplexity_buckets",
     "dsir_importance_weights",
-    "dsir_select",
     "remove_shared_spans",
     "snapshot_diff",
     # round-10 staged candidates (the PQ/mix/IVF-index ones are eager —
@@ -136,22 +120,20 @@ AUDITED = [
     "embedding_drift_registers",
     "ann_index_tombstone_delete",
     "colbert_maxsim_topk",
-    # r16-staged (round-18 swap): bounded-pool MaxSim (broadcast pool +
-    # broadcast query tokens), term tombstone anti-join, spend+readd fold
-    "maxsim_prefiltered_topk",
-    "term_index_tombstone_delete",
-    "ann_index_spend_readd",
-    "prf_query_expansion",
 ]
+
+
+def _explain(df) -> str:
+    jvm = df.sparkSession._jvm
+    return df._jdf.queryExecution().explainString(
+        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
 
 
 def _plan(spark, name: str) -> str:
     from vector_graph_rag_spark.queries import load_all
 
-    df = load_all(include_retired=True)[name].fn(spark, SF_SMOKE)
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    return _explain(load_all(include_retired=True)[name].fn(spark, SF_SMOKE))
 
 
 @pytest.mark.parametrize("name", AUDITED)
@@ -164,14 +146,44 @@ def test_no_rowwise_python_and_no_cartesian(spark, name):
 
 
 def test_eviction_big_branch_is_take_ordered(spark):
-    """The eviction branch fires when candidates EXCEED the threshold, so its
-    top-k must be TakeOrderedAndProject (per-partition local top-N), never a
-    global window sort of the full candidate set (retriever.py:267-285)."""
-    plan = _plan(spark, "eviction_topk_branch")
+    """apply_eviction's eviction branch fires when candidates EXCEED the
+    threshold, so its top-k must be TakeOrderedAndProject (per-partition
+    local top-N), never a global window sort of the full candidate set
+    (retriever.py:267-285).  The kept rows are the top-`threshold`
+    candidates by 6-rounded cosine, ties broken by id."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from vector_graph_rag_spark.operators.eviction import apply_eviction
+
+    # Values repeat every 15 ids, so every score is tied with another id and
+    # the odd threshold cuts through a tied pair; ids 30-39 repeat the top
+    # scores but are not candidates.
+    rows = [(f"r{i:02d}", [float(i % 5), 1.0, float(i % 3) - 1.0]) for i in range(40)]
+    relations = spark.createDataFrame(rows, "id string, embedding array<double>")
+    candidates = relations.filter(F.col("id") < "r30").select(
+        F.col("id").alias("relation_id")
+    )
+    query = [1.0, 0.5, -0.25]
+    kept, stats = apply_eviction(candidates, relations, query, threshold=7)
+    assert stats == {"applied": True, "before": 30, "after": 7}
+
+    plan = _explain(kept)
     assert "TakeOrderedAndProject" in plan, "eviction top-k lost TakeOrderedAndProject"
     # The only Window allowed is the rank over the <=threshold survivors,
     # which must sit ABOVE the TakeOrderedAndProject in the plan tree.
     assert plan.index("Window") < plan.index("TakeOrderedAndProject")
+
+    def cos(a, b):
+        dot = sum(x * y for x, y in zip(a, b))
+        return dot / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b)))
+
+    scored = [(round(cos(v, query), 6), rid) for rid, v in rows if rid < "r30"]
+    expected = sorted(scored, key=lambda p: (-p[0], p[1]))[:7]
+    got = kept.orderBy("evict_order").collect()
+    assert [r["evict_order"] for r in got] == list(range(1, 8))
+    assert [(r["score"], r["relation_id"]) for r in got] == expected
 
 
 def test_dedup_incremental_hot_bucket_guard_broadcasts(spark):
@@ -224,9 +236,7 @@ def test_kmeans_assignment_stage_is_jvm_only(spark):
         F.transform("embedding", lambda x: F.round(x.cast("double") * 1000).cast("long")).alias("qv"),
     )
     df = _km_assign(q, [(0, [0] * _KM_DIM), (1, [1] * _KM_DIM)])
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    plan = _explain(df)
     for banned in ("BatchEvalPython", "ArrowEvalPython", "Exchange", "Join"):
         assert banned not in plan, f"k-means assignment grew a {banned}"
 
@@ -241,7 +251,20 @@ def test_column_pruning_reaches_scan(spark):
 def test_predicate_pushdown_reaches_scan(spark):
     # The as-of join filters event_type twice (clicks, purchases); both
     # predicates must reach the parquet scan.
-    plan = _plan(spark, "events_asof_last_purchase")
+    from pyspark.sql import functions as F
+
+    from vector_graph_rag_spark.operators.timeseries import asof_join
+    from vector_graph_rag_spark.sources.tables import load_table
+
+    e = load_table(spark, SF_SMOKE, "events")
+    clicks = e.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
+    purchases = e.filter(F.col("event_type") == "purchase").select(
+        "user_id", "ts", "event_id", "value"
+    )
+    df = asof_join(
+        clicks, purchases, on=["user_id"], right_vals=("value",), right_order="event_id"
+    )
+    plan = _explain(df)
     assert "EqualTo(event_type,click)" in plan
     assert "EqualTo(event_type,purchase)" in plan
 
@@ -303,9 +326,7 @@ def test_binary_auc_has_no_single_partition_stage(spark):
         "CAST(id % 97 AS DOUBLE) / 97 AS score",
         "id % 3 = 0 AS y",
     )
-    plan = binary_auc_counts(df, "score", "y", round_to=6)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    plan = _explain(binary_auc_counts(df, "score", "y", round_to=6))
     assert "SinglePartition" not in plan, f"AUC reintroduced a single-partition stage:\n{plan}"
     assert "Window" not in plan, f"AUC reintroduced a global window:\n{plan}"
     assert "HashAggregate" in plan  # the map-side-combined groupBy(score)
@@ -327,9 +348,7 @@ def test_perplexity_buckets_has_no_single_partition_stage(spark):
         "CAST(id % 41 AS DOUBLE) / 41 AS cross_entropy",
     )
     out = perplexity_buckets(df)
-    plan = out._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    plan = _explain(out)
     assert "SinglePartition" not in plan, (
         f"perplexity_buckets reintroduced a single-partition stage:\n{plan}"
     )
@@ -343,12 +362,12 @@ def test_registered_dsir_keeps_broadcast_and_takeordered(spark):
     """The r6 registered DSIR variant (portable md5 hash + quantized sums)
     must keep the library plan shape: log-ratio table broadcast, selection
     as TakeOrderedAndProject."""
+    from vector_graph_rag_spark.operators.lm_filter import dsir_select
     from vector_graph_rag_spark.queries import load_all
 
-    reg = load_all()
-    w_plan = _plan(spark, "dsir_importance_weights")
-    assert "BroadcastHashJoin" in w_plan
-    sel_plan = _plan(spark, "dsir_select")
+    weights = load_all()["dsir_importance_weights"].fn(spark, SF_SMOKE)
+    assert "BroadcastHashJoin" in _explain(weights)
+    sel_plan = _explain(dsir_select(weights, 50))
     assert "TakeOrderedAndProject" in sel_plan, "dsir_select lost its local top-n plan"
 
 

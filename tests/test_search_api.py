@@ -329,113 +329,3 @@ def test_colbert_maxsim_self_retrieval_and_twin(spark):
         assert abs(top["maxsim"] - self_score) < 1e-9, (
             f"query {qid}: top is below the self score"
         )
-
-
-def test_maxsim_prefiltered_consistency_and_recall(spark):
-    """The two-stage recipe (r15 verdict, Next #4) pinned three ways:
-    (1) SCORE CONSISTENCY — every (query, doc) the prefiltered top-k
-    emits carries exactly the maxsim the exhaustive kernel assigns that
-    doc (the prefilter changes WHICH docs are scored, never a score);
-    (2) SELF-RETRIEVAL — the query's own document survives the cell
-    prefilter (identical tokens → identical vectors → identical cells)
-    and scores at the per-query maximum; (3) RECALL vs the full kernel,
-    measured and floored — the PLAID-style cell prune trades tail recall
-    for a candidate-bounded rerank, it must not lose the head (measured
-    1.0 at sf0.001 AND sf0.01 at staging time: token overlap — what
-    MaxSim ranks by — survives cell collision; the 0.8 floor leaves room
-    for corpus drift, not for a lost head)."""
-    from tests.conftest import SF_SMOKE
-
-    from vector_graph_rag_spark.queries import load_all
-
-    reg = load_all(include_retired=True)
-    full = {
-        (r["query_id"], r["doc_id"]): (r["maxsim"], r["rank"])
-        for r in reg["colbert_maxsim_topk"].fn(spark, SF_SMOKE).collect()
-    }
-    pre_rows = reg["maxsim_prefiltered_topk"].fn(spark, SF_SMOKE).collect()
-    assert pre_rows
-
-    by_q = {}
-    for r in pre_rows:
-        by_q.setdefault(r["query_id"], {})[r["doc_id"]] = r["maxsim"]
-    # (2) self-retrieval: self present and at the per-query max score
-    for qid, docs in by_q.items():
-        assert qid in docs, f"query {qid} lost its own doc to the prefilter"
-        assert docs[qid] == max(docs.values())
-    # (1) score consistency on the overlap
-    for (qid, did), (m, _rk) in full.items():
-        if did in by_q.get(qid, {}):
-            assert by_q[qid][did] == m, (qid, did)
-    # (3) recall@k floor vs the exhaustive kernel
-    hits = sum(1 for (qid, did) in full if did in by_q.get(qid, {}))
-    recall = hits / len(full)
-    assert recall >= 0.8, f"prefiltered recall {recall:.2f} collapsed"
-
-
-def test_prf_expansion_adds_new_terms_and_changes_ranking(spark):
-    """PRF semantics pinned beyond the oracle: (1) every expansion term is
-    genuinely NEW (absent from the original query's term set) and comes
-    from the feedback docs; (2) the expanded second pass actually moves
-    the ranking for at least one query (vocabulary-gap closure is the
-    whole point — if round 2 always equals round 1 the operator is a
-    no-op); (3) round-2 scores are >= the round-1 score for every doc
-    that appears in both (expansion only ADDS weighted terms)."""
-    from tests.conftest import SF_SMOKE
-
-    from vector_graph_rag_spark.queries import load_all
-    from vector_graph_rag_spark.queries.search_api import (
-        _PRF_FB_DOCS,
-        _PRF_FB_TERMS,
-    )
-    from vector_graph_rag_spark.functions.text import tokens as _tokens
-    from vector_graph_rag_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    reg = load_all(include_retired=True)
-    r2 = reg["prf_query_expansion"].fn(spark, SF_SMOKE).collect()
-    r1 = reg["sparse_dot_topk"].fn(spark, SF_SMOKE).collect()
-    assert r2 and r1
-
-    r1_by_q = {}
-    for r in r1:
-        r1_by_q.setdefault(r["query_id"], {})[r["doc_id"]] = r["score"]
-    r2_by_q = {}
-    for r in r2:
-        r2_by_q.setdefault(r["query_id"], {})[r["doc_id"]] = r["score"]
-    assert set(r2_by_q) == set(r1_by_q)
-
-    # (3) expansion only adds: common docs never lose score
-    for qid, docs in r2_by_q.items():
-        for did, s2 in docs.items():
-            s1 = r1_by_q[qid].get(did)
-            if s1 is not None:
-                assert s2 >= s1, (qid, did, s1, s2)
-    # (2) the ranking moved somewhere
-    assert any(r2_by_q[q] != r1_by_q[q] for q in r2_by_q)
-
-    # (1) replay the expansion mine in Python: terms are new and bounded
-    d = load_table(spark, SF_SMOKE, "documents")
-    tf_rows = (
-        d.select("doc_id", F.explode(_tokens("text")).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .collect()
-    )
-    tf = {}
-    for r in tf_rows:
-        tf.setdefault(r["doc_id"], {})[r["term"]] = r["w"]
-    for qid in r2_by_q:
-        qterms = set(tf[qid])
-        fb = sorted(
-            ((s, -did) for did, s in r1_by_q[qid].items()), reverse=True
-        )[:_PRF_FB_DOCS]
-        fb_docs = [-ndid for _s, ndid in fb]
-        cand: dict = {}
-        for did in fb_docs:
-            for t, w in tf[did].items():
-                if t not in qterms:
-                    cand[t] = cand.get(t, 0) + w
-        exp = sorted(cand.items(), key=lambda kv: (-kv[1], kv[0]))[:_PRF_FB_TERMS]
-        assert len(exp) <= _PRF_FB_TERMS
-        assert all(t not in qterms for t, _w in exp)

@@ -36,8 +36,6 @@ ALLOWED_DRIVER_MATERIALIZATION = {
     ("operators/bpe.py", "train_bpe", "collect"): "argmax pair (limit(1)) per merge + final vocab list (vocab-sized)",
     ("operators/ivf.py", "collect_centroids", "collect"): "the bounded centroid table (nlist rows by module contract; shared across an append loop's assign_cells calls)",
     ("operators/ivf.py", "ivf_search", "collect"): "|queries| x nprobe probe-cell ids",
-    ("queries/search_api.py", "maxsim_prefiltered_topk_q", "collect"): "<= |queries| x 3 distinct query-token cell ids driving partition pruning (ivf_search pattern)",
-    ("queries/search_api.py", "assign_token_cells", "collect"): "the bounded centroid table (ncent rows by module contract; the ivf.assign_cells pattern)",
     ("operators/lm_filter.py", "binary_auc_with_counts", "collect"): "distinct-score histogram, bounded by round_to quantization",
     ("operators/lm_filter.py", "dsir_importance_weights", "collect"): "2 scalar totals",
     ("operators/lm_filter.py", "perplexity_buckets", "collect"): "rounded-score histogram, bounded by round_to quantization",

@@ -112,14 +112,6 @@ QUERIES = [
     "embedding_drift_registers",
     "ann_index_tombstone_delete",
     "colbert_maxsim_topk",
-    # round-18 staged candidates (r16 staging, pre-registration smokes):
-    # prefiltered MaxSim bounds stage 2 to |q| x C candidates (the full
-    # kernel is corpus-linear); term tombstones add one anti-join to the
-    # posting scan; spend+readd is the compaction I/O plus one batch
-    "maxsim_prefiltered_topk",
-    "term_index_tombstone_delete",
-    "ann_index_spend_readd",
-    "prf_query_expansion",
 ]
 
 DOC_STRIDE = 1_000_000

@@ -65,7 +65,11 @@ from vector_graph_rag_spark.graph.retrieve import (
     retrieve_passages,
     seed_frontier_from_names,
 )
-from vector_graph_rag_spark.sources.catalog import GraphCatalog, GraphNameError
+from vector_graph_rag_spark.sources.catalog import (
+    GraphCatalog,
+    GraphFormatError,
+    GraphNameError,
+)
 
 _TRIPLET_SCHEMA = (
     "doc_id string, text string, "
@@ -132,6 +136,10 @@ def create_app(
     @app.errorhandler(GraphNameError)
     def _bad_graph_name(e: GraphNameError):
         return jsonify({"error": str(e)}), 400
+
+    @app.errorhandler(GraphFormatError)
+    def _old_graph_format(e: GraphFormatError):
+        return jsonify({"error": str(e)}), 409
 
     # --- system ------------------------------------------------------------
 

@@ -1,8 +1,9 @@
 """IVF index as a partition-pruned parquet layout — the 100 TB ANN path.
 
-The in-query IVF variant (`queries/extended.py::ann_ivf_topk`) recomputes
-cell assignment per query batch; at corpus scale the assignment is an
-INDEX you build once and exploit at read time.  Here the index is simply
+The logical IVF (`queries/extended.py::_IVF_SQL`, the oracle of
+``ann_ivf_index_search``) recomputes cell assignment per query batch; at
+corpus scale the assignment is an INDEX you build once and exploit at read
+time.  Here the index is simply
 the corpus written ``partitionBy(cell_id)``: probing nprobe cells becomes
 a literal ``cell_id IN (...)`` filter that Catalyst turns into PARTITION
 PRUNING — the scan reads only the probed cells' files, so query cost is

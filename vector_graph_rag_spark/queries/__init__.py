@@ -28,18 +28,13 @@ class DeclaredQuery:
 
 REGISTRY: dict[str, DeclaredQuery] = {}
 
-# Queries NOT on the driver surface: rotated-out retirees AND queries
-# STAGED for a future swap (registered retired=True before activation so
-# the local oracle-parity suite hash-gates them every session — see
-# queries/pipeline.py §round-9 staged).  (Round-6 swap rationale: the
-# registry is frozen at exactly 100 = 2x the driver window so the two-round
-# rotation-union guarantee stays exact; registering the round-5 library
-# operators therefore retires an equal number of redundant near-sibling
-# queries).  Retired queries keep their implementation, their DuckDB oracle,
-# and their local oracle-parity test (tests/test_oracle_parity.py runs over
-# ``load_all(include_retired=True)``) — only the driver's hash gate moved to
-# the surviving sibling.  COVERAGE.md §"retired queries" maps each retiree
-# to its survivor.
+# Queries off the driver surface that bench.py still times: every RETIRED
+# name is a ``bench.HEADLINE`` row (tests/test_bench_contract.py pins
+# this).  They keep their DuckDB oracle and their local parity test
+# (tests/test_oracle_parity.py runs over ``load_all(include_retired=True)``).
+# A query that leaves the driver surface and the headline is deleted, not
+# retired.  COVERAGE.md §"retired queries" maps each retiree to the
+# registered query that covers it.
 RETIRED: dict[str, DeclaredQuery] = {}
 
 

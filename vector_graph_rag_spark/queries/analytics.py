@@ -1,9 +1,9 @@
 """Graph analytics + pipeline operators beyond point retrieval.
 
-- Connected components (bounded min-label propagation) and degree
-  histograms over the derived knowledge graph: the "graph reasoning at
-  scale" surface (BASELINE.json north star).  PySpark has no GraphX
-  binding and GraphFrames isn't available, so components are the standard
+- Connected components (bounded min-label propagation) over the derived
+  knowledge graph: the "graph reasoning at scale" surface (BASELINE.json
+  north star).  PySpark has no GraphX binding and GraphFrames isn't
+  available, so components are the standard
   iterative min-label-propagation expressed as DataFrame joins — the same
   algorithm GraphX's `connectedComponents` runs, and the one that scales:
   each round is one shuffle-on-entity-id join + partial-aggregated min.
@@ -12,12 +12,9 @@
   loops to fixpoint with per-round checkpoint to cut lineage.
 - Rerank line repair (reference reranker.py:81-92 `_correct_line`): LLM
   output ids are repaired by exact text match, hallucinations dropped.
-- Salted two-phase aggregation: skew-mitigation pattern whose result is
-  byte-identical to the plain groupBy — the oracle IS the unsalted SQL.
 - Multimodal binary profile: text→binary payload with typed metadata
   (byte length, sha256, block count) — the opaque-binary-column plumbing
   for image/audio payloads (decode kernels live in operators/multimodal).
-- File-type router (reference loaders/__init__.py:52-143 dispatch).
 """
 
 from __future__ import annotations
@@ -88,31 +85,6 @@ def entity_components_k4(spark: SparkSession, sf_dir: str) -> DataFrame:
     return min_label_propagation(
         g.entities.select("id"), undirect(directed), rounds=4
     )
-
-
-# --- degree histogram -------------------------------------------------------
-
-_DEGREE_SQL = f"""
-WITH {TRIPS_CTE},
-deg AS (
-  SELECT entity_id, COUNT(*) AS degree FROM entity_relation GROUP BY entity_id
-)
-SELECT degree, COUNT(*) AS n_entities FROM deg GROUP BY degree
-"""
-
-
-@register(
-    "entity_degree_histogram",
-    oracle=_DEGREE_SQL,
-    description="entity degree distribution over the entity-relation edge table",
-    retired=True,  # r9 swap: frequency-count coverage driver-gated via cm_frequency_registers; degree coverage via graph_stats/pagerank/triangle_count; r7-green
-)
-def entity_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_graph_rag_spark.queries.graphrag import _graph
-
-    g = _graph(spark, sf_dir)
-    deg = g.entity_relation.groupBy("entity_id").agg(F.count(F.lit(1)).alias("degree"))
-    return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_entities"))
 
 
 # --- rerank line repair (#35: reranker.py:81-92 _correct_line) --------------
@@ -204,40 +176,6 @@ def rerank_line_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("resolved_id").isNotNull())
     )
-
-
-# --- salted two-phase aggregation (skew mitigation, result-identical) -------
-
-_SALTED_SQL = """
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-)
-SELECT tok, COUNT(*) AS n
-FROM toks WHERE tok <> ''
-GROUP BY tok
-"""
-
-
-@register(
-    "salted_token_counts",
-    oracle=_SALTED_SQL,
-    description="two-phase salted aggregation (salt=8 on doc_id) — skew-proof token counts, byte-identical to plain groupBy",
-    retired=True,  # r6 swap: token-count semantics driver-gated via token_profile; salting pattern stays plan-tested
-)
-def salted_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_graph_rag_spark.functions.text import tokens
-
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(tokens("text")).alias("tok"))
-    # Phase 1: pre-aggregate on (tok, salt) so no single reducer sees a hot
-    # token's full row set; phase 2 merges the ≤8 partials per token.  At
-    # 100 TB a handful of stop-words would otherwise pin one task per word.
-    phase1 = (
-        toks.withColumn("salt", (F.col("doc_id") % 8).cast("int"))
-        .groupBy("tok", "salt")
-        .agg(F.count(F.lit(1)).alias("partial"))
-    )
-    return phase1.groupBy("tok").agg(F.sum("partial").alias("n"))
 
 
 # --- multimodal binary payload profile --------------------------------------
@@ -454,53 +392,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- file-type router (#7: loaders/__init__.py:52-143) ----------------------
-
-_EXTS = ["pdf", "docx", "doc", "txt", "md", "html", "htm", "csv", "bin"]
-_EXT_SQL_LIST = ", ".join(f"'{e}'" for e in _EXTS)
-
-_ROUTER_SQL = f"""
-WITH files AS (
-  SELECT doc_id, source || '/' || doc_id || '.' ||
-         ([{_EXT_SQL_LIST}])[CAST(doc_id % 9 AS INT) + 1] AS path,
-         ([{_EXT_SQL_LIST}])[CAST(doc_id % 9 AS INT) + 1] AS ext
-  FROM documents
-),
-routed AS (
-  SELECT ext,
-         CASE WHEN ext IN ('pdf', 'docx', 'doc') THEN 'converter'
-              WHEN ext IN ('txt', 'md') THEN 'text'
-              WHEN ext IN ('html', 'htm') THEN 'html'
-              ELSE 'unsupported' END AS handler
-  FROM files
-)
-SELECT handler, ext, COUNT(*) AS n_files
-FROM routed GROUP BY handler, ext
-"""
-
-
-@register(
-    "file_type_router",
-    oracle=_ROUTER_SQL,
-    retired=True,  # r15 swap: metadata-dispatch contract driver-gated via multimodal_frame_sample; CASE dispatch stays unit-pinned (test_route_files_dispatch incl. doc_legacy); r13-green
-    description="extension-dispatch routing over a file listing (loaders/__init__.py:52-143)",
-)
-def file_type_router(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    ext = F.element_at(
-        F.array(*[F.lit(e) for e in _EXTS]), (F.col("doc_id") % 9).cast("int") + 1
-    )
-    routed = d.select(
-        ext.alias("ext"),
-        F.when(ext.isin("pdf", "docx", "doc"), F.lit("converter"))
-        .when(ext.isin("txt", "md"), F.lit("text"))
-        .when(ext.isin("html", "htm"), F.lit("html"))
-        .otherwise(F.lit("unsupported"))
-        .alias("handler"),
-    )
-    return routed.groupBy("handler", "ext").agg(F.count(F.lit(1)).alias("n_files"))
-
-
 # --- PageRank: 3 fixed power iterations over the entity graph ---------------
 #
 # The HippoRAG lineage of the reference makes PageRank the canonical graph-
@@ -698,49 +589,6 @@ def entity_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy(F.desc("jaccard"), F.asc("ent_a"), F.asc("ent_b"))
     return top.withColumn("rk", F.row_number().over(w)).select(
         "ent_a", "ent_b", "jaccard", "rk"
-    )
-
-
-# --- multimodal decode via mapInPandas, oracle-checked -----------------------
-#
-# The only Arrow/Python operator under the hash gate: synthetic assets
-# (content = UTF-8 text bytes) run through the real mapInPandas decode
-# contract with the deterministic fake kernel; the oracle recomputes
-# n_bytes/md5/feature with pure SQL byte arithmetic.  This pins the Arrow
-# batch round-trip (binary columns included), not just the JVM plan.
-
-_DECODE_SQL = """
-SELECT 'asset_' || CAST(doc_id AS VARCHAR) AS asset_id,
-       ['image','audio','video'][CAST(doc_id % 3 AS INT) + 1] AS modality,
-       octet_length(encode(text)) AS n_bytes,
-       md5(text) AS checksum,
-       round(list_sum(list_transform(string_split(text, '')[1:64], x -> unicode(x)))
-             / (255.0 * LEAST(octet_length(encode(text)), 64)), 6) AS feature
-FROM documents
-"""
-
-
-@register(
-    "multimodal_decode_features",
-    oracle=_DECODE_SQL,
-    retired=True,  # r16 swap: real-codec sibling multimodal_codec_features activates (strict extension of this fake-kernel contract — same mapInPandas/Arrow binary round trip); Arrow-contract semantics stay unit-pinned in tests/test_operators.py multimodal battery; r14-green
-    description="mapInPandas binary decode (fake kernel) under the hash gate — Arrow round-trip pinned",
-)
-def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_graph_rag_spark.operators.multimodal import (
-        decode_assets,
-        fake_kernel,
-        synthetic_assets,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    decoded = decode_assets(synthetic_assets(spark, docs), kernel=fake_kernel)
-    return decoded.select(
-        "asset_id",
-        "modality",
-        "n_bytes",
-        "checksum",
-        F.round("feature", 6).alias("feature"),
     )
 
 

@@ -1,6 +1,6 @@
 """Composite / remaining-operator queries: full retrieve pipeline with
-backfill, multi-query threshold dedup, eviction top-k branch, mock
-embedding, chunker (rows-only), CRUD cascade delete, degree-2 expansion.
+backfill, multi-query threshold dedup, mock embedding, chunker (rows-only),
+CRUD cascade delete, degree-2 expansion.
 """
 
 from __future__ import annotations
@@ -9,7 +9,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from vector_graph_rag_spark.functions.embedding import mock_embedding, mock_embedding_sql
-from vector_graph_rag_spark.functions.hashing import hash60, hash60_sql
 from vector_graph_rag_spark.functions.literals import inline_rows
 from vector_graph_rag_spark.functions.vector import cosine
 from vector_graph_rag_spark.operators.retrieval import retrieve_with_backfill
@@ -98,8 +97,8 @@ def graph_rag_retrieve_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     g = _graph(spark, sf_dir)
     # Pin the no-eviction branch (the graph here has no relation embeddings;
-    # the eviction branch is oracle-checked separately by
-    # eviction_topk_branch).
+    # the eviction branch, operators/eviction.apply_eviction, is value-checked
+    # in tests/test_plans.py).
     cfg = EngineConfig(relation_number_threshold=10**9)
     return retrieve_with_backfill(
         g, _seed_entities(spark), cfg=cfg, top_k=10, num_select=5
@@ -146,59 +145,6 @@ def hits_first_seen_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return deduped.select(
         "vec_id", F.col("query_id").alias("first_query_id"), "score", "rank"
-    )
-
-
-# --- eviction top-k branch: filtered search within candidates (retriever.py:267-285)
-
-_EVICT_TOPK_SQL = f"""
-WITH {TRIPS_CTE},
-rels AS (SELECT DISTINCT rel_id FROM trips),
-rel_emb AS (
-  SELECT r.rel_id, e.embedding::DOUBLE[] AS v
-  FROM rels r JOIN embeddings e ON e.vec_id = {hash60_sql('r.rel_id')} % 500
-),
-q AS (SELECT embedding::DOUBLE[] AS qvec FROM embeddings WHERE vec_id = 0),
-scored AS (
-  SELECT rel_emb.rel_id, round({_cos_sql('rel_emb.v', 'q.qvec')}, 6) AS score
-  FROM rel_emb CROSS JOIN q
-)
-SELECT rel_id AS relation_id, score,
-       CAST(row_number() OVER (ORDER BY score DESC, rel_id ASC) AS INT) AS evict_order
-FROM scored
-QUALIFY evict_order <= 50
-"""
-
-
-@register(
-    "eviction_topk_branch",
-    oracle=_EVICT_TOPK_SQL,
-    retired=True,  # r11 swap: filtered top-k selection driver-gated via mmr_diversity_rerank (diversity-aware selection, strictly richer); eviction branch semantics stay gated via eviction_sorted_ids; r9-green
-    description="eviction branch: vector top-k within candidate id-set (retriever.py:267-285)",
-)
-def eviction_topk_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _graph(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    rels = g.relations.select(F.col("id").alias("rel_id")).withColumn(
-        "vec_id", hash60("rel_id") % 500
-    )
-    rel_emb = rels.join(emb.select("vec_id", F.col("embedding").alias("v")), "vec_id")
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
-    # This branch fires only when the candidate set is larger than the keep
-    # threshold, so the top-k is orderBy().limit() → TakeOrderedAndProject
-    # (per-partition local top-N + tiny driver merge); the single-partition
-    # ranking window then sees only the ≤50 survivors.
-    survivors = (
-        rel_emb.crossJoin(F.broadcast(q))
-        .withColumn("score", F.round(cosine("v", "qvec"), 6))
-        .select("rel_id", "score")
-        .orderBy(F.desc("score"), F.asc("rel_id"))
-        .limit(50)
-    )
-    w = Window.orderBy(F.desc("score"), F.asc("rel_id"))
-    return (
-        survivors.withColumn("evict_order", F.row_number().over(w))
-        .select(F.col("rel_id").alias("relation_id"), "score", "evict_order")
     )
 
 

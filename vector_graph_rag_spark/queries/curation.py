@@ -33,7 +33,6 @@ from vector_graph_rag_spark.functions.hashing import seeded_hash60, seeded_hash6
 from vector_graph_rag_spark.functions.literals import inline_rows
 from vector_graph_rag_spark.functions.partitioning import ensure_parallel_scan
 from vector_graph_rag_spark.functions.text import tokens
-from vector_graph_rag_spark.queries.vector import _cos_sql as _vec_cos_sql
 from vector_graph_rag_spark.queries import register
 from vector_graph_rag_spark.sources.tables import load_table
 

@@ -233,9 +233,9 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Skew guard: a stop-shingle appearing in f documents contributes f² rows to
 # the pair join, so shingles above a document-frequency cap are dropped from
-# the universe BEFORE the join (the same hot-key cap as
-# minhash_lsh_pairs_capped).  Sizes and intersections both use the capped
-# universe, so jaccard stays a true set ratio over it.  The top-100 is
+# the universe BEFORE the join (the standard hot-key cap).  Sizes and
+# intersections both use the capped universe, so jaccard stays a true set
+# ratio over it.  The top-100 is
 # orderBy().limit() — Spark compiles that to TakeOrderedAndProject (per-
 # partition local top-100, tiny driver merge), never a single-partition
 # global window sort.
@@ -353,91 +353,6 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- minhash estimation quality (est vs exact jaccard on LSH pairs) ---------
-#
-# The dedup analogue of ann_recall_eval: for every LSH candidate pair,
-# compare the signature-estimated jaccard against the exact shingle-set
-# jaccard — the error distribution is what justifies k=16 signatures (and
-# at 100 TB, running the exact verify only on LSH survivors).
-
-_EST_QUALITY_SQL = f"""
-WITH {_SHINGLES_CTE},
-{_minhash_wide_sql()},
-bands AS ({_LSH_BANDS}),
-cand AS (
-  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-  FROM bands x JOIN bands y ON x.band = y.band AND x.band_key = y.band_key
-  WHERE x.doc_id < y.doc_id
-),
-est AS (
-  SELECT c.doc_a, c.doc_b, CAST(({_EST_EQ}) AS DOUBLE) / {N_MINHASH} AS est_jaccard
-  FROM cand c JOIN sig a ON a.doc_id = c.doc_a JOIN sig b ON b.doc_id = c.doc_b
-),
-doc_shingles AS (SELECT DISTINCT doc_id, shingle FROM shingles),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM doc_shingles GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM doc_shingles a JOIN doc_shingles b
-    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-exact AS (
-  SELECT e.doc_a, e.doc_b, e.est_jaccard,
-         round(CAST(coalesce(i.n_inter, 0) AS DOUBLE)
-               / (sa.n + sb.n - coalesce(i.n_inter, 0)), 6) AS jaccard
-  FROM est e
-  LEFT JOIN inter i ON i.doc_a = e.doc_a AND i.doc_b = e.doc_b
-  JOIN sizes sa ON sa.doc_id = e.doc_a
-  JOIN sizes sb ON sb.doc_id = e.doc_b
-)
-SELECT doc_a, doc_b, est_jaccard, jaccard,
-       round(abs(est_jaccard - jaccard), 6) AS abs_err
-FROM exact
-"""
-
-
-@register(
-    "minhash_estimate_quality",
-    oracle=_EST_QUALITY_SQL,
-    description="est vs exact jaccard per LSH pair (signature-quality eval, dedup twin of ann_recall_eval)",
-    retired=True,  # r9 swap: minhash family driver-gated via dedup_index_incremental (+ signatures/lsh_pairs/clusters); r7-green
-)
-def minhash_estimate_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    est = minhash_lsh_pairs(spark, sf_dir)
-    sh = _shingles_df(spark, sf_dir).select("doc_id", "shingle").distinct().cache()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    # Exact intersections only for LSH survivors: prune the shingle join
-    # with the candidate pair set before aggregating.
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .join(est.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_semi")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    ni = F.coalesce("n_inter", F.lit(0))
-    return (
-        est.join(inter, ["doc_a", "doc_b"], "left")
-        .join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(ni.cast("double") / (F.col("na") + F.col("nb") - ni), 6),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "est_jaccard",
-            "jaccard",
-            F.round(F.abs(F.col("est_jaccard") - F.col("jaccard")), 6).alias("abs_err"),
-        )
-    )
-
-
 # --- simhash (16-bit sign-aggregated token fingerprint) ---------------------
 
 N_SIMHASH_BITS = 16
@@ -465,7 +380,7 @@ FROM hashed GROUP BY doc_id
     "simhash_signatures",
     oracle=_simhash_sql(),
     description="16-bit simhash over distinct tokens",
-    retired=True,  # r6 swap: signature-builder sibling of minhash_signatures; hamming consumer driver-gated via hamming_binary_topk
+    retired=True,  # r6 swap: signature-builder sibling of minhash_signatures; stays benched
 )
 def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_graph_rag_spark.functions.hashing import hash60
@@ -733,80 +648,6 @@ def neardup_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("doc_id"),
         F.col("comp").alias("cluster"),
         (F.col("id") == F.col("comp")).cast("int").alias("is_canonical"),
-    )
-
-
-# --- LSH with hot-bucket cap (skew guard) -----------------------------------
-#
-# At 100 TB, stop-shingle band keys produce mega-buckets whose within-
-# bucket self-join is quadratic — the standard guard drops (or samples)
-# buckets above a cap before pair generation, trading a sliver of recall
-# for a bounded worst case.  Cap=2 here so the drop is observable at test
-# scale (4 size-3 buckets exist at sf0.01); production caps are 100-1000s.
-
-_LSH_BUCKET_CAP = 2
-
-_LSH_CAPPED_SQL = f"""
-WITH {_SHINGLES_CTE},
-{_minhash_wide_sql()},
-bands_all AS ({_LSH_BANDS}),
-bands AS (
-  SELECT doc_id, band, band_key FROM bands_all
-  QUALIFY COUNT(*) OVER (PARTITION BY band, band_key) <= {_LSH_BUCKET_CAP}
-),
-cand AS (
-  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-  FROM bands x JOIN bands y ON x.band = y.band AND x.band_key = y.band_key
-  WHERE x.doc_id < y.doc_id
-)
-SELECT c.doc_a, c.doc_b,
-       CAST(({_EST_EQ}) AS DOUBLE) / {N_MINHASH} AS est_jaccard
-FROM cand c JOIN sig a ON a.doc_id = c.doc_a JOIN sig b ON b.doc_id = c.doc_b
-"""
-
-
-@register(
-    "minhash_lsh_pairs_capped",
-    oracle=_LSH_CAPPED_SQL,
-    description="LSH pairs with hot-bucket cap: buckets above the cap are dropped before the quadratic within-bucket join",
-    retired=True,  # r6 swap: cap guard driver-gated via dedup_incremental's corpus-side hot-bucket cap; base pairs via minhash_lsh_pairs
-)
-def minhash_lsh_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sig = _minhash_wide_df(spark, sf_dir)
-    # lazy checkpoint (r17): hot-count + both join sides reference the
-    # band stream — same repeated-subtree fix as dedup_incremental
-    bands = _bands_df(sig).localCheckpoint(eager=False)
-    # Hot-bucket cap via map-side-combined agg + broadcast anti-join (buckets
-    # above the cap are few by definition) — same shape as the ngram hot-
-    # shingle cap; the band rows are never shuffled just to count buckets.
-    hot = (
-        bands.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("__bn"))
-        .filter(F.col("__bn") > _LSH_BUCKET_CAP)
-        .select("band", "band_key")
-    )
-    bands = bands.join(F.broadcast(hot), ["band", "band_key"], "left_anti")
-    x = bands.select(F.col("doc_id").alias("doc_a"), "band", "band_key")
-    y = bands.select(F.col("doc_id").alias("doc_b"), "band", "band_key")
-    cand = (
-        x.join(y, ["band", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    a = sig.select(F.col("doc_id").alias("doc_a"), *[F.col(f"m{i}").alias(f"am{i}") for i in range(N_MINHASH)])
-    b_ = sig.select(F.col("doc_id").alias("doc_b"), *[F.col(f"m{i}").alias(f"bm{i}") for i in range(N_MINHASH)])
-    eq = sum(
-        F.when(F.col(f"am{i}") == F.col(f"bm{i}"), 1).otherwise(0) for i in range(N_MINHASH)
-    )
-    return (
-        cand.join(a, "doc_a")
-        .join(b_, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (eq.cast("double") / F.lit(N_MINHASH)).alias("est_jaccard"),
-        )
     )
 
 

@@ -1,5 +1,5 @@
-"""Extended coverage: IVF ANN, TF-weighted terms, graph stats, answer
-context assembly, NER-cache lookup, temporal aggregation, scalar subquery.
+"""Extended coverage: the in-query IVF reference SQL, graph stats, answer
+context assembly, NER-cache lookup, GROUPING SETS.
 """
 
 from __future__ import annotations
@@ -7,14 +7,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from vector_graph_rag_spark.functions.text import normalize_phrase, tokens
-from vector_graph_rag_spark.functions.vector import cosine
+from vector_graph_rag_spark.functions.text import normalize_phrase
 from vector_graph_rag_spark.queries import register
 from vector_graph_rag_spark.queries.sql_common import TRIPS_CTE, dec, norm_sql
 from vector_graph_rag_spark.queries.vector import _cos_sql
 from vector_graph_rag_spark.sources.tables import load_table
 
 # --- IVF-style ANN: coarse cells + nprobe=2 (second ANN family besides LSH) --
+#
+# The logical IVF search in SQL: the first 8 vectors are the centroids,
+# every vector joins its argmax cell, each query probes its 2 best cells and
+# scores their members exactly.  ``ann_ivf_index_search`` (queries/
+# pipeline.py) uses it verbatim as its oracle, pinning stored-index search
+# == logical IVF.
 
 _IVF_SQL = f"""
 WITH cent AS (SELECT vec_id AS centroid_id, embedding::DOUBLE[] AS cvec
@@ -53,97 +58,6 @@ SELECT query_id, vec_id, score,
 FROM scored
 QUALIFY rank <= 10
 """
-
-
-@register(
-    "ann_ivf_topk",
-    oracle=_IVF_SQL,
-    retired=True,  # r10 swap: ann_ivf_index_search's oracle is THIS query's SQL verbatim — the stored partition-pruned index strictly covers the logical IVF; r8-green
-    description="IVF-style ANN: coarse-cell assignment + nprobe=2 probe (milvus IVF index stand-in)",
-)
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", F.col("embedding").alias("v"))
-    cent = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
-    )
-    # Cell assignment: broadcast the 8 centroids; argmax cosine per vector.
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("cscore"), F.asc("centroid_id")
-    )
-    assign = (
-        vecs.crossJoin(F.broadcast(cent))
-        .withColumn("cscore", F.round(cosine("v", "cvec"), 6))
-        .withColumn("rk", F.row_number().over(w_assign))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "centroid_id")
-    )
-    q = vecs.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 105)).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qvec")
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("cscore"), F.asc("centroid_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("cscore", F.round(cosine("qvec", "cvec"), 6))
-        .withColumn("rk", F.row_number().over(w_probe))
-        .filter(F.col("rk") <= 2)
-        .select("query_id", "centroid_id")
-    )
-    cand = probes.join(assign, "centroid_id").select("query_id", "vec_id")
-    scored = (
-        cand.join(vecs, "vec_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("score", F.round(cosine("v", "qvec"), 6))
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "vec_id", "score", "rank")
-    )
-
-
-# --- per-doc top terms by tf/df weight (rational arithmetic, log-free) ------
-
-_TFDF_SQL = """
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-),
-toks_ne AS (SELECT doc_id, tok FROM toks WHERE tok <> ''),
-tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks_ne GROUP BY doc_id, tok),
-df AS (SELECT tok, COUNT(DISTINCT doc_id) AS df FROM toks_ne GROUP BY tok),
-scored AS (
-  SELECT tf.doc_id, tf.tok, tf.tf, df.df,
-         CAST(tf.tf AS DOUBLE) * 1000 / df.df AS weight
-  FROM tf JOIN df ON tf.tok = df.tok
-)
-SELECT doc_id, tok, tf, df, weight,
-       CAST(row_number() OVER (PARTITION BY doc_id ORDER BY weight DESC, tok ASC) AS INT) AS rk
-FROM scored
-QUALIFY rk <= 3
-"""
-
-
-@register(
-    "tfdf_top_terms",
-    oracle=_TFDF_SQL,
-    description="per-doc top-3 terms by tf/df weight (text analysis; log-free for cross-engine determinism)",
-    retired=True,  # r12 swap: the stored posting table behind sparse_index_search materializes the same tokenizer's tf/df statistics (exact, queryable); top-terms ranking stays locally gated; r10-green
-)
-def tfdf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(tokens("text")).alias("tok"))
-    tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    df = toks.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
-    scored = tf.join(df, "tok").withColumn(
-        "weight", F.col("tf").cast("double") * 1000 / F.col("df")
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("weight"), F.asc("tok"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("doc_id", "tok", "tf", "df", "weight", "rk")
-    )
 
 
 # --- graph stats (#44: rag.py:680-698, milvus.py:980-1014) ------------------
@@ -286,33 +200,6 @@ def ner_cache_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- temporal aggregation (date scalar functions) ---------------------------
-
-_MONTHLY_SQL = f"""
-SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS order_month,
-       COUNT(*) AS n_orders,
-       CAST(SUM({dec('o_totalprice')}) AS DOUBLE) AS total
-FROM orders
-GROUP BY 1
-"""
-
-
-@register(
-    "orders_by_month",
-    oracle=_MONTHLY_SQL,
-    description="temporal scalar functions + agg",
-    retired=True,  # r6 swap: plain GROUP BY subsumed by orders_grouping_sets (same table, superset groupings)
-)
-def orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    return o.groupBy(
-        F.date_format("o_orderdate", "yyyy-MM").alias("order_month")
-    ).agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double").alias("total"),
-    )
-
-
 # --- GROUPING SETS (completes the rollup/cube/grouping-sets trio) -----------
 
 _GSETS_SQL = f"""
@@ -348,34 +235,4 @@ def orders_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY GROUPING SETS ((o_orderpriority), (order_month))
         """,
         o=o,
-    )
-
-
-# --- scalar subquery: above-mean filter -------------------------------------
-
-_ABOVE_MEAN_SQL = f"""
-SELECT c_custkey, c_acctbal
-FROM customer
-WHERE c_acctbal > (SELECT CAST(SUM({dec('c_acctbal')}) AS DOUBLE) / COUNT(*) FROM customer)
-"""
-
-
-@register(
-    "customers_above_mean",
-    oracle=_ABOVE_MEAN_SQL,
-    description="scalar subquery (decimal-exact mean) + filter",
-    retired=True,  # r7 swap: customer-balance coverage driver-gated via customer_balance_quartiles (same column, richer windows)
-)
-def customers_above_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    mean = c.agg(
-        (
-            F.sum(F.col("c_acctbal").cast("decimal(18,4)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("mean_bal")
-    )
-    return (
-        c.crossJoin(F.broadcast(mean))
-        .filter(F.col("c_acctbal") > F.col("mean_bal"))
-        .select("c_custkey", "c_acctbal")
     )

@@ -164,36 +164,6 @@ def graph_build_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- point lookup by id-set (semi-join; milvus.py:429-507) ------------------
-
-_LOOKUP_SQL = f"""
-WITH {TRIPS_CTE},
-mentions AS (
-      SELECT subj_entity_id AS id, subject AS name, passage_id, tidx, 0 AS part FROM trips
-  UNION ALL
-      SELECT obj_entity_id, object, passage_id, tidx, 1 FROM trips
-),
-firsts AS (
-  SELECT id, name, row_number() OVER (PARTITION BY id ORDER BY passage_id, tidx, part) AS rn
-  FROM mentions
-)
-SELECT id, name FROM firsts WHERE rn = 1 AND id IN ({_SEED_SQL_LIST})
-"""
-
-
-@register(
-    "entity_point_lookup",
-    oracle=_LOOKUP_SQL,
-    retired=True,  # r15 swap: pushed-down id-predicate scan driver-gated via documents_keyset_page; point-lookup semantics stay exercised in entity_neighbors + CRUD cascade; r13-green
-    description="id-set semi-join lookup (milvus.py:429-507)",
-)
-def entity_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _graph(spark, sf_dir)
-    seeds = _seed_entities(spark).withColumnRenamed("entity_id", "id")
-    # left_semi + projection: Catalyst prunes to (id, name) at the scan.
-    return g.entities.join(F.broadcast(seeds), "id", "left_semi").select("id", "name")
-
-
 # --- k-hop expansion (knowledge_graph.py:258-358) ---------------------------
 
 _EXPAND_SQL = f"""
@@ -228,47 +198,6 @@ def subgraph_expand_d1(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = _graph(spark, sf_dir)
     res = expand_subgraph(g, _seed_entities(spark), degree=1)
     return res.relation_ids.select("relation_id")
-
-
-# --- expansion passages (knowledge_graph.py:349-356) ------------------------
-
-_EXPAND_PASSAGES_SQL = f"""
-WITH {TRIPS_CTE},
-seeds AS (SELECT sha256('entity:' || {norm_sql('s.name')}) AS entity_id
-          FROM (VALUES {", ".join(f"({s!r})" for s in SEED_NAMES)}) s(name)),
-step0 AS (
-  SELECT DISTINCT er.relation_id FROM entity_relation er
-  JOIN seeds s ON er.entity_id = s.entity_id
-),
-hop_entities AS (
-  SELECT DISTINCT er.entity_id FROM entity_relation er
-  JOIN step0 r ON er.relation_id = r.relation_id
-),
-new_entities AS (
-  SELECT entity_id FROM hop_entities EXCEPT SELECT entity_id FROM seeds
-),
-hop_relations AS (
-  SELECT DISTINCT er.relation_id FROM entity_relation er
-  JOIN new_entities n ON er.entity_id = n.entity_id
-),
-final_relations AS (
-  SELECT relation_id FROM step0 UNION SELECT relation_id FROM hop_relations
-)
-SELECT DISTINCT rp.passage_id FROM relation_passage rp
-JOIN final_relations fr ON rp.relation_id = fr.relation_id
-"""
-
-
-@register(
-    "subgraph_expand_passages",
-    oracle=_EXPAND_PASSAGES_SQL,
-    description="passage collection after expansion (knowledge_graph.py:349-356)",
-    retired=True,  # r8 swap: one-column accessor over the same d=1 expansion gated via subgraph_expand_d1; passage consumption gated via passage_fanout_dedup + graph_rag_full_query
-)
-def subgraph_expand_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _graph(spark, sf_dir)
-    res = expand_subgraph(g, _seed_entities(spark), degree=1)
-    return res.passage_ids.select("passage_id")
 
 
 # --- eviction, no-eviction branch: lexicographic id sort (retriever.py:263-265)

@@ -1,4 +1,4 @@
-"""Hybrid retrieval (RRF + weighted fusion), quantized vector search, ANN quality eval.
+"""Hybrid retrieval (RRF + weighted fusion).
 
 Operators a vector-database user expects beyond the reference's plain
 cosine top-k (milvus.py:346-427):
@@ -10,17 +10,6 @@ cosine top-k (milvus.py:346-427):
   standard hybrid-search combiner (Milvus exposes the same RRFRanker).
   Contributions ``1/(60+rank)`` are rounded to 6 decimals and summed as
   DECIMAL so the fused score is addition-order-independent under shuffles.
-
-- ``quantized_cosine_topk`` — scalar int8 quantization (Milvus's SQ8 index
-  analogue): one global max-|x| pass fixes the scale, vectors quantize to
-  integers via ``floor(x*scale + 0.5)`` (floor, not round: identical
-  half-up behavior for both engines), and ranking uses the *integer* dot
-  product — bit-exact across engines, 4× smaller vectors, and SIMD-friendly
-  at scale.  Rank by quantized score, tie-break by id.
-
-- ``ann_recall_eval`` — recall@5 of the LSH-bucketed ANN against the exact
-  top-5, per query: the ANN-quality harness (SURVEY §2 #45 applied to the
-  index itself, the trade Milvus documents for IVF/HNSW).
 
 Scale: every query-side table here is tiny (fixture queries) and broadcast;
 the corpus sides shuffle only for their group-bys; top-k is the usual
@@ -40,7 +29,7 @@ from vector_graph_rag_spark.queries.ranking import (
     bm25_scores_ctes,
     query_values_sql,
 )
-from vector_graph_rag_spark.queries.vector import _bucket_col, _bucket_sql, _cos_sql
+from vector_graph_rag_spark.queries.vector import _cos_sql
 from vector_graph_rag_spark.sources.tables import load_table
 
 RRF_K = 60
@@ -148,199 +137,6 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         fused.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 10)
         .select("query_id", "doc_id", "rrf_score", "n_lists", "rank")
-    )
-
-
-# --- int8 scalar quantization (SQ8) -----------------------------------------
-
-_SQ8_SQL = """
-WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-mx AS (SELECT max(list_max(list_transform(v, x -> abs(x)))) AS max_abs FROM c),
-quant AS (
-  SELECT vec_id,
-         list_transform(v, x -> CAST(floor(x * (127.0 / mx.max_abs) + 0.5) AS BIGINT)) AS qv
-  FROM c CROSS JOIN mx
-),
-q AS (SELECT vec_id AS query_id, qv AS qq FROM quant WHERE vec_id < 5),
-scored AS (
-  SELECT q.query_id, quant.vec_id,
-         CAST(list_dot_product(quant.qv::DOUBLE[], q.qq::DOUBLE[]) AS BIGINT) AS qscore
-  FROM quant CROSS JOIN q
-)
-SELECT query_id, vec_id, qscore,
-       CAST(row_number() OVER (PARTITION BY query_id ORDER BY qscore DESC, vec_id ASC) AS INT) AS rank
-FROM scored
-QUALIFY rank <= 20
-"""
-
-
-@register(
-    "quantized_cosine_topk",
-    oracle=_SQ8_SQL,
-    retired=True,  # r10 swap: compressed-domain top-k driver-gated via ann_pq_adc_topk (PQ codebooks strictly richer than SQ8 scalar bins); r8-green
-    description="int8 scalar-quantized top-k (Milvus SQ8 analogue): integer dot products, bit-exact",
-)
-def quantized_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    c = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    mx = c.agg(
-        F.max(F.array_max(F.transform("v", lambda x: F.abs(x)))).alias("max_abs")
-    )
-    quant = c.crossJoin(F.broadcast(mx)).select(
-        "vec_id",
-        F.transform(
-            "v",
-            lambda x: F.floor(x * (F.lit(127.0) / F.col("max_abs")) + F.lit(0.5)),
-        ).alias("qv"),
-    )
-    q = quant.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("qv").alias("qq")
-    )
-    scored = quant.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "vec_id",
-        F.aggregate(
-            F.zip_with("qv", "qq", lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("qscore"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qscore"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 20)
-        .select("query_id", "vec_id", "qscore", "rank")
-    )
-
-
-# --- binary (sign) quantization + Hamming ranking ----------------------------
-
-# Hamming distance between sign bit-vectors without bit packing:
-# with s ∈ {0,1} per dim, |sa - sb| summed = Σsa + Σsb - 2·(sa·sb) — exact
-# integer arithmetic in both engines (values ≪ 2^53 in doubles).
-_HAMMING_SQL = """
-WITH c AS (
-  SELECT vec_id,
-         list_transform(embedding::DOUBLE[], x -> CASE WHEN x >= 0.0 THEN 1.0 ELSE 0.0 END) AS sb
-  FROM embeddings
-),
-pc AS (SELECT vec_id, sb, CAST(list_sum(sb) AS BIGINT) AS ones FROM c),
-q AS (SELECT vec_id AS query_id, sb AS qsb, ones AS qones FROM pc WHERE vec_id < 5),
-scored AS (
-  SELECT q.query_id, pc.vec_id,
-         pc.ones + q.qones - 2 * CAST(list_dot_product(pc.sb, q.qsb) AS BIGINT) AS hamming
-  FROM pc CROSS JOIN q
-)
-SELECT query_id, vec_id, hamming,
-       CAST(row_number() OVER (PARTITION BY query_id ORDER BY hamming ASC, vec_id ASC) AS INT) AS rank
-FROM scored
-QUALIFY rank <= 20
-"""
-
-
-@register(
-    "hamming_binary_topk",
-    oracle=_HAMMING_SQL,
-    retired=True,  # r11 swap: alternate vector-TYPE ranking driver-gated via sparse_dot_topk (sparse term vectors; binary-domain compressed ranking moved to PQ codes in r10); sign-bucket arithmetic stays locally gated via minhash/simhash parity; r9-green
-    description="sign-quantized binary vectors ranked by Hamming distance (Milvus BINARY_VECTOR analogue, integer-exact)",
-)
-def hamming_binary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    sb = F.transform(
-        F.col("embedding").cast("array<double>"),
-        lambda x: F.when(x >= 0.0, F.lit(1.0)).otherwise(F.lit(0.0)),
-    )
-    c = emb.select("vec_id", sb.alias("sb")).withColumn(
-        "ones",
-        F.aggregate("sb", F.lit(0.0), lambda acc, x: acc + x).cast("long"),
-    )
-    q = c.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("sb").alias("qsb"),
-        F.col("ones").alias("qones"),
-    )
-    dot = F.aggregate(
-        F.zip_with("sb", "qsb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    ).cast("long")
-    scored = c.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "vec_id",
-        (F.col("ones") + F.col("qones") - F.lit(2) * dot).alias("hamming"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 20)
-        .select("query_id", "vec_id", "hamming", "rank")
-    )
-
-
-# --- ANN recall harness ------------------------------------------------------
-
-_RECALL_SQL = f"""
-WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v, {_bucket_sql('embedding::DOUBLE[]')} AS bucket FROM embeddings),
-q AS (SELECT vec_id AS query_id, v AS qvec, bucket FROM c WHERE vec_id < 20),
-exact AS (
-  SELECT query_id, vec_id FROM (
-    SELECT q.query_id, c.vec_id,
-           row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY round({_cos_sql('c.v', 'q.qvec')}, 6) DESC,
-                                       c.vec_id ASC) AS rank
-    FROM c CROSS JOIN q
-  ) WHERE rank <= 5
-),
-ann AS (
-  SELECT query_id, vec_id FROM (
-    SELECT q.query_id, c.vec_id,
-           row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY round({_cos_sql('c.v', 'q.qvec')}, 6) DESC,
-                                       c.vec_id ASC) AS rank
-    FROM c JOIN q ON c.bucket = q.bucket
-  ) WHERE rank <= 5
-)
-SELECT e.query_id,
-       CAST(COUNT(a.vec_id) AS INT) AS n_matched,
-       round(COUNT(a.vec_id) / 5.0, 6) AS recall_at_5
-FROM exact e
-LEFT JOIN ann a ON a.query_id = e.query_id AND a.vec_id = e.vec_id
-GROUP BY e.query_id
-"""
-
-
-@register(
-    "ann_recall_eval",
-    oracle=_RECALL_SQL,
-    description="recall@5 of LSH ANN vs exact top-5 per query (index-quality eval, evaluate.py:177-229 shape)",
-    retired=True,  # r8 swap: composite of three still-gated queries (ann_lsh_topk + knn_cosine_topk + recall_at_k's ratio arithmetic)
-)
-def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_graph_rag_spark.queries.vector import ann_lsh_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    c = emb.select("vec_id", F.col("embedding").alias("v")).withColumn(
-        "bucket", _bucket_col(F.col("v"))
-    )
-    q = c.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qvec")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    exact = (
-        c.crossJoin(F.broadcast(q))
-        .withColumn("score", F.round(cosine("v", "qvec"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "vec_id")
-    )
-    ann = ann_lsh_topk(spark, sf_dir).select("query_id", "vec_id", F.lit(1).alias("hit"))
-    return (
-        exact.join(ann, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("hit", F.lit(0))).cast("int").alias("n_matched"),
-            F.round(
-                F.sum(F.coalesce("hit", F.lit(0))) / F.lit(5.0), 6
-            ).alias("recall_at_5"),
-        )
     )
 
 

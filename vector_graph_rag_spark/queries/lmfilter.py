@@ -152,13 +152,6 @@ dsir_w AS (
 
 _DSIR_SQL = f"WITH {_DSIR_CTES}\nSELECT doc_id, n_features, weight FROM dsir_w"
 
-_DSIR_SELECT_N = 100
-
-_DSIR_SELECT_SQL = f"""WITH {_DSIR_CTES}
-SELECT doc_id, n_features, weight FROM dsir_w
-ORDER BY weight DESC, doc_id ASC
-LIMIT {_DSIR_SELECT_N}"""
-
 # GPT-3-style quality classifier, 2 full-batch GD iterations unrolled as CTE
 # algebra == train_quality_classifier(iters=2, n_buckets=512, lr=2.0,
 # l2=1e-4, portable_hash=True, quantized=True) followed by quality_scores,
@@ -401,21 +394,6 @@ def _dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dsir_importance_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dsir_weights(spark, sf_dir)
-
-
-@register(
-    "dsir_select",
-    oracle=_DSIR_SELECT_SQL,
-    description=(
-        f"deterministic DSIR selection: top-{_DSIR_SELECT_N} importance-weight "
-        "documents (TakeOrderedAndProject, ties by doc_id)"
-    ),
-    retired=True,  # r8 swap: deterministic top-n over dsir_importance_weights' exact gated weights; TakeOrderedAndProject plan stays locally gated
-)
-def dsir_select_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_graph_rag_spark.operators.lm_filter import dsir_select
-
-    return dsir_select(_dsir_weights(spark, sf_dir), _DSIR_SELECT_N)
 
 
 @register(

@@ -995,7 +995,6 @@ def dedup_index_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- PQ / ADC approximate top-k (operators/pq.py) -----------------------------
 
 _PQ_DIM = 64
-_PQ_M = 4
 _PQ_SUB = 16
 _PQ_K = 16
 _PQ_NQ = 3
@@ -1275,8 +1274,8 @@ def source_temperature_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivf_oracle() -> str:
     # The stored index is a pure materialization of the logical cell
     # assignment (partitionBy(cell_id) of the assign CTE), so searching it
-    # must return EXACTLY the in-query ann_ivf_topk result — the oracle is
-    # that query's SQL verbatim (the lm_counts/dedup_index pattern: the
+    # must return EXACTLY the logical IVF result — the oracle is
+    # extended._IVF_SQL verbatim (the lm_counts/dedup_index pattern: the
     # hash gate pins stored == logical).
     from vector_graph_rag_spark.queries.extended import _IVF_SQL
 
@@ -1290,12 +1289,12 @@ def _ivf_oracle() -> str:
     description=(
         "persistent IVF index: write the corpus partitionBy(cell_id), then "
         "search via partition-pruned probe-cell scans — the oracle is the "
-        "in-query ann_ivf_topk SQL verbatim, pinning stored-index search == "
+        "logical IVF SQL verbatim, pinning stored-index search == "
         "logical IVF"
     ),
 )
 def ann_ivf_index_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The at-scale half of the IVF story: `ann_ivf_topk` recomputes cell
+    """The at-scale half of the IVF story: the logical IVF recomputes cell
     assignment per query batch; here assignment is PAID ONCE into a
     partitionBy(cell_id) parquet layout (operators/ivf.py), and each probe
     reads only the probed cells' files via partition pruning — query cost
@@ -1328,7 +1327,7 @@ def _ivf_trained_sql() -> str:
     # kmeans/semdedup oracles pin (curation._KM_CTES, k=8, one update),
     # reassembled to double vectors (c / 1000.0 — the exact division the
     # Spark side performs on the same integers); the probe/assign/score
-    # tail is the ann_ivf_topk shape verbatim.
+    # tail is the extended._IVF_SQL shape verbatim.
     from vector_graph_rag_spark.queries.curation import _KM_CTES
     from vector_graph_rag_spark.queries.vector import _cos_sql
 
@@ -1378,12 +1377,12 @@ QUALIFY rank <= 10
     description=(
         "IVF ANN with a TRAINED coarse quantizer: Lloyd-trained centroids "
         "(the kmeans oracle chain) replace the first-8-vectors seeds of "
-        "ann_ivf_topk — the production IVF, where trained cell balance IS "
+        "the logical IVF — the production IVF, where trained cell balance IS "
         "partition balance for the stored partitionBy(cell_id) layout"
     ),
 )
 def ann_ivf_trained_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same probe/assign/score dataflow as `ann_ivf_topk` (broadcast
+    """Same probe/assign/score dataflow as `ann_ivf_index_search` (broadcast
     centroids, argmax assignment, nprobe=2, exact scoring of survivors)
     with the quantizer TRAINED instead of seeded: raw seed centroids skew
     cells (measured 2x on the kNN-graph staging — SCALE.md §Round-13),
@@ -1445,7 +1444,7 @@ def _ivfpq_sql(vecs_predicate: str = "") -> str:
     # The Milvus IVF_PQ index shape end-to-end: the IVF coarse quantizer
     # prunes candidates to nprobe cells, PQ codes score them — composed
     # from the SAME CTE prefixes both component oracles use (_PQ_CTES for
-    # train/encode, the ann_ivf_topk assign/probe shape for pruning), so
+    # train/encode, the extended._IVF_SQL assign/probe shape for pruning), so
     # every constant and tie-break is pinned by the already-gated parts.
     # `vecs_predicate` restricts the CANDIDATE corpus (the tombstone-delete
     # twin: a search over the full stored index minus tombstoned ids is
@@ -1532,7 +1531,7 @@ def ann_ivfpq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/pq.py codes), so a query reads nprobe cells' CODE files —
     1/64th the bytes of nprobe cells' raw vectors, with partition pruning
     on top.  Here both halves run in-query against the same fixture
-    constants as their component queries (`ann_ivf_topk`'s centroids,
+    constants as their component queries (`ann_ivf_index_search`'s centroids,
     queries and nprobe; `ann_pq_adc_topk`'s codebooks and k)."""
     from vector_graph_rag_spark.operators.ivf import assign_cells
     from vector_graph_rag_spark.operators.pq import adc_score, encode_pq
@@ -2028,103 +2027,6 @@ def ann_index_tombstone_delete_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         append_tombstones(
             dels.filter((F.col("vec_id") / 7).cast("long") % 2 == 0), index, 0
-        )
-        return search_index(
-            spark, index, queries, cent, books, k=_PQ_TOPK, nprobe=2
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(index, ignore_errors=True)
-
-
-# --- tombstone SPEND + id re-open lifecycle (staged r16, round-18 swap) -------
-
-
-@register(
-    "ann_index_spend_readd",
-    oracle=_ivfpq_sql(vecs_predicate="vec_id % 7 <> 0 OR vec_id % 14 = 0"),
-    retired=True,  # STAGED for a round-18 swap (r16 staging)
-    description=(
-        "tombstone SPEND semantics under the hash gate: delete vec_id%7=0 "
-        "by tombstone, compact IN-PLACE (physical removal + crash-safe "
-        "source drop + spend), then RE-ADD the even multiples of 7 as a "
-        "fresh batch — the re-added ids must REAPPEAR in search, which "
-        "only happens if compaction truly spent the tombstones; the "
-        "oracle is the one-shot IVF-PQ SQL over survivors ∪ re-added"
-    ),
-)
-def ann_index_spend_readd_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The takedown → legitimate-re-add lifecycle the nightly CLI
-    documents, end-to-end under the driver hash gate.  Why this is a
-    DISTINCT correctness surface from ann_index_tombstone_delete: that
-    gate exercises the anti-join (tombstones outstanding); this one
-    exercises what happens AFTER the fold — the compacted tree carries
-    no tombstones (exclusion must come from PHYSICAL removal), and a
-    re-added id must rank again (an unspent tombstone would anti-join
-    the re-add into invisibility and hash-mismatch against the oracle).
-    The in-place compaction follows the crash-safe ordering
-    vector_index.compact_index pins: compacted shard lands, source
-    shards drop, tombstones spend LAST."""
-    from vector_graph_rag_spark.operators.ivf import collect_centroids
-    from vector_graph_rag_spark.streaming.vector_index import (
-        append_to_index,
-        append_tombstones,
-        compact_index,
-        search_index,
-    )
-
-    emb = ensure_parallel_scan(
-        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    )
-    _q, books = _pq_quantized_and_books(spark, sf_dir)
-    if not any(books):
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, adc_dist long, rank int"
-        )
-    cent = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
-    )
-    queries = emb.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
-    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-    index = tempfile.mkdtemp(prefix="vgr_spendre_")
-    # one bounded centroid collect shared by every append in the loop
-    # (ivf.collect_centroids): the per-append scan job is gone
-    cent_rows = collect_centroids(cent)
-    try:
-        # appends AND the tombstone write are mutually independent
-        # (disjoint batch=/tombstones/ dirs) — one overlapped group
-        # (guide §2.6, r18); the in-place fold below is the barrier that
-        # must observe all four.
-        run_overlapped(
-            [
-                (
-                    lambda b=b: append_to_index(
-                        emb.filter(F.col("vec_id") % 3 == b),
-                        cent_rows,
-                        books,
-                        index,
-                        b,
-                    )
-                )
-                for b in range(3)
-            ]
-            + [
-                lambda: append_tombstones(
-                    emb.filter(F.col("vec_id") % 7 == 0).select("vec_id"),
-                    index,
-                    0,
-                )
-            ]
-        )
-        # in-place fold: physical tombstone removal, source-shard drop,
-        # spend — the nightly maintenance night, replayed under the gate
-        n_folded = compact_index(spark, index, index, compacted_id=3)
-        if n_folded != 3:  # not assert: must survive python -O (r16 ADVICE)
-            raise ValueError(f"fold consumed {n_folded} batches, expected 3")
-        # the takedown target comes back legitimately: re-add the even
-        # multiples of 7 as a fresh post-compaction batch
-        append_to_index(
-            emb.filter(F.col("vec_id") % 14 == 0), cent_rows, books, index, 4
         )
         return search_index(
             spark, index, queries, cent, books, k=_PQ_TOPK, nprobe=2

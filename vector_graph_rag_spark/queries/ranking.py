@@ -1,4 +1,4 @@
-"""Ranked keyword retrieval + window-frame segmentation analytics.
+"""Ranked keyword retrieval.
 
 ``bm25_keyword_topk`` adds the classic lexical-retrieval twin of the vector
 top-k operators (SURVEY §2 #22-25): the reference retrieves passages only by
@@ -7,20 +7,14 @@ embedding similarity, but a production RAG corpus pipeline needs a keyword
 saturation (k1=1.2, b=0.75) with a *log-free rational idf*
 ``(N - df + 0.5) / (df + 0.5)`` — monotone in df exactly like the classic
 ``ln``-idf (so per-term rankings are identical), but reproducible bit-for-bit
-across engines (same trick as ``tfdf_top_terms``; ln() differs in last-ulp
-between libm implementations).  Per-term scores are rounded to 6 decimals and
-summed as DECIMAL so the final score is addition-order-independent — safe
-under Spark's unordered shuffles.
+across engines (ln() differs in last-ulp between libm implementations).
+Per-term scores are rounded to 6 decimals and summed as DECIMAL so the final
+score is addition-order-independent — safe under Spark's unordered shuffles.
 
 Scale: df/dl/avgdl are one shuffle each over the token table; the query-term
 side is a broadcast (queries are small); top-k per query is the usual
 window + row_number — the same plan shape as knn_cosine_topk, so it scales
 identically (no global sort, no driver loop).
-
-The two window-frame queries cover frame specs the rest of the surface
-doesn't: ntile/cume_dist segmentation (partitioned by nation → parallel; a
-global ntile would single-partition sort at 100 TB) and a bounded ROWS frame
-moving average.
 """
 
 from __future__ import annotations
@@ -30,7 +24,6 @@ from pyspark.sql import functions as F
 
 from vector_graph_rag_spark.functions.text import tokens
 from vector_graph_rag_spark.queries import register
-from vector_graph_rag_spark.queries.sql_common import dec
 from vector_graph_rag_spark.sources.tables import load_table
 
 # --- BM25 keyword top-k ------------------------------------------------------
@@ -229,79 +222,3 @@ def bm25_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(index, ignore_errors=True)
-
-
-# --- ntile / cume_dist segmentation (partitioned → parallel at scale) --------
-
-# bal_cume is deliberately NOT rounded: under the total per-partition order
-# every row is its own peer group, so cume_dist = row_number/n — the same
-# IEEE double division of the same two integers in both engines, bit-equal
-# as-is.  Rounding would BREAK parity: partition sizes like 640 = 2^7·5 make
-# k/640 an exact decimal-halfway value at scale 6 (e.g. 41/640 = 0.0640625),
-# where Spark's HALF_UP on the exact value and DuckDB's multiply-then-round
-# disagree by one ulp (found at sf0.1, nation 11).
-_NTILE_SQL = """
-SELECT c_nationkey, c_custkey, c_acctbal,
-       CAST(ntile(4) OVER w AS INT) AS bal_quartile,
-       cume_dist() OVER w AS bal_cume
-FROM customer
-WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal ASC, c_custkey ASC)
-"""
-
-
-@register(
-    "customer_balance_quartiles",
-    oracle=_NTILE_SQL,
-    description="ntile(4) + cume_dist segmentation per nation (parallel window partitions)",
-    retired=True,  # r9 swap: quantile coverage driver-gated via corpus_quantiles_registers + events_value_percentiles; r7-green
-)
-def customer_balance_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_nationkey").orderBy(F.asc("c_acctbal"), F.asc("c_custkey"))
-    return c.select(
-        "c_nationkey",
-        "c_custkey",
-        "c_acctbal",
-        F.ntile(4).over(w).alias("bal_quartile"),
-        F.cume_dist().over(w).alias("bal_cume"),
-    )
-
-
-# --- bounded ROWS-frame moving average --------------------------------------
-
-_MOVAVG_SQL = f"""
-SELECT o_custkey, o_orderkey,
-       strftime(o_orderdate, '%Y-%m-%d') AS order_date,
-       round(CAST(SUM({dec('o_totalprice')}) OVER w AS DOUBLE) / COUNT(*) OVER w, 6)
-         AS movavg_3,
-       CAST(COUNT(*) OVER w AS INT) AS n_in_frame
-FROM orders
-WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
-             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-"""
-
-
-@register(
-    "orders_moving_avg",
-    oracle=_MOVAVG_SQL,
-    description="3-order moving average per customer (bounded ROWS frame, decimal-exact sum)",
-    retired=True,  # r6 swap: partitioned-window-over-orders sibling of topk_orders_per_customer (frame agg vs rank)
-)
-def orders_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy(F.asc("o_orderdate"), F.asc("o_orderkey"))
-        .rowsBetween(-2, 0)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
-        F.round(
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)")).over(w).cast("double")
-            / F.count(F.lit(1)).over(w),
-            6,
-        ).alias("movavg_3"),
-        F.count(F.lit(1)).over(w).cast("int").alias("n_in_frame"),
-    )

@@ -4,8 +4,7 @@ The reference has only degenerate relational forms (SURVEY §2.2) — id-set
 semi-joins, collect_set aggregations, head-limits.  These queries exercise
 the full standard operator set the engine must support at 100 TB: multi-way
 joins (broadcast for dims), hash aggregation with partial combine, window
-functions, set ops, semi/anti joins, rollup, sessionization, JSON scalar
-work.
+functions, semi/anti joins, CUBE, sessionization, JSON scalar work.
 
 Determinism: every double aggregation goes through DECIMAL(18,4) so the sum
 is exact and order-independent (double summation order differs between Spark
@@ -206,72 +205,6 @@ def customers_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_orders.unionByName(without)
 
 
-# --- set ops -----------------------------------------------------------------
-
-_SETOPS_SQL = """
-SELECT n_nationkey, 'both' AS src FROM (
-  SELECT DISTINCT c_nationkey AS n_nationkey FROM customer
-  INTERSECT
-  SELECT DISTINCT s_nationkey FROM supplier
-)
-UNION ALL
-SELECT n_nationkey, 'customer_only' AS src FROM (
-  SELECT DISTINCT c_nationkey AS n_nationkey FROM customer
-  EXCEPT
-  SELECT DISTINCT s_nationkey FROM supplier
-)
-"""
-
-
-@register(
-    "nation_setops",
-    oracle=_SETOPS_SQL,
-    description="intersect/except/union (SURVEY §2.2 set ops)",
-    retired=True,  # r6 swap: nation-dimension coverage driver-gated via nation_balance_full_outer
-)
-def nation_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cn = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("n_nationkey")).distinct()
-    sn = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("n_nationkey")).distinct()
-    both = cn.intersect(sn).select("n_nationkey", F.lit("both").alias("src"))
-    conly = cn.exceptAll(sn).select("n_nationkey", F.lit("customer_only").alias("src"))
-    return both.unionByName(conly)
-
-
-# --- rollup ------------------------------------------------------------------
-
-_ROLLUP_SQL = """
-SELECT COALESCE(l_returnflag, '<all>') AS returnflag,
-       COALESCE(l_linestatus, '<all>') AS linestatus,
-       COUNT(*) AS n,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS qty
-FROM lineitem
-GROUP BY ROLLUP (l_returnflag, l_linestatus)
-"""
-
-
-@register(
-    "lineitem_rollup",
-    oracle=_ROLLUP_SQL,
-    description="rollup/grouping sets",
-    retired=True,  # r7 swap: hierarchical-agg coverage driver-gated via events_cube_month_type (CUBE) + orders_grouping_sets
-)
-def lineitem_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(_dec("l_quantity")).cast("double").alias("qty"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("<all>")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("<all>")).alias("linestatus"),
-            "n",
-            "qty",
-        )
-    )
-
-
 # --- conditional aggregation (pivot-shaped) ---------------------------------
 
 _PIVOT_SQL = """
@@ -356,40 +289,6 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sess.groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-    )
-
-
-# --- tumbling time window (batch twin of the streaming query) ---------------
-
-_TUMBLE_SQL = f"""
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type, COUNT(*) AS n,
-       CAST(SUM({dec('value', 6)}) AS DOUBLE) AS total_value
-FROM events
-GROUP BY date_trunc('hour', ts), event_type
-"""
-
-
-@register(
-    "events_tumbling_1h",
-    oracle=_TUMBLE_SQL,
-    description="tumbling window agg (batch twin of streaming/ingest.py)",
-    retired=True,  # r7 swap: tumbling-window semantics driver-gated via stream_tumbling_30m (same agg through readStream)
-)
-def events_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(_dec("value", 6)).cast("double").alias("total_value"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n",
-            "total_value",
-        )
     )
 
 

@@ -7,11 +7,9 @@ and DuckDB), so split membership is a pure function of the row — stable
 under repartitioning, retries, and incremental appends, and exactly
 oracle-checkable.
 
-- ``train_test_split_hash``: 80/10/10 split by ``hash60(doc_id) % 100``.
-  The standard alternative to ``randomSplit`` (which is partition-order
-  dependent and not stable across reruns).
-- ``stratified_sample_per_source``: exactly-n-per-stratum sample via a
-  hash-ordered ``row_number`` window.  This is the distributed replacement
+- ``rebalance_source_mix`` (library; driver-gated through
+  ``queries/pipeline.source_temperature_mix``): per-source quotas selected
+  by a hash-ordered ``row_number`` window.  This is the distributed replacement
   for reservoir sampling: same "uniform without replacement within group"
   guarantee, but deterministic and single-shuffle (one window over the
   stratum key).
@@ -29,80 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from vector_graph_rag_spark.functions.hashing import hash60, hash60_sql
+from vector_graph_rag_spark.functions.hashing import hash60
 from vector_graph_rag_spark.functions.literals import inline_rows
 from vector_graph_rag_spark.queries import register
 from vector_graph_rag_spark.sources.tables import load_table
-
-# --- hash-based train/valid/test split --------------------------------------
-
-_SPLIT_KEY = "concat('split:', CAST(doc_id AS VARCHAR))"
-
-_SPLIT_SQL = f"""
-WITH assigned AS (
-  SELECT doc_id,
-         {hash60_sql(_SPLIT_KEY)} % 100 AS bucket
-  FROM documents
-)
-SELECT doc_id,
-       CASE WHEN bucket < 80 THEN 'train'
-            WHEN bucket < 90 THEN 'valid'
-            ELSE 'test' END AS split
-FROM assigned
-"""
-
-
-@register(
-    "train_test_split_hash",
-    oracle=_SPLIT_SQL,
-    retired=True,  # r16 swap: sampling-family sibling cluster_capped_sample activates (both deterministic-hash sampling contracts over documents; split semantics stay exercised inside corpus_curation_funnel); r14-green
-    description="deterministic 80/10/10 split via content hash (stable across reruns/engines, unlike randomSplit)",
-)
-def train_test_split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    bucket = hash60(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))) % 100
-    return d.select(
-        "doc_id",
-        F.when(bucket < 80, F.lit("train"))
-        .when(bucket < 90, F.lit("valid"))
-        .otherwise(F.lit("test"))
-        .alias("split"),
-    )
-
-
-# --- exactly-n-per-stratum deterministic sample -----------------------------
-
-_STRAT_KEY = "concat('sample:', CAST(doc_id AS VARCHAR))"
-
-_STRAT_SQL = f"""
-WITH ranked AS (
-  SELECT source, doc_id,
-         row_number() OVER (
-           PARTITION BY source
-           ORDER BY {hash60_sql(_STRAT_KEY)}, doc_id
-         ) AS rk
-  FROM documents
-)
-SELECT source, doc_id, CAST(rk AS INT) AS rk
-FROM ranked WHERE rk <= 5
-"""
-
-
-@register(
-    "stratified_sample_per_source",
-    oracle=_STRAT_SQL,
-    retired=True,  # r10 swap: per-source hash-ordered quota selection driver-gated via source_temperature_mix (data-derived n^0.5 quotas strictly generalize fixed n-per-stratum); r8-green
-    description="deterministic exactly-5-per-source sample via hash-ordered window (distributed reservoir-sample stand-in)",
-)
-def stratified_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    h = hash60(F.concat(F.lit("sample:"), F.col("doc_id").cast("string")))
-    w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
-    return (
-        d.select("source", "doc_id", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") <= 5)
-    )
-
 
 # --- exact distinct via two-level aggregation --------------------------------
 
@@ -141,9 +69,9 @@ def rebalance_source_mix(d: DataFrame, weights: dict[str, float]) -> DataFrame:
 
     Per source s: takes n_s = floor(w_s · T) documents, where
     T = min_s floor(count_s / w_s) is the largest total the available
-    counts support.  Selection is the hash-ordered exactly-n window (the
-    stratified_sample_per_source kernel): stable under repartitioning,
-    task retry, and incremental append — never rand().
+    counts support.  Selection is the hash-ordered exactly-n window:
+    stable under repartitioning, task retry, and incremental append —
+    never rand().
 
     Scale: one map-side-combined count per source (broadcast-sized result
     drives the n_s plan on the driver), then one window shuffle partitioned

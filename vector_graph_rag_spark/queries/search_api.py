@@ -285,17 +285,11 @@ _SPARSE_TOPK = 10
 # (functions/text.tokens — whitespace split, empties removed); scores are
 # integer dot products over the shared-term inverted index, so every value
 # crossing the engine boundary is exact.
-def _sparse_sql(docs_predicate: str = "") -> str:
-    """The sparse-dot oracle, optionally over a restricted corpus — the
-    ``docs_predicate`` parameter mirrors ``_ivfpq_sql(vecs_predicate=)``:
-    the tombstone-delete gate pins delete-by-tombstone == never-indexed
-    by running the SAME SQL over the surviving documents only."""
-    where = f"\n  WHERE {docs_predicate}" if docs_predicate else ""
-    return f"""
+_SPARSE_SQL = f"""
 WITH tf AS (
   SELECT doc_id, t.term, COUNT(*) AS w
   FROM documents,
-       unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS t(term){where}
+       unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS t(term)
   GROUP BY doc_id, t.term
 ),
 qtf AS (SELECT doc_id AS query_id, term, w AS qw FROM tf WHERE doc_id < {_SPARSE_NQ}),
@@ -310,9 +304,6 @@ SELECT query_id, doc_id, score, CAST(rk AS INT) AS rank FROM (
   ) AS rk FROM scored
 ) WHERE rk <= {_SPARSE_TOPK}
 """
-
-
-_SPARSE_SQL = _sparse_sql()
 
 
 @register(
@@ -1005,572 +996,4 @@ def colbert_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _MAXSIM_K)
         .select("query_id", "doc_id", "maxsim", "rank")
-    )
-
-
-# --- ANN-prefiltered MaxSim (staged r16, for a round-18 swap) -----------------
-#
-# The ColBERT two-stage serving recipe the full-kernel docstring promises
-# (r15 verdict, Next #4), as CODE — specifically the PLAID/ColBERTv2 shape
-# (Santhanam et al. 2022: every token vector lives in an IVF cell; a
-# query's candidate docs come from the inverted doc lists of its tokens'
-# cells, scored by centroid-bounded interaction, and only the top-C pool
-# pays full MaxSim).  The full kernel's (query, doc, qpos) volume is
-# corpus-linear (100x smoke read 3.77x); here stage 2 is CANDIDATE-bounded
-# — |queries| x C x 8 doc-token rows regardless of corpus size — and
-# stage 1 scores only BUCKET-COLLIDING token pairs (identical tokens hash
-# to identical vectors, hence identical cells, so token-overlap — what
-# MaxSim actually ranks by — survives the prune; a doc-level pooled/hash
-# vector does NOT: it loses the head, measured 0.10-0.20 recall).
-# Determinism: cell assignment is argmax of the 6-rounded dot against 8
-# fixed mock centroids with ties to the lowest cell id; the approximate
-# stage-1 score is the usual max-then-DECIMAL-sum.
-
-_PMAXSIM_C = 20  # stage-1 candidate pool per query (the rerank bound)
-_PMAXSIM_NCENT = 8  # fixed token-vector cells (mock centroids)
-
-
-def _pmaxsim_sql() -> str:
-    from vector_graph_rag_spark.functions.embedding import mock_embedding_sql
-
-    qdocs = ", ".join(str(d) for d in _MAXSIM_QUERY_DOCS)
-    return f"""
-WITH cents AS (
-  SELECT CAST(i AS BIGINT) AS cent_id,
-         {mock_embedding_sql("('cent' || CAST(i AS VARCHAR))")} AS cv
-  FROM (SELECT unnest(range({_PMAXSIM_NCENT})) AS i)
-),
-dt AS (
-  SELECT doc_id, generate_subscripts(toks, 1) AS tpos, unnest(toks) AS tok
-  FROM (SELECT doc_id, string_split(text, ' ')[1:{_MAXSIM_DOC_TOKS}] AS toks
-        FROM documents)
-),
-dv AS (SELECT doc_id, tpos, {mock_embedding_sql('tok')} AS v FROM dt),
-qt AS (
-  SELECT doc_id AS query_id, generate_subscripts(toks, 1) AS qpos,
-         unnest(toks) AS tok
-  FROM (SELECT doc_id, string_split(text, ' ')[1:{_MAXSIM_Q_TOKS}] AS toks
-        FROM documents WHERE doc_id IN ({qdocs}))
-),
-qv AS (SELECT query_id, qpos, {mock_embedding_sql('tok')} AS v FROM qt),
-dassign AS (
-  SELECT doc_id, tpos, cent_id, v FROM (
-    SELECT d.doc_id, d.tpos, c.cent_id, d.v,
-           row_number() OVER (
-             PARTITION BY d.doc_id, d.tpos
-             ORDER BY round(list_dot_product(d.v, c.cv), 6) DESC, c.cent_id ASC
-           ) AS rk
-    FROM dv d CROSS JOIN cents c
-  ) WHERE rk = 1
-),
-qassign AS (
-  SELECT query_id, qpos, cent_id, v FROM (
-    SELECT q.query_id, q.qpos, c.cent_id, q.v,
-           row_number() OVER (
-             PARTITION BY q.query_id, q.qpos
-             ORDER BY round(list_dot_product(q.v, c.cv), 6) DESC, c.cent_id ASC
-           ) AS rk
-    FROM qv q CROSS JOIN cents c
-  ) WHERE rk = 1
-),
-tok_matches AS (
-  SELECT q.query_id, d.doc_id, q.qpos,
-         MAX(round(list_dot_product(q.v, d.v), 6)) AS m
-  FROM qassign q JOIN dassign d ON d.cent_id = q.cent_id
-  GROUP BY 1, 2, 3
-),
-approx AS (
-  SELECT query_id, doc_id,
-         CAST(SUM(CAST(m AS DECIMAL(18,6))) AS DOUBLE) AS a
-  FROM tok_matches GROUP BY 1, 2
-),
-pool AS (
-  SELECT query_id, doc_id FROM (
-    SELECT query_id, doc_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY a DESC, doc_id ASC) AS rk
-    FROM approx
-  ) WHERE rk <= {_PMAXSIM_C}
-),
-best AS (
-  SELECT p.query_id, p.doc_id, q.qpos,
-         MAX(round(list_dot_product(q.v, d.v), 6)) AS m
-  FROM pool p
-  JOIN dv d ON d.doc_id = p.doc_id
-  JOIN qv q ON q.query_id = p.query_id
-  GROUP BY 1, 2, 3
-),
-score AS (
-  SELECT query_id, doc_id,
-         CAST(SUM(CAST(m AS DECIMAL(18,6))) AS DOUBLE) AS maxsim
-  FROM best GROUP BY 1, 2
-)
-SELECT query_id, doc_id, maxsim, CAST(rk AS INT) AS rank
-FROM (
-  SELECT query_id, doc_id, maxsim,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY maxsim DESC, doc_id ASC) AS rk
-  FROM score
-)
-WHERE rk <= {_MAXSIM_K}"""
-
-
-def maxsim_rerank(
-    cand: DataFrame,
-    doc_toks: DataFrame,
-    query_toks: DataFrame,
-    k: int,
-    doc_id: str = "doc_id",
-    query_id: str = "query_id",
-) -> DataFrame:
-    """MaxSim over a BOUNDED candidate pool — the rerank half of the
-    two-stage recipe (``maxsim_topk`` is the exhaustive form; this scores
-    only ``cand``'s (query_id, doc_id) pairs).  ``cand`` is tiny
-    (|queries| x C rows) and broadcasts into the doc-token join, so the
-    token scoring stays map-side; the aggregations run over pool-bounded
-    row counts.  Same output contract as ``maxsim_topk``: (query_id,
-    doc_id, maxsim, rank <= k), order-free scores, ties to the lowest
-    doc id."""
-    dot = F.round(
-        F.aggregate(
-            F.zip_with("v", "qv", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    best = (
-        doc_toks.join(F.broadcast(cand), doc_id)
-        .join(F.broadcast(query_toks), query_id)
-        .select(query_id, doc_id, "qpos", dot.alias("dot"))
-        .groupBy(query_id, doc_id, "qpos")
-        .agg(F.max("dot").alias("m"))
-    )
-    score = best.groupBy(query_id, doc_id).agg(
-        F.sum(F.col("m").cast("decimal(18,6)")).cast("double").alias("maxsim")
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("maxsim"), F.asc(doc_id))
-    return (
-        score.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, doc_id, "maxsim", "rank")
-    )
-
-
-def _pmaxsim_centroids(spark: SparkSession) -> DataFrame:
-    """The 8 fixed mock centroids (cent_id, cv) — broadcast-sized by module
-    contract, the token-cell analogue of operators/ivf's centroid table."""
-    from vector_graph_rag_spark.functions.embedding import mock_embedding
-
-    return (
-        spark.range(_PMAXSIM_NCENT)
-        .select(F.col("id").alias("cent_id"))
-        .select(
-            "cent_id",
-            mock_embedding(
-                F.concat(F.lit("cent"), F.col("cent_id").cast("string"))
-            ).alias("cv"),
-        )
-    )
-
-
-def assign_token_cells(
-    toks: DataFrame, cents: DataFrame, keys: list, vec: str = "v"
-) -> DataFrame:
-    """Nearest-centroid cell assignment for token vectors: argmax dot
-    (6-rounded), ties to the LOWEST cell id — ROW-LOCAL against the
-    (bounded — module contract) centroid table collected as one
-    JVM-parsed literal, the ``operators/ivf.assign_cells`` shape.
-
-    The r17 form crossJoined the broadcast centroids and reduced through
-    ``groupBy(keys).agg(min(struct(-score, cent_id, v)))`` — map-side
-    combined, but the final aggregation still EXCHANGED one corpus-sized
-    row (carrying the token vector) per token on the index-write path
-    (r17 verdict, What's-wrong #4).  Here the score array is computed
-    per row and its first maximum picks the lowest centroid id;
-    assignment shuffles nothing.  Semantics matched to the struct-min
-    exactly: NaN dots LOSE (−score NaN sorted greatest) → mapped to −Inf
-    for the argmax; a NULL token vector nulls every score → the struct
-    tie fell through to the lowest cent_id → NULL array_max picks
-    element 1."""
-    rows = sorted(
-        cents.select("cent_id", "cv").collect(), key=lambda r: r["cent_id"]
-    )
-    if not rows:
-        return toks.limit(0).select(
-            *keys, F.lit(None).cast("bigint").alias("cent_id"), vec
-        )
-    from vector_graph_rag_spark.functions.literals import num_array_lit
-
-    cmat = num_array_lit(
-        [[float(x) for x in r["cv"]] for r in rows], "array<array<double>>"
-    )
-    ids = num_array_lit([int(r["cent_id"]) for r in rows], "array<bigint>")
-    cdot = lambda c: F.round(  # noqa: E731
-        F.aggregate(
-            F.zip_with(F.col(vec), c, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    scores = F.transform(
-        cmat,
-        lambda c: F.transform(
-            F.array(cdot(c)),
-            lambda x: F.when(x.isNull(), x)
-            .when(F.isnan(x), F.lit(float("-inf")))
-            .otherwise(x),
-        )[0],
-    )
-    picked = F.transform(
-        F.array(scores),
-        lambda s: F.when(
-            F.array_max(s).isNull(), F.element_at(ids, 1)
-        ).otherwise(
-            F.element_at(ids, F.array_position(s, F.array_max(s)).cast("int"))
-        ),
-    )[0]
-    return toks.select(*keys, picked.alias("cent_id"), vec)
-
-
-def write_token_cell_index(
-    doc_toks: DataFrame, cents: DataFrame, path: str
-) -> None:
-    """PLAID write path: assign every doc token vector to its cell ONCE and
-    lay the assignment down as a ``cent_id``-partitioned parquet inverted
-    list — (doc_id, tpos, v) under cent_id=N/ directories, the
-    streaming/vector_index shard layout.  Probes then read ONLY the cells
-    the query's tokens hit (partition pruning at the scan), and the rerank
-    gather re-reads stored vectors instead of re-embedding the corpus."""
-    assigned = assign_token_cells(doc_toks, cents, ["doc_id", "tpos"])
-    assigned.write.partitionBy("cent_id").mode("overwrite").parquet(path)
-
-
-@register(
-    "maxsim_prefiltered_topk",
-    oracle=_pmaxsim_sql(),
-    retired=True,  # STAGED for a round-18 swap (r16 staging)
-    description=(
-        "two-stage late interaction (the PLAID/ColBERTv2 serving recipe): "
-        "every token vector is assigned to a fixed IVF cell; candidates "
-        "come from cell-colliding token pairs scored by centroid-bounded "
-        "interaction, and full MaxSim reranks only the top-C=20 pool — "
-        "stage-2 volume is candidate-bounded instead of corpus-linear; "
-        "the oracle replays cells, pool, and rerank bit-for-bit"
-    ),
-)
-def maxsim_prefiltered_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """At 100 TB the exhaustive MaxSim kernel's (query, doc, qpos) scoring
-    volume grows with the corpus (its 100x smoke reads 3.77x); production
-    late interaction NEVER runs it raw — PLAID (Santhanam et al. 2022)
-    assigns token vectors to IVF cells once at INDEX time, gathers each
-    query token's cell-mates through the inverted lists, scores that
-    bounded interaction, and MaxSim-reranks only the survivors.  This is
-    the STORED-index form (r16 verdict, Next #3): the per-token cell
-    assignment is paid once by ``write_token_cell_index`` (argmax against
-    8 broadcast mock centroids, map-side-combined — no window) and
-    persisted cent_id-partitioned; the probe collects the <= |q| x 3
-    distinct query-token cells driver-side (the operators/ivf.ivf_search
-    pattern) and scans ONLY those partitions, so stage 1 reads an inverted
-    token list instead of re-assigning the corpus per run.  Stage 2 joins
-    the STORED token vectors against the BROADCAST top-C pool, so the
-    rerank is map-side, gathers from the index (the corpus is never
-    re-embedded at query time), and its volume is |queries| x C x 8 rows
-    at ANY corpus size.  With mock ncent=8 most cells are hit; at real
-    scale (ncent 2^16+) the pruning is the point."""
-    import shutil
-    import tempfile
-
-    from vector_graph_rag_spark.functions.embedding import mock_embedding
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks8 = F.slice(F.split("text", " "), 1, _MAXSIM_DOC_TOKS)
-    dv = d.select(
-        "doc_id", F.posexplode(toks8).alias("tpos", "tok")
-    ).select("doc_id", "tpos", mock_embedding("tok").alias("v"))
-    toks3 = F.slice(F.split("text", " "), 1, _MAXSIM_Q_TOKS)
-    qv = (
-        d.filter(F.col("doc_id").isin(*_MAXSIM_QUERY_DOCS))
-        .select(
-            F.col("doc_id").alias("query_id"),
-            F.posexplode(toks3).alias("qpos", "tok"),
-        )
-        .select("query_id", "qpos", mock_embedding("tok").alias("qv"))
-    )
-
-    cents = _pmaxsim_centroids(spark)
-    index = tempfile.mkdtemp(prefix="vgr_maxsimidx_")
-    try:
-        # pay-once write path (amortized at deployment; in-query here so
-        # the driver gate replays the whole lifecycle, the bm25_index_topk
-        # pattern)
-        write_token_cell_index(dv, cents, index)
-        stored = spark.read.parquet(index)  # (doc_id, tpos, v, cent_id=...)
-
-        qassign = assign_token_cells(
-            qv.withColumnRenamed("qv", "v"), cents, ["query_id", "qpos"]
-        ).withColumnRenamed("v", "qv")
-        # bounded driver materialization: <= |queries| x 3 distinct cell
-        # ids drive the partition-pruning predicate (ivf_search pattern)
-        qcells = sorted(
-            r["cent_id"]
-            for r in qassign.select("cent_id").distinct().collect()
-        )
-
-        # stage-1: true-dot interaction over cell-colliding pairs ONLY,
-        # read from the pruned inverted lists
-        idot = F.round(
-            F.aggregate(
-                F.zip_with("v", "qv", lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-        approx = (
-            stored.filter(F.col("cent_id").isin(qcells))
-            .join(F.broadcast(qassign), "cent_id")
-            .select("query_id", "doc_id", "qpos", idot.alias("dot"))
-            .groupBy("query_id", "doc_id", "qpos")
-            .agg(F.max("dot").alias("m"))
-            .groupBy("query_id", "doc_id")
-            .agg(
-                F.sum(F.col("m").cast("decimal(18,6)"))
-                .cast("double")
-                .alias("a")
-            )
-        )
-        wc = Window.partitionBy("query_id").orderBy(
-            F.desc("a"), F.asc("doc_id")
-        )
-        pool = (
-            approx.withColumn("rk", F.row_number().over(wc))
-            .filter(F.col("rk") <= _PMAXSIM_C)
-            .select("query_id", "doc_id")
-        )
-        # stage-2 gather comes from the STORED index, not a re-embed scan
-        return maxsim_rerank(
-            pool, stored.select("doc_id", "v"), qv, _MAXSIM_K
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(index, ignore_errors=True)
-
-
-
-# --- term-index tombstone deletes (staged r16, for a round-18 swap) -----------
-
-
-@register(
-    "term_index_tombstone_delete",
-    oracle=_sparse_sql(docs_predicate="doc_id % 7 <> 3"),
-    retired=True,  # STAGED for a round-18 swap (r16 staging)
-    description=(
-        "lexical DELETE maintenance (the term-index sibling of "
-        "ann_index_tombstone_delete): doc tombstone shards mark "
-        "doc_id%7=3 deleted WITHOUT touching sealed posting shards (one "
-        "tombstone shard replayed to pin idempotence); search anti-joins "
-        "them BEFORE scoring — the oracle is the sparse-dot SQL over the "
-        "SURVIVING documents, pinning delete-by-tombstone == never-indexed"
-    ),
-)
-def term_index_tombstone_delete_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deletes at 100 TB never rewrite sealed posting shards: a doc
-    tombstone is an id-only row in ``tombstones/batch=<id>`` beside the
-    postings (same overwrite-idempotent replay contract), the search's
-    anti-join is the only added cost, and ``compact_term_index`` removes
-    the postings physically when the nightly fold runs
-    (tests/test_term_index.py pins the full lifecycle incl. the
-    crash-safe drop-then-spend ordering).  Correctness shape: deleted
-    docs must VACATE top-k slots AND stop contributing df/dl-style
-    statistics — both of which the surviving-corpus oracle demands.
-    Delete predicate doc_id%7=3 keeps the query docs (0,1,2) alive."""
-    import shutil
-    import tempfile
-
-    from vector_graph_rag_spark.streaming.term_index import (
-        append_doc_tombstones,
-        append_term_batch,
-        search_term_index,
-    )
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    queries = d.filter(F.col("doc_id") < _SPARSE_NQ).select(
-        F.col("doc_id").alias("query_id"), "text"
-    )
-    index = tempfile.mkdtemp(prefix="vgr_termtomb_")
-    try:
-        # ONE overlapped group (guide §2.6, r18): the three posting
-        # appends (batch=<id>) and the two first tombstone shards
-        # (tombstones/batch=<id>) are mutually independent — disjoint
-        # dirs, no read between them — so the former two-barrier sequence
-        # is merged and the tiny tombstone writes back-fill the append
-        # tail.  The REPLAY of shard 0 must observe shard 0's first
-        # write, so it alone stays behind the barrier.
-        dels = d.filter(F.col("doc_id") % 7 == 3).select("doc_id")
-        run_overlapped(
-            [
-                (
-                    lambda b=b: append_term_batch(
-                        d.filter(F.col("doc_id") % 3 == b), index, batch_id=b
-                    )
-                )
-                for b in range(3)
-            ]
-            + [
-                (
-                    lambda tb=tb: append_doc_tombstones(
-                        dels.filter(
-                            (F.col("doc_id") / 7).cast("long") % 2 == tb
-                        ),
-                        index,
-                        tb,
-                    )
-                )
-                for tb in range(2)
-            ]
-        )
-        append_doc_tombstones(
-            dels.filter((F.col("doc_id") / 7).cast("long") % 2 == 0), index, 0
-        )
-        return search_term_index(
-            spark, index, queries, k=_SPARSE_TOPK
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(index, ignore_errors=True)
-
-
-# --- pseudo-relevance-feedback query expansion (staged r16, round-18 swap) ----
-#
-# The classic two-pass retrieval recipe (Rocchio 1971; RM3 — Abdul-Jaleel
-# et al. 2004, the Anserini/Lucene default): retrieve once, mine expansion
-# terms from the top feedback documents, re-retrieve with the expanded
-# query.  RAG stacks bolt this onto sparse retrieval to close vocabulary
-# gaps the raw query misses.  Everything is integer arithmetic over the
-# shared inverted term index, so the oracle replays both passes exactly.
-
-_PRF_FB_DOCS = 5  # feedback depth: top docs mined for expansion terms
-_PRF_FB_TERMS = 3  # expansion width: terms appended to the query
-
-_PRF_SQL = f"""
-WITH tf AS (
-  SELECT doc_id, t.term, COUNT(*) AS w
-  FROM documents,
-       unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS t(term)
-  GROUP BY doc_id, t.term
-),
-qtf AS (SELECT doc_id AS query_id, term, w AS qw FROM tf WHERE doc_id < {_SPARSE_NQ}),
-r1 AS (
-  SELECT q.query_id, d.doc_id, CAST(SUM(q.qw * d.w) AS BIGINT) AS score
-  FROM qtf q JOIN tf d ON d.term = q.term
-  GROUP BY q.query_id, d.doc_id
-),
-fb AS (
-  SELECT query_id, doc_id FROM (
-    SELECT query_id, doc_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY score DESC, doc_id ASC) AS rk
-    FROM r1
-  ) WHERE rk <= {_PRF_FB_DOCS}
-),
-exp_terms AS (
-  SELECT query_id, term FROM (
-    SELECT f.query_id, t.term, SUM(t.w) AS fw,
-           row_number() OVER (
-             PARTITION BY f.query_id
-             ORDER BY SUM(t.w) DESC, t.term ASC
-           ) AS rk
-    FROM fb f
-    JOIN tf t ON t.doc_id = f.doc_id
-    LEFT JOIN qtf q ON q.query_id = f.query_id AND q.term = t.term
-    WHERE q.term IS NULL
-    GROUP BY f.query_id, t.term
-  ) WHERE rk <= {_PRF_FB_TERMS}
-),
-qexp AS (
-  SELECT query_id, term, qw FROM qtf
-  UNION ALL
-  SELECT query_id, term, 1 AS qw FROM exp_terms
-),
-r2 AS (
-  SELECT q.query_id, d.doc_id, CAST(SUM(q.qw * d.w) AS BIGINT) AS score
-  FROM qexp q JOIN tf d ON d.term = q.term
-  GROUP BY q.query_id, d.doc_id
-)
-SELECT query_id, doc_id, score, CAST(rk AS INT) AS rank FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY score DESC, doc_id ASC
-  ) AS rk FROM r2
-) WHERE rk <= {_SPARSE_TOPK}
-"""
-
-
-@register(
-    "prf_query_expansion",
-    oracle=_PRF_SQL,
-    retired=True,  # STAGED for a round-18 swap (r16 staging)
-    description=(
-        "pseudo-relevance-feedback query expansion (Rocchio/RM3, the "
-        "Anserini default): sparse retrieve, mine the top-3 new terms "
-        "from the top-5 feedback docs by summed tf (ties lexicographic), "
-        "append them at weight 1, re-retrieve — two integer-exact passes "
-        "over the shared inverted term index"
-    ),
-)
-def prf_query_expansion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two sparse passes, both in the 100 TB inverted-index shape: the
-    query side stays BROADCAST in every join (original terms, then
-    original+3 expansion terms), scoring is map-side-combined integer
-    sums over posting matches, and the only windows rank per-query
-    frames (feedback docs: |q| x corpus-hits reduced by the score agg;
-    expansion terms: the term vocabulary of 5 docs; final top-k).  The
-    expansion-term mine joins the 5-doc feedback set (broadcast) back to
-    the term index — posting-list lookups, never a corpus scan beyond
-    the tf build both passes share."""
-    d = load_table(spark, sf_dir, "documents")
-    tf = (
-        d.select("doc_id", F.explode(tokens("text")).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    qtf = tf.filter(F.col("doc_id") < _SPARSE_NQ).select(
-        F.col("doc_id").alias("query_id"), "term", F.col("w").alias("qw")
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    r1 = (
-        tf.join(F.broadcast(qtf), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum(F.col("qw") * F.col("w")).alias("score"))
-    )
-    fb = (
-        r1.withColumn("rk", F.row_number().over(w_rank))
-        .filter(F.col("rk") <= _PRF_FB_DOCS)
-        .select("query_id", "doc_id")
-    )
-    w_term = Window.partitionBy("query_id").orderBy(
-        F.desc("fw"), F.asc("term")
-    )
-    exp_terms = (
-        tf.join(F.broadcast(fb), "doc_id")
-        .join(
-            F.broadcast(qtf.select("query_id", "term")),
-            ["query_id", "term"],
-            "left_anti",
-        )
-        .groupBy("query_id", "term")
-        .agg(F.sum("w").alias("fw"))
-        .withColumn("rk", F.row_number().over(w_term))
-        .filter(F.col("rk") <= _PRF_FB_TERMS)
-        .select("query_id", "term", F.lit(1).cast("long").alias("qw"))
-    )
-    qexp = qtf.unionByName(exp_terms)
-    return (
-        tf.join(F.broadcast(qexp), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum(F.col("qw") * F.col("w")).alias("score"))
-        .withColumn("rank", F.row_number().over(w_rank).cast("int"))
-        .filter(F.col("rank") <= _SPARSE_TOPK)
-        .select("query_id", "doc_id", "score", "rank")
     )

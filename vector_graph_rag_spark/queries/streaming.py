@@ -31,38 +31,6 @@ def stream_tumbling_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Sliding windows (width 30m, slide 15m): every event belongs to exactly two
-# windows — floor15(ts) and floor15(ts)-15m — which is how the oracle
-# enumerates them.
-_SLIDING_SQL = f"""
-WITH ev AS (SELECT epoch(ts) AS es, event_type, value FROM events),
-wins AS (
-  SELECT unnest([CAST(floor(es / 900) * 900 AS BIGINT),
-                 CAST(floor(es / 900) * 900 - 900 AS BIGINT)]) AS window_start_epoch,
-         event_type, value
-  FROM ev
-)
-SELECT window_start_epoch, event_type, COUNT(*) AS n,
-       CAST(SUM({dec('value', 6)}) AS DOUBLE) AS total_value
-FROM wins GROUP BY 1, 2
-"""
-
-
-@register(
-    "stream_sliding_15m",
-    oracle=_SLIDING_SQL,
-    description="Structured Streaming sliding-window agg (30m width / 15m slide) with watermark",
-    retired=True,  # r6 swap: windowed-stream-agg sibling of stream_tumbling_30m (sliding = overlapping tumbling); 5 stream queries stay gated
-)
-def stream_sliding_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return windowed_event_aggregate(
-        spark,
-        os.path.join(sf_dir, "events.parquet"),
-        window_duration="30 minutes",
-        slide_duration="15 minutes",
-    )
-
-
 # Native session windows — the declarative twin of the stateful
 # applyInPandasWithState sessionizer.  Oracle: gap-rule sessionization in
 # exact integer MICROS (session_window starts a new session at gap >= the

@@ -15,7 +15,7 @@ from vector_graph_rag_spark.functions.hashing import hash60, hash60_sql
 from vector_graph_rag_spark.functions.literals import inline_rows
 from vector_graph_rag_spark.functions.text import tokens
 from vector_graph_rag_spark.queries import register
-from vector_graph_rag_spark.queries.dedup import _SHINGLES_CTE, _shingles_df
+from vector_graph_rag_spark.queries.dedup import _SHINGLES_CTE
 from vector_graph_rag_spark.queries.sql_common import norm_sql
 from vector_graph_rag_spark.sources.tables import load_table
 
@@ -246,10 +246,11 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # The composite a pretraining-data pipeline runs nightly: raw corpus →
 # language filter → quality gate → exact-dedup keeper → train split, with
-# per-stage surviving-document counts (the curation funnel report).  Each
-# stage reuses the exact kernel of its standalone query (lang_id_heuristic,
-# quality_score, dedup_exact, train_test_split_hash), composed as per-doc
-# flag columns joined on doc_id — co-partitioned joins, one wide flag row
+# per-stage surviving-document counts (the curation funnel report).  The
+# first three stages reuse the exact kernel of their standalone queries
+# (lang_id_heuristic, quality_score, dedup_exact); the split is an 80/20
+# ``hash60 % 100`` cut.  They compose as per-doc flag columns joined on
+# doc_id — co-partitioned joins, one wide flag row
 # per document, one final single-row aggregate unpivoted with stack().
 # At 100 TB every stage is a per-row expression except lang hits (broadcast
 # lexicon join) and the dedup keeper (one groupBy on the text hash).

@@ -1,10 +1,8 @@
-"""Time-series join queries over `events` — as-of and bounded range joins.
+"""Time-series queries over `events` — bounded range join, percentiles, funnel.
 
 The Spark implementations are the shuffle-minimal compositions in
-``operators/timeseries.py``; the oracles are portable SQL (the window
-formulation — DuckDB's native ``ASOF JOIN`` gives the same result on this
-data but has no tie-break, so the deterministic window twin is declared).
-Timestamps are emitted as formatted strings (FIXTURES.md §3).
+``operators/timeseries.py``; the oracles are portable SQL.  Timestamps are
+emitted as formatted strings (FIXTURES.md §3).
 """
 
 from __future__ import annotations
@@ -17,60 +15,6 @@ from vector_graph_rag_spark.sources.tables import load_table
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 _TS_FMT_SQL = "%Y-%m-%d %H:%M:%S"
-
-# --- as-of join: each click ↔ latest at-or-before purchase per user ---------
-
-_ASOF_SQL = f"""
-WITH unioned AS (
-      SELECT user_id, ts, event_id, value AS r_value, 0 AS tag
-      FROM events WHERE event_type = 'purchase'
-  UNION ALL
-      SELECT user_id, ts, event_id, NULL, 1
-      FROM events WHERE event_type = 'click'
-),
-carried AS (
-  SELECT user_id, ts, event_id, tag,
-         last_value(r_value IGNORE NULLS) OVER (
-           PARTITION BY user_id ORDER BY ts, tag, event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) AS last_purchase_value
-  FROM unioned
-)
-SELECT event_id, user_id,
-       strftime(ts, '{_TS_FMT_SQL}') AS ts,
-       round(last_purchase_value, 6) AS last_purchase_value
-FROM carried WHERE tag = 1
-"""
-
-
-@register(
-    "events_asof_last_purchase",
-    oracle=_ASOF_SQL,
-    retired=True,  # r17 swap: gate moved to versioned_time_travel (point-in-time-state family); as-of kernel stays active via events_range_join_15m + timeseries unit battery
-    description="as-of join (merge_asof / ASOF JOIN semantics): each click carries the latest prior purchase value, one window shuffle",
-)
-def events_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_graph_rag_spark.operators.timeseries import asof_join
-
-    e = load_table(spark, sf_dir, "events")
-    clicks = e.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    joined = asof_join(
-        clicks,
-        purchases,
-        on=["user_id"],
-        right_vals=("value",),
-        right_order="event_id",
-    )
-    return joined.select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", _TS_FMT).alias("ts"),
-        F.round("asof_value", 6).alias("last_purchase_value"),
-    )
-
 
 # --- bounded range join: events within 15 min after each signup -------------
 

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from vector_graph_rag_spark.functions.hashing import _A_PARAMS, _B_PARAMS, MERSENNE_P
-from vector_graph_rag_spark.functions.vector import cosine, dot
+from vector_graph_rag_spark.functions.vector import cosine
 from vector_graph_rag_spark.operators.topk import cosine_topk
 from vector_graph_rag_spark.queries import register
 from vector_graph_rag_spark.sources.tables import load_table
@@ -65,24 +65,6 @@ def knn_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "knn_cosine_topk_matmul",
-    oracle=_KNN_SQL,
-    description="same top-20 via numpy block-matmul mapInPandas (large-query-batch scale path)",
-    retired=True,  # r7 swap: identical semantics driver-gated via knn_cosine_topk (same oracle); matmul scale path stays locally gated
-)
-def knn_cosine_topk_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_graph_rag_spark.operators.topk import cosine_topk_matmul
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
-    )
-    return cosine_topk_matmul(
-        emb, queries, k=20, corpus_id="vec_id", corpus_vec="embedding"
-    )
-
-
 # --- score-threshold filter (retriever.py:134-154 shape) --------------------
 
 _THRESH_SQL = f"""
@@ -107,49 +89,6 @@ def similarity_threshold_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("score", score)
         .filter(F.col("score") > 0.3)
         .select("query_id", "vec_id", "score")
-    )
-
-
-# --- filtered vector search: top-k within a candidate id-set (retriever.py:267-285)
-
-_FILTERED_SQL = f"""
-WITH q AS (SELECT embedding::DOUBLE[] AS qvec FROM embeddings WHERE vec_id = 0),
-cand AS (SELECT vec_id, embedding::DOUBLE[] AS cvec FROM embeddings WHERE label IN (3, 7)),
-scored AS (
-  SELECT cand.vec_id, round({_cos_sql('cand.cvec', 'q.qvec')}, 6) AS score
-  FROM cand CROSS JOIN q
-)
-SELECT vec_id, score, rank FROM (
-  SELECT *, CAST(row_number() OVER (ORDER BY score DESC, vec_id ASC) AS INT) AS rank FROM scored
-) WHERE rank <= 10
-"""
-
-
-@register(
-    "filtered_vector_search",
-    oracle=_FILTERED_SQL,
-    retired=True,  # r11 swap: constrained-candidate vector search driver-gated via grouping_search_topk (label-keyed group selection strictly covers the label-IN candidate filter); scoring kernel stays gated via knn_cosine_topk; r9-green
-    description="top-k within candidate set (retriever.py:267-285)",
-)
-def filtered_vector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
-    cand = emb.filter(F.col("label").isin(3, 7)).select(
-        "vec_id", F.col("embedding").alias("cvec")
-    )
-    # Top-10 via TakeOrderedAndProject — the candidate set is a corpus-scale
-    # filter result, so no global window sort; rank only the 10 survivors.
-    scored = (
-        cand.crossJoin(F.broadcast(q))
-        .withColumn("score", F.round(cosine("cvec", "qvec"), 6))
-        .select("vec_id", "score")
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(10)
-    )
-    w = Window.orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .select("vec_id", "score", "rank")
     )
 
 
@@ -234,109 +173,3 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= 5)
         .select("query_id", "vec_id", "score", "rank")
     )
-
-
-# --- embedding near-duplicate pairs (north-star dedup) ----------------------
-#
-# Banded sign-LSH candidate generation (the 100 TB path — never all-pairs):
-# 4 bands x 4 hyperplanes (planes 0-15 of the frozen family above); a pair
-# is a candidate iff it collides in ANY band (classic AND-OR amplification:
-# high-cosine pairs collide with probability ~1; borderline pairs trade a
-# sliver of recall for a candidate set built by an equi-join instead of a
-# cartesian product).  Buckets above a cap are dropped before the quadratic
-# within-bucket self-join (same skew guard as minhash_lsh_pairs_capped), so
-# the worst case stays bounded under embedding skew.  Exact cosine scoring
-# runs ONLY on LSH survivors.  The DuckDB oracle mirrors the banding
-# bit-for-bit, so the recall trade is identical on both engines.
-
-ND_BANDS = 4
-ND_ROWS = 4
-_ND_BUCKET_CAP = 200
-_ND_THRESHOLD = 0.42
-
-
-def _band_bucket_sql(vec_expr: str, band: int) -> str:
-    bits = []
-    for r in range(ND_ROWS):
-        p = _plane(band * ND_ROWS + r)
-        lits = ", ".join(repr(x) for x in p)
-        bits.append(
-            f"(CASE WHEN list_dot_product({vec_expr}, [{lits}]::DOUBLE[]) >= 0.0 THEN {1 << r} ELSE 0 END)"
-        )
-    return "(" + " + ".join(bits) + ")"
-
-
-def _band_bucket_col(vec_col, band: int):
-    from vector_graph_rag_spark.functions.literals import double_array_lit
-
-    vec = vec_col.cast("array<double>")
-    total = F.lit(0)
-    for r in range(ND_ROWS):
-        plane = double_array_lit(_plane(band * ND_ROWS + r))
-        d = F.aggregate(
-            F.zip_with(vec, plane, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-        total = total + F.when(d >= 0.0, F.lit(1 << r)).otherwise(F.lit(0))
-    return total
-
-
-_ND_BANDS_SQL = "\nUNION ALL\n".join(
-    f"SELECT vec_id, {b} AS band, {_band_bucket_sql('v', b)} AS bucket FROM c"
-    for b in range(ND_BANDS)
-)
-
-_NEARDUP_SQL = f"""
-WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-bands_all AS ({_ND_BANDS_SQL}),
-bands AS (
-  SELECT vec_id, band, bucket FROM bands_all
-  QUALIFY COUNT(*) OVER (PARTITION BY band, bucket) <= {_ND_BUCKET_CAP}
-),
-cand AS (
-  SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-  FROM bands x JOIN bands y ON x.band = y.band AND x.bucket = y.bucket
-  WHERE x.vec_id < y.vec_id
-)
-SELECT cd.vec_a, cd.vec_b, round({_cos_sql('a.v', 'b.v')}, 6) AS score
-FROM cand cd JOIN c a ON a.vec_id = cd.vec_a JOIN c b ON b.vec_id = cd.vec_b
-WHERE round({_cos_sql('a.v', 'b.v')}, 6) > {_ND_THRESHOLD}
-"""
-
-
-@register(
-    "embedding_neardup_pairs",
-    oracle=_NEARDUP_SQL,
-    retired=True,  # r11 swap: cosine-threshold pair finding driver-gated via range_search_radius (corpus-vs-queries range search IS the threshold-band shape); LSH-bucketed pair generation stays gated via the dedup family; r9-green
-    description="cosine near-dup pairs via banded sign-LSH candidates + capped buckets + exact verify on survivors",
-)
-def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    c = emb.select("vec_id", F.col("embedding").alias("v"))
-    bands = None
-    for b in range(ND_BANDS):
-        part = c.select(
-            "vec_id", F.lit(b).alias("band"), _band_bucket_col(F.col("v"), b).alias("bucket")
-        )
-        bands = part if bands is None else bands.unionByName(part)
-    w = Window.partitionBy("band", "bucket")
-    kept = bands.withColumn("__bn", F.count(F.lit(1)).over(w)).filter(
-        F.col("__bn") <= _ND_BUCKET_CAP
-    )
-    x = kept.select(F.col("vec_id").alias("vec_a"), "band", "bucket")
-    y = kept.select(F.col("vec_id").alias("vec_b"), "band", "bucket")
-    cand = (
-        x.join(y, ["band", "bucket"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    a = c.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
-    b_ = c.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
-    return (
-        cand.join(a, "vec_a")
-        .join(b_, "vec_b")
-        .withColumn("score", F.round(cosine("va", "vb"), 6))
-        .filter(F.col("score") > _ND_THRESHOLD)
-        .select("vec_a", "vec_b", "score")
-    )
-

@@ -86,6 +86,16 @@ class GraphNameError(ValueError):
     """A graph name the catalog cannot store (module notes)."""
 
 
+class GraphFormatError(RuntimeError):
+    """A graph directory that lacks some of the six tables, e.g. one written
+    before ``entity_passage`` was stored.  There is no migration path: the
+    graph must be deleted and re-added."""
+
+
+def _missing_tables(d: str) -> list[str]:
+    return [t for t in TABLE_NAMES if not os.path.exists(os.path.join(d, f"{t}.parquet"))]
+
+
 def _is_graph_name(name) -> bool:
     return (
         isinstance(name, str)
@@ -145,10 +155,7 @@ class GraphCatalog:
             d = os.path.join(self.root, name)
             if not os.path.isdir(d) or name.endswith((STAGING, ASIDE)):
                 continue
-            present = {
-                t for t in TABLE_NAMES if os.path.exists(os.path.join(d, f"{t}.parquet"))
-            }
-            out.append({"name": name, "has_all_tables": present == set(TABLE_NAMES)})
+            out.append({"name": name, "has_all_tables": not _missing_tables(d)})
         return out
 
     def delete_graph(self, name: str) -> bool:
@@ -229,8 +236,16 @@ class GraphCatalog:
         }
 
     def read_graph(self, spark: SparkSession, name: str) -> GraphTables:
+        """The six tables of graph ``name``, read with their declared
+        schemas.  Raises ``GraphFormatError`` naming the tables that are
+        not on disk."""
         self._recover(name)
         d = self._graph_dir(name)
+        missing = _missing_tables(d)
+        if missing:
+            raise GraphFormatError(
+                f"graph {name!r} lacks tables {missing}: delete and re-add the graph"
+            )
         return GraphTables(
             **{
                 t: spark.read.schema(GRAPH_SCHEMAS[t]).parquet(os.path.join(d, f"{t}.parquet"))

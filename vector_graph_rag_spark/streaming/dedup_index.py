@@ -280,8 +280,7 @@ def probe_index(
     shuffle in the plan is batch-proportional, so the probe stays flat as
     the index grows.
 
-    ``bucket_cap``: the LSH skew guard (same rationale as the one-shot
-    path's ``minhash_lsh_pairs_capped``) — an index bucket holding more
+    ``bucket_cap``: the LSH skew guard — an index bucket holding more
     than ``cap`` docs is boilerplate/stop-text whose members exact-dedup
     catches first; probing it fans the join out by its full occupancy per
     matching new doc.  Capped buckets drop from the probe (hot keys are

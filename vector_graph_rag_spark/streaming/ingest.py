@@ -2,9 +2,9 @@
 
 The reference is strictly batch (SURVEY §2.2: no streaming anywhere), so
 this is a north-star extension: an append-only event stream aggregated into
-tumbling windows with a watermark for late data.  The same logical plan
-serves batch (relational.events_tumbling_1h) and stream — Spark's
-unification is the point.
+tumbling windows with a watermark for late data.  The streamed aggregate
+equals the batch one — Spark's unification is the point, and the
+``stream_tumbling_30m`` oracle checks it against a batch DuckDB GROUP BY.
 
 For tests/correctness the stream is driven synchronously: file source over
 the deterministic events parquet, `availableNow` trigger, memory sink in
