@@ -20,7 +20,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # family (join/agg, window, vector top-k, LSH dedup, text, streaming).
 HEADLINE = [
     # dedup_index_incremental runs FIRST (r9 verdict, What's wrong #2): its
-    # honest cost is three durable bucketed index writes + a corpus
+    # honest cost is three durable index shard writes + a corpus
     # signature pass, and measured r9 cross-round drift (driver 12.0s vs
     # 7.4s isolated warm-min) tracked accumulated session pressure, not the
     # query — running it before 50 other queries' checkpoint blocks pile up
@@ -196,8 +196,8 @@ def main() -> None:
     ITERATIONS = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "2"))
     ACTION = os.environ.get("SPARK_GRAFT_BENCH_ACTION", "noop")
     # Durable-write-heavy queries warm over MORE than two iterations: the
-    # full dedup-index flow pays a corpus signature pass + three bucketed
-    # index writes, and its isolated 4-iteration runs keep descending
+    # full dedup-index flow pays a corpus signature pass + three index
+    # shard writes, and its isolated 4-iteration runs keep descending
     # ([19.5, 12.2, 10.2, 8.5] r10; [12.4, 8.4, 8.2, 7.4] r9 — page cache
     # + codegen warm across runs), so a 2-iteration min lands in the
     # still-warming band and drifts round-over-round for reasons that are
@@ -287,7 +287,7 @@ def main() -> None:
         indexes (r12 verdict, Next #4).  The composite headline queries
         (`dedup_index_incremental` 8.6s, `ann_index_incremental` 4.0s) are
         three-of-everything write-cost theater: 3 signature/encode passes +
-        DDL + durable shard writes + probes in one number.  The number a
+        durable shard writes + probes in one number.  The number a
         100 TB deployment watches is the probe against a STANDING index —
         pinned at 0.93s (dedup) in SCALE.md §Round-12 dedup split and
         cross-checked by tools/index_build_probe_split.py.  Building the
@@ -339,7 +339,6 @@ def main() -> None:
             rows["dedup_index_probe_only"] = min(runs)
             print(f"# dedup_index_probe_only: {runs} -> {min(runs)}s", file=sys.stderr)
         finally:
-            dix.drop_index(spark, state)
             shutil.rmtree(state, ignore_errors=True)
         _release_checkpoints()
 

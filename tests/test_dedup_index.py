@@ -4,6 +4,7 @@ index, and probe plan shape."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from vector_graph_rag_spark.sources.tables import load_table
@@ -148,30 +149,26 @@ def test_probe_bucket_cap_bounds_hot_fanout(spark, tmp_path):
 
 
 def test_replay_does_not_double_count_band_rows(spark, tmp_path):
-    """External-table DROP PARTITION is metadata-only; append_to_index
-    must physically delete the replayed batch's partition dir or stale
-    files resurface and double the band rows (the probe's distinct would
-    mask it — assert on the table itself)."""
-    from vector_graph_rag_spark.streaming.dedup_index import _ensure_bands_table
+    """A replayed batch id must replace its band shard, not add to it:
+    stale files would double the band rows (the probe's distinct would
+    mask it — assert on the shard itself)."""
+    import os
 
     docs = _docs(spark).limit(50)
     state = str(tmp_path / "index")
     sig = batch_signatures(docs).localCheckpoint(eager=True)
     append_to_index(sig, state, 0)
-    tbl = _ensure_bands_table(spark, state)
-    before = spark.table(tbl).count()
+    shard = os.path.join(state, "bands", "batch=0")
+    before = spark.read.parquet(shard).count()
     assert before > 0
     append_to_index(sig, state, 0)  # replay the same batch id
-    assert spark.table(tbl).count() == before
+    assert spark.read.parquet(shard).count() == before
 
 
 def test_probe_survives_fresh_catalog(spark, tmp_path):
-    """The catalog entry is session-local; the durable contract is the
-    directory layout.  Dropping the table (≈ a new session) and probing
-    again must transparently re-register + recover partitions and return
-    the identical pair set."""
-    from vector_graph_rag_spark.streaming.dedup_index import drop_index
-
+    """The durable contract is the directory layout alone: a new session,
+    whose catalog knows nothing of the index, probes the identical pair
+    set."""
     docs = _docs(spark)
     state = str(tmp_path / "index")
     for b in range(2):
@@ -181,37 +178,140 @@ def test_probe_survives_fresh_catalog(spark, tmp_path):
     probe = batch_signatures(docs.filter(F.col("doc_id") % 7 == 0))
     before = sorted(map(tuple, probe_index(spark, state, probe).collect()))
     assert before  # non-trivial
-    drop_index(spark, state)  # simulate a fresh session's empty catalog
-    after = sorted(map(tuple, probe_index(spark, state, probe).collect()))
+    fresh = spark.newSession()
+    probe2 = batch_signatures(
+        _docs(fresh).filter(F.col("doc_id") % 7 == 0)
+    )
+    after = sorted(map(tuple, probe_index(fresh, state, probe2).collect()))
     assert before == after
 
 
-def test_probe_plan_has_no_index_side_exchange(spark, tmp_path):
-    """The 100 TB contract: every Exchange in the capped probe plan is
-    batch-proportional.  The band table is bucketed by band_key, so the
-    hot-bucket aggregation and the band join must NOT hash-repartition
-    the index — no Exchange keyed on band columns anywhere, and the
-    signature fetch must build on broadcast sides (no Exchange keyed on
-    index_doc_id over the sigs scan)."""
-    import re
+def _walk(node, ancestors=()):
+    """(node, ancestors) for every node of a physical plan subtree."""
+    out = [(node, list(ancestors))]
+    kids = node.children()
+    for i in range(kids.size()):
+        out += _walk(kids.apply(i), [*ancestors, node])
+    return out
 
+
+def _plan_nodes(df):
+    """:func:`_walk` over ``df``'s physical plan (the adaptive plan's
+    initial plan: the one AQE starts from)."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.initialPlan()
+    return _walk(root)
+
+
+def _band_shuffles(df):
+    return [
+        n for n, _ in _plan_nodes(df)
+        if n.nodeName() == "Exchange" and "band" in n.outputPartitioning().toString()
+    ]
+
+
+def _index_side_contract(df):
+    """Violations of the probe's 100 TB plan contract: no Exchange above a
+    sigs scan; a band-keyed shuffle only for the occupancy count, with
+    every index band scan under it cut to the batch keys by a left-semi
+    broadcast join first."""
+    def scans(nodes, col):
+        return [
+            (n, a) for n, a in nodes
+            if n.nodeName().startswith("Scan") and f"{col}#" in n.output().toString()
+        ]
+
+    bad = []
+    for node, anc in scans(_plan_nodes(df), "sig"):
+        if any("Exchange" in a.nodeName() for a in anc):
+            bad.append(f"sigs scan under an Exchange: {node.simpleString(25)}")
+    for ex in _band_shuffles(df):
+        part = ex.outputPartitioning().toString()
+        below = _walk(ex)
+        if not any(
+            n.nodeName() == "HashAggregate" and "count(1)" in n.simpleString(25)
+            for n, _ in below
+        ):
+            bad.append(f"band-keyed shuffle that is not the occupancy count: {part}")
+        for _, path in scans(below, "band_key"):
+            if not any(
+                p.nodeName() == "BroadcastHashJoin" and "LeftSemi" in p.simpleString(25)
+                for p in path
+            ):
+                bad.append(f"index bands shuffled without the batch-key semi-join: {part}")
+    return bad
+
+
+def test_probe_plan_has_no_index_side_exchange(spark, tmp_path):
+    """The 100 TB contract: every Exchange in the probe plan is
+    batch-proportional.  The uncapped probe shuffles no band rows at all;
+    the capped probe's only band-keyed Exchange is the occupancy count,
+    above a left-semi broadcast join that cuts the index bands to the
+    batch's keys; the signature fetch builds on broadcast sides, so the
+    sigs scan is never shuffled."""
     docs = _docs(spark)
     state = str(tmp_path / "index")
     append_to_index(batch_signatures(docs), state, 0)
     probe = batch_signatures(docs.limit(20))
-    plan = (
-        probe_index(spark, state, probe, bucket_cap=50)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    shuffles = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    for keys in shuffles:
-        assert "band" not in keys, f"index bands shuffled on ({keys}):\n{plan[:2000]}"
-        assert "sig" not in keys, f"index sigs shuffled on ({keys}):\n{plan[:2000]}"
-    # the only hash exchange left is the candidate-pair distinct
-    assert all("doc_id" in k for k in shuffles), shuffles
-    assert "CartesianProduct" not in plan
+    uncapped = probe_index(spark, state, probe)
+    capped = probe_index(spark, state, probe, bucket_cap=50)
+    assert _band_shuffles(uncapped) == []
+    assert len(_band_shuffles(capped)) == 1
+    for df in (uncapped, capped):
+        assert _index_side_contract(df) == []
+        assert all(n.nodeName() != "CartesianProduct" for n, _ in _plan_nodes(df))
+
+
+@pytest.mark.parametrize("fail_at", ["bands", "sigs"])
+def test_failed_append_is_invisible_and_replay_converges(
+    spark, tmp_path, monkeypatch, fail_at
+):
+    """A batch is visible to the probe only once both of its shards
+    exist.  An append that dies at either write leaves the probe's
+    before-state (the dead write leaves its output directory empty, as an
+    aborted Spark write job does), and replaying the batch id then gives
+    the one-shot pair set."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    docs = _docs(spark)
+    state = str(tmp_path / "index")
+    sigs = [
+        batch_signatures(docs.filter(F.col("doc_id") % 3 == b)).localCheckpoint(eager=True)
+        for b in range(3)
+    ]
+    for b in range(2):
+        append_to_index(sigs[b], state, b)
+    before = sorted(map(tuple, probe_index(spark, state, sigs[2]).collect()))
+    assert before
+
+    target = {
+        "bands": os.path.join("bands", "batch=2"),
+        "sigs": os.path.join("batch=2", "sigs"),
+    }[fail_at]
+    real_parquet = DataFrameWriter.parquet
+
+    def dying_parquet(self, path, *args, **kwargs):
+        if path.endswith(target):
+            os.makedirs(path)
+            raise RuntimeError(f"injected failure writing {path}")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", dying_parquet)
+    with pytest.raises(RuntimeError, match="injected"):
+        append_to_index(sigs[2], state, 2)
+    monkeypatch.undo()
+    assert sorted(map(tuple, probe_index(spark, state, sigs[2]).collect())) == before
+
+    append_to_index(sigs[2], state, 2)  # replay the failed batch id
+    everything = batch_signatures(docs)
+    found = {
+        tuple(sorted((r["index_doc_id"], r["new_doc_id"]))): round(r["est_jaccard"], 9)
+        for r in probe_index(spark, state, everything).collect()
+    }
+    assert found == _full_corpus_pairs(spark)
 
 
 def test_incremental_equivalence_fuzz(spark):
@@ -264,9 +364,6 @@ def test_incremental_equivalence_fuzz(spark):
                 append_to_index(sig, state, b)
             assert found == ref, (picks, mod, found, ref)
         finally:
-            from vector_graph_rag_spark.streaming.dedup_index import drop_index
-
-            drop_index(spark, state)
             shutil.rmtree(state, ignore_errors=True)
 
     check()

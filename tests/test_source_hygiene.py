@@ -65,8 +65,9 @@ ALLOWED_DRIVER_MATERIALIZATION = {
 
 BANNED_ROW_UDF_NAMES = {"udf", "UserDefinedFunction"}
 
-# packages (package-relative) that serve API requests
-REQUEST_PATH_PACKAGES = ("api/", "graph/")
+# packages (package-relative) that build no frame from Python data: the
+# request path (API and graph layers) and the shard stores
+NO_PYTHON_RDD_PACKAGES = ("api/", "graph/", "streaming/")
 
 # source text -> the one module (package-relative) allowed to contain it:
 # the Hadoop FS handle belongs to the batch-shard store, the under-parallel
@@ -139,14 +140,35 @@ def test_no_row_at_a_time_python_udfs_anywhere():
 
 def test_no_python_rdd_frames_on_the_request_path():
     """``spark.createDataFrame(<python data>)`` backs a frame with a Python
-    RDD; the API and graph layers build request frames with
+    RDD; the API and graph layers build request frames, and the shard
+    stores their small and empty frames, with
     ``functions/literals.inline_rows`` / ``arrow_rows`` instead (lineage
     pinned in ``tests/test_request_frames.py``)."""
     offenders = [
         s for s in _walk_sites()
-        if s[0] == "create_df" and s[1].startswith(REQUEST_PATH_PACKAGES)
+        if s[0] == "create_df" and s[1].startswith(NO_PYTHON_RDD_PACKAGES)
     ]
-    assert not offenders, f"createDataFrame on the request path: {offenders}"
+    assert not offenders, f"createDataFrame in {NO_PYTHON_RDD_PACKAGES}: {offenders}"
+
+
+def test_shard_stores_keep_no_catalog_state():
+    """The shard stores' durable state is their directory tree alone: no
+    session-catalog table, bucket spec or DDL that a new session would
+    have to re-register."""
+    repo = os.path.dirname(SRC_ROOT)
+    paths = [os.path.join(repo, "tools", "curation_pipeline.py")]
+    streaming = os.path.join(SRC_ROOT, "streaming")
+    paths += [
+        os.path.join(streaming, fn)
+        for fn in sorted(os.listdir(streaming)) if fn.endswith(".py")
+    ]
+    offenders = [
+        (os.path.relpath(p, repo), pat)
+        for p in paths
+        for pat in ("saveAsTable(", "bucketBy(", "CREATE TABLE")
+        if pat in open(p).read()
+    ]
+    assert not offenders, f"catalog state in a shard store: {offenders}"
 
 
 def test_single_owner_patterns_have_one_home():

@@ -277,10 +277,11 @@ def main() -> None:
 
     if args.dedup_index is not None:
         from vector_graph_rag_spark.streaming.dedup_index import (
-            _ensure_bands_table,
             batch_signatures,
+            hot_buckets,
             list_batch_ids,
             probe_index,
+            read_signatures,
             self_pairs,
         )
 
@@ -296,28 +297,19 @@ def main() -> None:
         existing_ids = list_batch_ids(spark, args.dedup_index)
         if existing_ids:
             idx_ids = (
-                spark.read.parquet(
-                    os.path.join(args.dedup_index, "batch=*", "sigs")
-                )
+                read_signatures(spark, args.dedup_index, existing_ids)
                 .select("doc_id")
                 .distinct()
             )
             new_sig = sig.join(idx_ids, "doc_id", "left_anti").localCheckpoint(
                 eager=True
             )
-            # surface what the cap skips (no silent truncation): hot
-            # buckets are boilerplate fan-out, few by definition, and the
-            # occupancy aggregation rides the band table's bucketing —
-            # no index shuffle
+            # surface what the cap skips (no silent truncation): the
+            # index buckets this run's probe drops as boilerplate fan-out
             if cap:
-                tbl = _ensure_bands_table(spark, args.dedup_index)
-                counts["neardup_hot_buckets_skipped"] = (
-                    spark.table(tbl)
-                    .groupBy("band", "band_key")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .filter(F.col("n") > cap)
-                    .count()
-                )
+                counts["neardup_hot_buckets_skipped"] = hot_buckets(
+                    spark, args.dedup_index, new_sig, cap, ids=existing_ids
+                ).count()
         else:
             new_sig = sig
         idx_dups = (

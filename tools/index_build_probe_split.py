@@ -131,18 +131,16 @@ def main() -> None:
     }
     # --- dedup_index_incremental: signature pass / durable build / probe ----
     # The bench query (slowest headline, 8.79s in BENCH_r11) interleaves
-    # three batch signature passes, three durable bucketed index writes
-    # (+ first-write table DDL), three index probes and three self-pair
-    # scans in one number.  Split: the corpus is indexed ONCE from batches
-    # 0-1 (the standing index), then the nightly marginal cost is the
-    # batch-2 leg — signature pass, probe + self-pairs (lazy, one noop
-    # action), and the append write.  The probe is the only part whose
+    # three batch signature passes, three durable index shard writes,
+    # three index probes and three self-pair scans in one number.  Split:
+    # the corpus is indexed ONCE from batches 0-1 (the standing index),
+    # then the nightly marginal cost is the batch-2 leg — signature pass,
+    # probe + self-pairs (lazy, one noop action), and the append write.  The probe is the only part whose
     # cost may NOT scale with the batch (it scans the index), so it gets
     # its own pinned number.
     from vector_graph_rag_spark.streaming.dedup_index import (
         append_to_index,
         batch_signatures,
-        drop_index,
         probe_index,
         self_pairs,
     )
@@ -161,7 +159,7 @@ def main() -> None:
             ]
             sig_runs.append(round(time.perf_counter() - t0, 3))
             t0 = time.perf_counter()
-            for b in range(2):  # standing index = batches 0-1 (incl. DDL)
+            for b in range(2):  # standing index = batches 0-1
                 append_to_index(sigs[b], state, b)
             build_runs.append(round(time.perf_counter() - t0, 3))
             t0 = time.perf_counter()  # nightly probe: batch 2 vs the index
@@ -181,11 +179,10 @@ def main() -> None:
             append_to_index(sigs[2], state, 2)
             append_runs.append(round(time.perf_counter() - t0, 3))
         finally:
-            drop_index(spark, state)
             shutil.rmtree(state, ignore_errors=True)
     out["dedup_index_incremental"] = {
         "signature_pass_runs (3 batches)": sig_runs,
-        "build_runs (DDL + 2 batch writes)": build_runs,
+        "build_runs (2 batch writes)": build_runs,
         "probe_runs (batch-2 probe + self-pairs)": probe_runs,
         "append_runs (1 batch write)": append_runs,
         "signature_min": min(sig_runs),

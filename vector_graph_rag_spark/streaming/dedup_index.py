@@ -9,17 +9,10 @@ band state as a ``streaming/shards`` batch-shard tree (layout, replay
 delete-first and the Hadoop-FS listing live there):
 
     state_dir/batch=<id>/sigs/    (doc_id, sig array<long>[16])
-    state_dir/bands/batch=<id>/   (doc_id, band, band_key) — ONE external
-                                  parquet table, bucketed by band_key
+    state_dir/bands/batch=<id>/   (doc_id, band, band_key)
 
-The band side is a real Spark bucketed table (``CLUSTERED BY (band_key)
-INTO ``BAND_BUCKETS`` BUCKETS``, partitioned by batch): every probe-side
-operation keyed on ``band_key`` — the nightly hot-bucket occupancy
-aggregation above all — reads the index WITHOUT an Exchange, because the
-scan itself carries the hash distribution.  Batch replays physically
-delete the batch's partition directory before re-appending (``DROP
-PARTITION`` alone is metadata-only on external tables: stale files would
-resurface on the next append and double-count).
+Both are plain parquet shards, read by explicit batch id and deleted
+before a replayed batch id is rewritten.
 
 Nightly flow (``tools``-level composition, each step one declared-kernel
 shape):
@@ -38,21 +31,21 @@ the incremental path inherits the batch path's DuckDB-oracle pedigree.
 
 Scale notes: probing joins the (small) nightly band set against the index
 on (band, band_key) — Spark broadcasts the batch side, and the index scan
-reads only the ``bands`` table (column-pruned parquet, bucketed by
-``band_key`` so neither the band join nor the hot-bucket aggregation
-shuffles the index).  The signature fetch joins the full ``sigs`` scan
-against the BROADCAST candidate set (batch-bounded: ≤ batch bands ×
-``bucket_cap`` pairs when capped), so no index-side shuffle there either
-— every Exchange left in the probe plan is proportional to the nightly
-batch, never to the index.  Index growth is one band row per (doc, band)
-and one 16-long array per doc — O(corpus docs), ~100 bytes/doc, 1/1000th
-of a 100 KB-average corpus.
+reads only the ``bands`` shards (column-pruned parquet).  The capped
+probe's occupancy count runs over the index rows that carry one of the
+batch's keys (a left-semi join against the broadcast batch keys), so its
+shuffle is batch-proportional too.  The signature fetch joins the full
+``sigs`` scan against the BROADCAST candidate set (batch-bounded: ≤ batch
+bands × ``bucket_cap`` pairs when capped), so no index-side shuffle there
+either — every Exchange left in the probe plan is proportional to the
+nightly batch, never to the index.  Index growth is one band row per
+(doc, band) and one 16-long array per doc — O(corpus docs), ~100
+bytes/doc, 1/1000th of a 100 KB-average corpus.
 """
 
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,6 +55,7 @@ from vector_graph_rag_spark.functions.hashing import (
     hash60,
     seeded_hash60_from_base,
 )
+from vector_graph_rag_spark.functions.literals import inline_rows
 from vector_graph_rag_spark.functions.text import tokens
 from vector_graph_rag_spark.queries.dedup import (
     N_BANDS,
@@ -69,6 +63,11 @@ from vector_graph_rag_spark.queries.dedup import (
     ROWS_PER_BAND,
 )
 from vector_graph_rag_spark.streaming import shards
+# the store's public listing IS the shard store's
+from vector_graph_rag_spark.streaming.shards import list_batch_ids
+
+# declared so a sigs directory that a dead write left empty reads as no rows
+_SIG_SCHEMA = "doc_id long, sig array<long>"
 
 
 def batch_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -133,138 +132,72 @@ def _est_jaccard(a: str, b: str):
     return eq.cast("double") / F.lit(N_MINHASH)
 
 
-# Bucket count for the band table.  32 matches the test/bench shuffle
-# width; a 100 TB deployment raises it at index-creation time (the value
-# is only read when the table is first CREATEd — existing tables keep
-# their own bucket spec).
-BAND_BUCKETS = 32
-
-
-def _index_loc(state_dir: str) -> str:
-    """Stable absolute location for catalog registration: local paths are
-    absolutized, URI paths (s3://, hdfs://, ...) pass through."""
-    return state_dir if "://" in state_dir else os.path.abspath(state_dir)
-
-
-def _bands_table_name(state_dir: str) -> str:
-    import hashlib
-
-    digest = hashlib.md5(_index_loc(state_dir).encode()).hexdigest()[:12]
-    return f"vgr_dedup_bands_{digest}"
-
-
-# Serializes this module's catalog DDL (table create, partition add/drop)
-# so concurrent appends of DIFFERENT batch ids can overlap their DATA
-# writes (guide §2.6) while the metadata ops — cheap, driver-local —
-# stay atomic.  The r17 layout funneled every append's band rows through
-# one shared ``saveAsTable`` (an unsupported concurrent write), which
-# serialized the whole append leg; the staged per-batch write below keeps
-# only the DDL under the lock.
-_DDL_LOCK = threading.Lock()
-
-
-def list_batch_ids(spark: SparkSession, state_dir: str) -> list[int]:
-    """Batch ids present in the index (``shards.list_batch_ids``)."""
-    return shards.list_batch_ids(spark, _index_loc(state_dir))
-
-
-def _ensure_bands_table(spark: SparkSession, state_dir: str) -> str:
-    """Register (idempotently) the external bucketed band table over
-    ``state_dir/bands`` and recover any partitions written by earlier
-    sessions.  The catalog entry is session-local; the DATA layout is
-    the durable contract, so a fresh session re-creates the entry and
-    recovers partitions from the directory tree."""
-    tbl = _bands_table_name(state_dir)
-    with _DDL_LOCK:
-        if not spark.catalog.tableExists(tbl):
-            loc = os.path.join(_index_loc(state_dir), "bands")
-            spark.sql(
-                f"CREATE TABLE {tbl} "
-                "(doc_id BIGINT, band INT, band_key STRING, batch INT) "
-                "USING PARQUET PARTITIONED BY (batch) "
-                f"CLUSTERED BY (band_key) SORTED BY (band_key ASC) "
-                f"INTO {BAND_BUCKETS} BUCKETS "
-                f"LOCATION '{loc}'"
-            )
-            # adopt partitions written by earlier sessions; a brand-new
-            # index has no bands dir yet and RECOVER would throw on the
-            # missing path
-            if shards.exists(spark, loc):
-                spark.sql(f"ALTER TABLE {tbl} RECOVER PARTITIONS")
-    return tbl
-
-
-def drop_index(spark: SparkSession, state_dir: str) -> None:
-    """Drop the session catalog entry for an index whose files are being
-    (or have been) deleted.  Data removal is the caller's job; this only
-    prevents a dangling catalog entry from pointing at a dead path."""
-    spark.sql(f"DROP TABLE IF EXISTS {_bands_table_name(state_dir)}")
+def _bands_root(state_dir: str) -> str:
+    return os.path.join(state_dir, "bands")
 
 
 def append_to_index(
     sig: DataFrame, state_dir: str, batch_id: int
 ) -> None:
     """Persist one batch's signatures + band keys — overwrite-idempotent
-    per batch id.  A replayed batch physically deletes its partition
-    directory first (external-table ``DROP PARTITION`` is metadata-only —
-    without the delete, stale files resurface on the next append and
-    double-count the batch).
+    per batch id (a replay deletes the batch's shards first).
 
-    The band rows land as a STAGED per-batch bucketed write (r18, guide
-    §2.6): a throwaway session-local staging table with the SAME bucket
-    spec (``CLUSTERED BY (band_key) INTO BAND_BUCKETS BUCKETS``, same
-    Murmur3 hash on the same column type) writes the bucket-named parquet
-    files directly into the main table's ``batch=<id>`` partition
-    directory, then the partition is registered with ``ADD PARTITION``
-    (metadata-only, under the module DDL lock).  The probe-side table —
-    and therefore the probe plan, including the Exchange-free bucketed
-    hot-bucket aggregation — is byte-identical to the r17 shared
-    ``saveAsTable`` layout; what changes is that appends of DIFFERENT
-    batch ids no longer serialize on one catalog entry's write path, so
-    nightly multi-batch flows overlap them (``dedup_index_incremental``:
-    the former top bench row)."""
+    Crash consistency: the ``batch=<id>`` directory holding the sigs is
+    the batch's commit marker — it is what :func:`list_batch_ids` lists
+    and therefore what a probe reads.  So the marker goes first on
+    replay and comes last on write: delete the sigs, delete the bands,
+    write the bands, write the sigs.  A probe therefore never lists a
+    batch whose bands shard is missing; a sigs write that dies leaves an
+    empty ``sigs`` directory, whose band rows find no signature to join
+    and add no pair."""
     spark = sig.sparkSession
     base = shards.batch_path(state_dir, batch_id)
-    tbl = _ensure_bands_table(spark, state_dir)
-    part_dir = shards.batch_path(
-        os.path.join(_index_loc(state_dir), "bands"), batch_id
+    bands = shards.batch_path(_bands_root(state_dir), batch_id)
+    shards.clear(spark, base)
+    shards.clear(spark, bands)
+    _bands_of(sig).write.parquet(bands)
+    sig.write.parquet(os.path.join(base, "sigs"))
+
+
+def read_signatures(
+    spark: SparkSession, state_dir: str, ids: list[int]
+) -> DataFrame:
+    """(doc_id, sig) of the given batches, read by explicit
+    ``batch=<id>/sigs`` path."""
+    return spark.read.schema(_SIG_SCHEMA).parquet(
+        *[os.path.join(shards.batch_path(state_dir, i), "sigs") for i in ids]
     )
-    if shards.clear(spark, part_dir):
-        with _DDL_LOCK:
-            spark.sql(
-                f"ALTER TABLE {tbl} DROP IF EXISTS PARTITION (batch={batch_id})"
-            )
 
-    def _write_sigs() -> None:
-        sig.write.mode("overwrite").parquet(os.path.join(base, "sigs"))
 
-    def _write_bands() -> None:
-        stg = f"{tbl}_stg_{batch_id}"
-        with _DDL_LOCK:
-            spark.sql(f"DROP TABLE IF EXISTS {stg}")
-        (
-            _bands_of(sig)
-            .write.mode("overwrite")
-            .format("parquet")
-            .option("path", part_dir)
-            .bucketBy(BAND_BUCKETS, "band_key")
-            .sortBy("band_key")
-            .saveAsTable(stg)
+def hot_buckets(
+    spark: SparkSession, state_dir: str, sig: DataFrame, bucket_cap: int,
+    ids: list[int] | None = None,
+) -> DataFrame:
+    """(band, band_key) — the index buckets that
+    ``probe_index(spark, state_dir, sig, bucket_cap, ids)`` skips: the
+    batch's band keys that more than ``bucket_cap`` index rows hold.
+
+    The index rows are first cut to the batch's keys (a left-semi join
+    against the broadcast batch bands), so the occupancy count shuffles
+    batch-proportional rows only; rows of other keys never meet the
+    batch in the probe's candidate join, so leaving them uncounted
+    cannot change the pair set."""
+    if ids is None:
+        ids = list_batch_ids(spark, state_dir)
+    if not ids:
+        return inline_rows(spark, [], "band int, band_key string")
+    return (
+        shards.read_batches(spark, _bands_root(state_dir), ids)
+        .join(
+            F.broadcast(_bands_of(sig).select("band", "band_key")),
+            ["band", "band_key"],
+            "left_semi",
         )
-        with _DDL_LOCK:
-            # external staging table: dropping the entry leaves the files
-            spark.sql(f"DROP TABLE IF EXISTS {stg}")
-            spark.sql(
-                f"ALTER TABLE {tbl} ADD IF NOT EXISTS "
-                f"PARTITION (batch={batch_id}) LOCATION '{part_dir}'"
-            )
-
-    # the two durable writes of one append are independent (different
-    # outputs, both reading the caller's materialized sig) — overlapped
-    # per guide §2.6; DDL stays under the module lock
-    from vector_graph_rag_spark.functions.concurrency import run_overlapped
-
-    run_overlapped([_write_sigs, _write_bands], max_workers=2)
+        .groupBy("band", "band_key")
+        .count()
+        .filter(F.col("count") > bucket_cap)
+        .select("band", "band_key")
+    )
 
 
 def probe_index(
@@ -273,35 +206,33 @@ def probe_index(
     ids: list[int] | None = None,
 ) -> DataFrame:
     """(index_doc_id, new_doc_id, est_jaccard) — every banded collision
-    between the probe batch and ALL indexed shards.  The batch side rides
-    a broadcast against the bucketed band table (no index-side Exchange:
-    the hot-bucket aggregation rides the scan's bucket distribution, the
-    band join and the signature fetch build on broadcast sides) — every
-    shuffle in the plan is batch-proportional, so the probe stays flat as
-    the index grows.
+    between the probe batch and ALL indexed shards.  The batch bands ride
+    a broadcast against the index band scan, and the signature fetch
+    builds on broadcast candidate and batch sides: no index-side
+    Exchange, so every shuffle in the plan is batch-proportional and the
+    probe stays flat as the index grows.
 
     ``bucket_cap``: the LSH skew guard — an index bucket holding more
     than ``cap`` docs is boilerplate/stop-text whose members exact-dedup
     catches first; probing it fans the join out by its full occupancy per
-    matching new doc.  Capped buckets drop from the probe (hot keys are
-    few by definition, so the anti-join side stays broadcast-small), and
-    they also bound the broadcast candidate set at batch bands × cap.
-    At 100 TB pass a cap (the nightly CLI defaults one on); the default
-    None preserves the exact one-shot equivalence contract.
+    matching new doc.  Capped buckets (:func:`hot_buckets`) drop from the
+    probe, which also bounds the broadcast candidate set at batch bands ×
+    cap.  At 100 TB pass a cap (the nightly CLI defaults one on); the
+    default None preserves the exact one-shot equivalence contract.
 
-    The index view is PINNED to the batch ids present at call time: the
-    band scan filters ``batch IN (<ids>)`` (static partition pruning) and
-    the signature read lists those batches' dirs explicitly.  A probe is
-    therefore safe to consume LAZILY after later appends of NEW batch ids
-    — the returned plan can never see a batch that didn't exist when the
-    probe was taken, so callers interleaving probe/append (the nightly
-    flow, the registered incremental query) need no eager materialization
-    between steps.  The guarantee does NOT extend to REPLAYING a batch id
-    the probe already saw: ``append_to_index`` on an existing id deletes
-    and rewrites that batch's band partition and sigs files (the
-    idempotence contract), so an outstanding lazy probe pinned to the old
-    files would hit missing-file failures or stale data — materialize
-    outstanding probes before replaying a batch id (ADVICE r9).
+    The index view is PINNED to the batch ids present at call time: both
+    the band and the signature reads list those batches' dirs
+    explicitly.  A probe is therefore safe to consume LAZILY after later
+    appends of NEW batch ids — the returned plan can never see a batch
+    that didn't exist when the probe was taken, so callers interleaving
+    probe/append (the nightly flow, the registered incremental query)
+    need no eager materialization between steps.  The guarantee does NOT
+    extend to REPLAYING a batch id the probe already saw:
+    ``append_to_index`` on an existing id deletes and rewrites that
+    batch's shards (the idempotence contract), so an outstanding lazy
+    probe pinned to the old files would hit missing-file failures or
+    stale data — materialize outstanding probes before replaying a batch
+    id (ADVICE r9).
 
     ``ids`` (r17): explicit batch-id pin overriding the FS listing — for
     callers that append several batches UP FRONT (overlapped independent
@@ -312,28 +243,20 @@ def probe_index(
     if ids is None:
         ids = list_batch_ids(spark, state_dir)
     if not ids:
-        return sig.sparkSession.createDataFrame(
-            [], "index_doc_id long, new_doc_id long, est_jaccard double"
+        return inline_rows(
+            spark, [], "index_doc_id long, new_doc_id long, est_jaccard double"
         )
-    tbl = _ensure_bands_table(spark, state_dir)
-    idx_bands = spark.table(tbl).filter(F.col("batch").isin(ids))
-    idx_sigs = spark.read.parquet(
-        *[os.path.join(shards.batch_path(state_dir, i), "sigs") for i in ids]
-    )
+    idx_bands = shards.read_batches(spark, _bands_root(state_dir), ids)
+    idx_sigs = read_signatures(spark, state_dir, ids)
+    batch_bands = _bands_of(sig)
     if bucket_cap is not None:
-        # bucketed scan ⇒ this aggregation needs NO Exchange: rows with
-        # one band_key already live in one bucket
-        hot = (
-            idx_bands.groupBy("band", "band_key")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .filter(F.col("__bn") > bucket_cap)
-            .select("band", "band_key")
-        )
-        idx_bands = idx_bands.join(
-            F.broadcast(hot), ["band", "band_key"], "left_anti"
+        batch_bands = batch_bands.join(
+            F.broadcast(hot_buckets(spark, state_dir, sig, bucket_cap, ids)),
+            ["band", "band_key"],
+            "left_anti",
         )
     new_bands = F.broadcast(
-        _bands_of(sig).select(
+        batch_bands.select(
             F.col("doc_id").alias("new_doc_id"), "band", "band_key"
         )
     )

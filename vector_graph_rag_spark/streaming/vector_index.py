@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vector_graph_rag_spark.functions.literals import inline_rows
 from vector_graph_rag_spark.functions.partitioning import ensure_parallel_scan
 from vector_graph_rag_spark.operators.pq import (
     Codebooks,
@@ -162,8 +163,8 @@ def search_index(
 
     ids = list_batch_ids(spark, index_dir)
     if not ids:
-        return spark.createDataFrame(
-            [], f"{query_id} long, vec_id long, adc_dist long, rank int"
+        return inline_rows(
+            spark, [], f"{query_id} long, vec_id long, adc_dist long, rank int"
         )
     queries = queries.filter(F.col(query_vec).isNotNull())
     w_probe = Window.partitionBy("vec_id").orderBy(
@@ -189,8 +190,8 @@ def search_index(
         # collect yields no probe rows AND no query vectors, and adc_score
         # over empty literal arrays fails analysis — the two-collect r16
         # form returned the empty result instead (ADVICE r17)
-        return spark.createDataFrame(
-            [], f"{query_id} long, vec_id long, adc_dist long, rank int"
+        return inline_rows(
+            spark, [], f"{query_id} long, vec_id long, adc_dist long, rank int"
         )
     probed.sort(key=lambda r: (r["vec_id"], r["centroid_id"]))
     probe_rows = [
@@ -206,8 +207,6 @@ def search_index(
     )
     if exclude_tombstoned:
         index = shards.drop_tombstoned(spark, index_dir, index, "vec_id")
-    from vector_graph_rag_spark.functions.literals import inline_rows
-
     pairs = inline_rows(
         spark,
         [(r[query_id], r["centroid_id"]) for r in probe_rows],
