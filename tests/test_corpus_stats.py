@@ -11,9 +11,9 @@ from vector_graph_rag_spark.sources.tables import load_table
 from vector_graph_rag_spark.streaming.corpus_stats import (
     _batch_stats,
     corpus_stats,
-    stream_corpus_stats,
     write_batch_stats,
 )
+from vector_graph_rag_spark.streaming.shards import stream_batches
 
 SF = "/root/testdata/sf0.001"
 COLS = ["doc_id", "source", "text"]
@@ -77,13 +77,20 @@ def test_replay_overwrites_shard_idempotently(spark, tmp_path):
 
 def test_stream_drain_matches_batch(spark, tmp_path):
     """availableNow drain over the parquet files == batch-written shards."""
+    import shutil
+
     state = str(tmp_path / "stats")
-    n = stream_corpus_stats(
-        spark, os.path.join(SF, "documents.parquet"), state, COLS
+    # the file stream source reads a directory: stage the one-file table
+    source = str(tmp_path / "docs")
+    os.makedirs(source)
+    shutil.copy(os.path.join(SF, "documents.parquet"), source)
+    docs = spark.read.parquet(source)
+    n = stream_batches(
+        spark, source, docs.schema, state,
+        lambda batch_df, batch_id: write_batch_stats(batch_df, state, batch_id, COLS),
     )
     assert n >= 1
     got = {r["col"]: r["n_rows"] for r in corpus_stats(spark, state).collect()}
-    docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
     for c in COLS:
         assert got[c] == docs.filter(F.col(c).isNotNull()).count(), c
 

@@ -263,57 +263,6 @@ def test_probe_plan_has_no_index_side_exchange(spark, tmp_path):
         assert all(n.nodeName() != "CartesianProduct" for n, _ in _plan_nodes(df))
 
 
-@pytest.mark.parametrize("fail_at", ["bands", "sigs"])
-def test_failed_append_is_invisible_and_replay_converges(
-    spark, tmp_path, monkeypatch, fail_at
-):
-    """A batch is visible to the probe only once both of its shards
-    exist.  An append that dies at either write leaves the probe's
-    before-state (the dead write leaves its output directory empty, as an
-    aborted Spark write job does), and replaying the batch id then gives
-    the one-shot pair set."""
-    import os
-
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    docs = _docs(spark)
-    state = str(tmp_path / "index")
-    sigs = [
-        batch_signatures(docs.filter(F.col("doc_id") % 3 == b)).localCheckpoint(eager=True)
-        for b in range(3)
-    ]
-    for b in range(2):
-        append_to_index(sigs[b], state, b)
-    before = sorted(map(tuple, probe_index(spark, state, sigs[2]).collect()))
-    assert before
-
-    target = {
-        "bands": os.path.join("bands", "batch=2"),
-        "sigs": os.path.join("batch=2", "sigs"),
-    }[fail_at]
-    real_parquet = DataFrameWriter.parquet
-
-    def dying_parquet(self, path, *args, **kwargs):
-        if path.endswith(target):
-            os.makedirs(path)
-            raise RuntimeError(f"injected failure writing {path}")
-        return real_parquet(self, path, *args, **kwargs)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", dying_parquet)
-    with pytest.raises(RuntimeError, match="injected"):
-        append_to_index(sigs[2], state, 2)
-    monkeypatch.undo()
-    assert sorted(map(tuple, probe_index(spark, state, sigs[2]).collect())) == before
-
-    append_to_index(sigs[2], state, 2)  # replay the failed batch id
-    everything = batch_signatures(docs)
-    found = {
-        tuple(sorted((r["index_doc_id"], r["new_doc_id"]))): round(r["est_jaccard"], 9)
-        for r in probe_index(spark, state, everything).collect()
-    }
-    assert found == _full_corpus_pairs(spark)
-
-
 def test_incremental_equivalence_fuzz(spark):
     """Random small corpora (with planted near-dups) under random
     shardings: the incremental flow must find exactly the same pair set

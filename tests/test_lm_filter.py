@@ -304,35 +304,6 @@ def test_dsir_weights_stable_across_parallelism(spark, corpus):
         assert a[d] == pytest.approx(b[d], rel=1e-12)
 
 
-def test_quality_score_stream_equals_batch(spark, corpus, tmp_path):
-    """Streaming scoring with a frozen model must reproduce the batch
-    scores (per-doc aggregation is batch-local), over both single-file and
-    directory datasets."""
-    from vector_graph_rag_spark.operators.lm_filter import (
-        quality_score_stream,
-        quality_scores,
-        train_quality_classifier,
-    )
-
-    docs, _ = corpus
-    model = train_quality_classifier(
-        docs.withColumn("hq", docs.source == "src0"), "hq",
-        n_buckets=128, iters=3,
-    )
-    batch = {r["doc_id"]: r["score"] for r in quality_scores(docs, model).collect()}
-
-    # directory dataset (the production shape)
-    ddir = str(tmp_path / "docs_dir")
-    docs.repartition(3).write.parquet(ddir)
-    out = str(tmp_path / "scored")
-    n_batches = quality_score_stream(spark, ddir, model, out)
-    assert n_batches >= 1
-    got = {r["doc_id"]: r["score"] for r in spark.read.parquet(out).collect()}
-    assert set(got) == set(batch)
-    for d, s in batch.items():
-        assert got[d] == pytest.approx(s, rel=1e-9)
-
-
 def test_dsir_select_is_deterministic_topn(spark, corpus):
     docs, _ = corpus
     w = dsir_importance_weights(

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 
 import vector_graph_rag_spark
 
@@ -69,12 +70,15 @@ BANNED_ROW_UDF_NAMES = {"udf", "UserDefinedFunction"}
 # request path (API and graph layers) and the shard stores
 NO_PYTHON_RDD_PACKAGES = ("api/", "graph/", "streaming/")
 
-# source text -> the one module (package-relative) allowed to contain it:
-# the Hadoop FS handle belongs to the batch-shard store, the under-parallel
-# scan guard to its helper.  A second copy fails the test.
+# source text (or regex) -> the one module (package-relative) allowed to
+# contain it: the Hadoop FS handle and the shard layout (a hand-built
+# ``batch={id}`` path or a ``batch=*`` glob) belong to the batch-shard
+# store, the under-parallel scan guard to its helper.  A second copy fails
+# the test.
 SINGLE_OWNER_PATTERNS = {
     "getFileSystem(": "streaming/shards.py",
     "getNumPartitions() < max(2": "functions/partitioning.py",
+    re.compile(r"batch=[{*]"): "streaming/shards.py",
 }
 
 
@@ -182,7 +186,7 @@ def test_single_owner_patterns_have_one_home():
                 path = os.path.join(dirpath, fn)
                 src = open(path).read()
                 for pat in SINGLE_OWNER_PATTERNS:
-                    if pat in src:
+                    if (pat.search(src) if isinstance(pat, re.Pattern) else pat in src):
                         holders[pat].append(os.path.relpath(path, SRC_ROOT))
     for pat, owner in SINGLE_OWNER_PATTERNS.items():
         assert holders[pat] == [owner], (

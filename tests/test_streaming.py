@@ -114,9 +114,9 @@ def test_stream_lm_counts_equal_batch_training(spark, tmp_path):
     from vector_graph_rag_spark.sources.tables import load_table
     from vector_graph_rag_spark.streaming.lm_counts import (
         lm_from_counts,
-        stream_lm_counts,
         write_batch_counts,
     )
+    from vector_graph_rag_spark.streaming.shards import stream_batches
 
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     import glob
@@ -131,7 +131,10 @@ def test_stream_lm_counts_equal_batch_training(spark, tmp_path):
         part = glob.glob(f"{tmp}/part-*.parquet")[0]
         shutil.move(part, f"{docs_dir}/shard{i}.parquet")
     state = str(tmp_path / "lm_state")
-    n = stream_lm_counts(spark, docs_dir, state)
+    n = stream_batches(
+        spark, docs_dir, docs.schema, state,
+        lambda batch_df, batch_id: write_batch_counts(batch_df, state, batch_id),
+    )
     assert n == 3  # one micro-batch per shard file
 
     model_s = lm_from_counts(spark, state)

@@ -23,7 +23,7 @@ TAGS = {
     "corpus_stats_registers": "b3: overlapped shard writes",
     "corpus_quantiles_registers": "b3: overlapped shard writes",
     "cm_frequency_registers": "b3: overlapped writes + HH threshold off the driver",
-    "lm_counts_incremental": "b3: overlapped count-shard writes",
+    "lm_counts_incremental": "b3: overlapped batches; uni/bi in commit order",
     "colbert_maxsim_topk": "b3: row-local MaxSim (4->2 Exchange)",
     "quality_classifier_scores": "b3: fused grouped_doc_features; b2: lazy grouped checkpoint",
     "binary_auc": "b3: fused grouped_doc_features",

@@ -416,6 +416,7 @@ def main() -> None:
             quantize_embeddings,
             train_pq_codebooks,
         )
+        from vector_graph_rag_spark.streaming import shards
         from vector_graph_rag_spark.streaming import vector_index as VI
 
         from vector_graph_rag_spark.operators.pq import PQ_DIM
@@ -431,13 +432,7 @@ def main() -> None:
             # a doc_id already indexed is a canonical re-run, not new data:
             # skip it (idempotent nightly re-runs; column-pruned vec_id read)
             seen = (
-                spark.read.option("basePath", args.vector_index)
-                .parquet(
-                    *[
-                        os.path.join(args.vector_index, f"batch={i}")
-                        for i in v_ids
-                    ]
-                )
+                shards.read_batches(spark, args.vector_index, v_ids)
                 .select("vec_id")
                 .distinct()
             )
@@ -495,28 +490,22 @@ def main() -> None:
     # by comparing the CANDIDATE shard against the last promoted one before
     # the store, the stats history, or the training shards see a single row.
     if args.promote:
-        import glob as _glob
         import shutil as _shutil
         import tempfile as _tempfile
 
         from vector_graph_rag_spark.streaming.corpus_stats import (
             corpus_quantiles,
             corpus_stats,
+            list_batch_ids,
             quantile_drift,
             stats_drift,
             write_batch_quantiles,
             write_batch_stats,
         )
 
-        promoted_shards = sorted(
-            _glob.glob(os.path.join(args.stats, "batch=*")),
-            key=lambda p: int(p.rsplit("=", 1)[1]),
-        )
-        q_shards = sorted(
-            _glob.glob(os.path.join(args.stats + "_quantiles", "batch=*")),
-            key=lambda p: int(p.rsplit("=", 1)[1]),
-        )
-        if promoted_shards:  # first-ever run has nothing to drift against
+        promoted_ids = list_batch_ids(spark, args.stats)
+        q_ids = list_batch_ids(spark, args.stats + "_quantiles")
+        if promoted_ids:  # first-ever run has nothing to drift against
             cand = _tempfile.mkdtemp(prefix="vgr_promote_")
             try:
                 write_batch_stats(
@@ -525,7 +514,7 @@ def main() -> None:
                 flagged = (
                     stats_drift(
                         corpus_stats(spark, cand),
-                        corpus_stats(spark, promoted_shards[-1]),
+                        corpus_stats(spark, args.stats, ids=promoted_ids[-1:]),
                     )
                     .filter(~F.col("ok"))
                     .collect()
@@ -537,13 +526,15 @@ def main() -> None:
                 # distribution-shape gate: a feed can keep totals flat
                 # while moving P50/P99 (truncation + duplication); the
                 # quantile brackets catch what additive counters mask
-                if q_shards:
+                if q_ids:
                     qcand = os.path.join(cand, "quantiles")
                     write_batch_quantiles(stage, qcand, 0, ["n_chars"])
                     qflagged = (
                         quantile_drift(
                             corpus_quantiles(spark, qcand),
-                            corpus_quantiles(spark, q_shards[-1]),
+                            corpus_quantiles(
+                                spark, args.stats + "_quantiles", ids=q_ids[-1:]
+                            ),
                         )
                         .filter(~F.col("ok"))
                         .collect()
@@ -734,18 +725,13 @@ def main() -> None:
         counts["store_chain_length"] = store.chain_length()
 
     if args.stats is not None:
-        import glob as _glob
-
         from vector_graph_rag_spark.streaming.corpus_stats import (
             corpus_stats,
+            list_batch_ids,
             write_batch_stats,
         )
 
-        existing = sorted(
-            _glob.glob(os.path.join(args.stats, "batch=*")),
-            key=lambda p: int(p.rsplit("=", 1)[1]),
-        )
-        existing_ids = [int(p.rsplit("=", 1)[1]) for p in existing]
+        existing_ids = list_batch_ids(spark, args.stats)
         # shard id: the store version when --store is on (reruns of the
         # same version overwrite their own shard — idempotent), else
         # max(existing)+1.  NOT len(existing): store versions and
@@ -762,7 +748,7 @@ def main() -> None:
         # would never show against the whole-history merge); a rerun that
         # overwrites its own shard (batch_id already present) must compare
         # against the shard BEFORE it, never against itself
-        prior = [p for p in existing if int(p.rsplit("=", 1)[1]) != batch_id]
+        prior = [i for i in existing_ids if i != batch_id]
         write_batch_stats(
             stage, args.stats, batch_id, ["doc_id", "source", "text"]
         )
@@ -803,10 +789,8 @@ def main() -> None:
         if prior:
             from vector_graph_rag_spark.streaming.corpus_stats import stats_drift
 
-            prev_run = corpus_stats(spark, prior[-1])
-            this_run = corpus_stats(
-                spark, os.path.join(args.stats, f"batch={batch_id}")
-            )
+            prev_run = corpus_stats(spark, args.stats, ids=prior[-1:])
+            this_run = corpus_stats(spark, args.stats, ids=[batch_id])
             flagged = stats_drift(this_run, prev_run).filter(~F.col("ok")).collect()
             counts["stats_drift_flags"] = [
                 f"{r['col']}.{r['metric']}: {r['prev']} -> {r['cur']}"

@@ -855,36 +855,3 @@ def binary_auc(
     """
     return binary_auc_with_counts(df, score_col, label_col, round_to)[0]
 
-
-def quality_score_stream(
-    spark, docs_path: str, model: dict, out_path: str
-) -> int:
-    """Score a continuous document stream with a pre-trained classifier —
-    the deployment shape: train nightly on labeled exemplars, score the
-    crawl firehose as shards land.  Each micro-batch runs the exact batch
-    :func:`quality_scores` plan (per-document aggregation is batch-local,
-    so stream == batch bit-for-bit up to float add order) and appends to
-    the parquet sink.  Returns micro-batches processed.  Bounded drain
-    (``availableNow``) for tests/backfills; a live pipeline adds a
-    ``checkpointLocation`` for exactly-once file tracking.
-    """
-    from vector_graph_rag_spark.streaming.ingest import file_stream
-
-    n_batches = [0]
-
-    def _score(batch_df, batch_id: int) -> None:
-        quality_scores(batch_df, model).write.mode("append").parquet(out_path)
-        n_batches[0] += 1
-
-    q = (
-        file_stream(spark, docs_path)
-        .writeStream.foreachBatch(_score)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    return n_batches[0]

@@ -533,7 +533,10 @@ FROM vals GROUP BY col"""
     ),
 )
 def corpus_stats_registers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_graph_rag_spark.streaming.corpus_stats import write_batch_stats
+    from vector_graph_rag_spark.streaming.corpus_stats import (
+        merge_registers,
+        write_batch_stats,
+    )
 
     d = load_table(spark, sf_dir, "documents").select(*_HLL_COLS)
     state = tempfile.mkdtemp(prefix="vgr_hllstate_")
@@ -549,12 +552,7 @@ def corpus_stats_registers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for b in range(3)
             ]
         )
-        shards = spark.read.parquet(state)
-        regs = (
-            shards.filter(F.col("bucket") >= 0)
-            .groupBy("col", "bucket")
-            .agg(F.max("rho").alias("rho"))
-        )
+        regs, counters = merge_registers(spark, state)
         reg_rows = regs.select(
             "col",
             F.lit("rho").alias("metric"),
@@ -579,11 +577,6 @@ def corpus_stats_registers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(-1).cast("long").alias("bucket"),
                 F.col("occupied").cast("long").alias("val"),
             )
-        )
-        counters = (
-            shards.filter(F.col("bucket") == -1)
-            .groupBy("col")
-            .agg(F.sum("n_rows").alias("n_rows"), F.sum("n_bytes").alias("n_bytes"))
         )
         counter_rows = counters.select(
             "col",
@@ -790,6 +783,7 @@ FROM b GROUP BY 1, 2"""
 )
 def corpus_quantiles_registers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_graph_rag_spark.streaming.corpus_stats import (
+        merge_quantiles,
         write_batch_quantiles,
     )
 
@@ -807,12 +801,7 @@ def corpus_quantiles_registers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for b in range(3)
             ]
         )
-        return (
-            spark.read.parquet(state)
-            .groupBy("col", "qb")
-            .agg(F.sum("cnt").alias("cnt"))
-            .localCheckpoint(eager=True)
-        )
+        return merge_quantiles(spark, state).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(state, ignore_errors=True)
 
@@ -864,7 +853,10 @@ FROM pos GROUP BY 1, 2, 3"""
     ),
 )
 def cm_frequency_registers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_graph_rag_spark.streaming.freq_sketch import write_batch_freq
+    from vector_graph_rag_spark.streaming.freq_sketch import (
+        cm_counters,
+        write_batch_freq,
+    )
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", *_CM_COLS)
     state = tempfile.mkdtemp(prefix="vgr_cmstate_")
@@ -880,13 +872,7 @@ def cm_frequency_registers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for b in range(3)
             ]
         )
-        return (
-            spark.read.parquet(state)
-            .filter(F.col("kind") == "cm")
-            .groupBy("col", "row", "pos")
-            .agg(F.sum("cnt").alias("cnt"))
-            .localCheckpoint(eager=True)
-        )
+        return cm_counters(spark, state).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(state, ignore_errors=True)
 

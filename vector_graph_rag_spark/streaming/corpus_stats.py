@@ -19,10 +19,10 @@ state == one pass".  Here the sketch IS its register table:
   bits -> rho (leading-zero count + 1, via exact integer bit-length —
   no float log2 anywhere).
 - shard state: one ``(col, bucket, rho)`` row per occupied bucket
-  (≤ 4096 rows per tracked column) under
-  ``state_dir/batch=<batch_id>``, ``mode=overwrite`` — a REPLAYED batch
-  id overwrites its own shard, so delivery is idempotent under the
-  stream's checkpoint (same contract as ``streaming/lm_counts``).
+  (≤ 4096 rows per tracked column), one ``streaming/shards`` batch shard
+  per micro-batch under that module's contract — a replayed batch id
+  replaces its own shard, so delivery through ``shards.stream_batches``
+  is idempotent under the stream's checkpoint.
 - merge: ``groupBy(col, bucket).max(rho)`` then the standard corrected
   estimate (linear counting below 2.5m with empty buckets) — a
   shard-count-sized aggregation; the corpus is never re-read.
@@ -34,17 +34,22 @@ ride the same shards exactly.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_graph_rag_spark.functions.hashing import hash60
+from vector_graph_rag_spark.streaming import shards
+# the store's listing IS the shard store's
+from vector_graph_rag_spark.streaming.shards import list_batch_ids
 
 _P = 12
 _M = 1 << _P  # 4096 buckets
 _RHO_BITS = 48  # 60-bit hash minus the bucket bits
 _ALPHA = 0.7213 / (1.0 + 1.079 / _M)
+
+_STATS_SCHEMA = "col string, bucket long, rho long, n_rows long, n_bytes long"
+_QUANTILE_SCHEMA = "col string, qb long, cnt long"
 
 
 def _registers(df: DataFrame, col: str) -> DataFrame:
@@ -112,47 +117,45 @@ def _batch_stats(batch_df: DataFrame, cols: list[str]) -> DataFrame:
 def write_batch_stats(
     batch_df: DataFrame, state_dir: str, batch_id: int, cols: list[str]
 ) -> None:
-    """Sketch one micro-batch and overwrite its shard — idempotent per
-    batch id (exposed for tests and backfills; the stream calls this)."""
-    _batch_stats(batch_df, cols).write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch={batch_id}")
+    """Sketch one micro-batch and replace its shard (the shard store's
+    replay contract)."""
+    stats = _batch_stats(batch_df, cols)
+    shards.write_batch(
+        batch_df.sparkSession,
+        batch_id,
+        [(state_dir, lambda path: stats.write.parquet(path))],
     )
 
 
-def stream_corpus_stats(
-    spark: SparkSession,
-    docs_dir: str,
-    state_dir: str,
-    cols: list[str],
-) -> int:
-    """Stream parquet files into the register-shard tree; returns
-    micro-batches processed.  Bounded drain (``availableNow``) for tests
-    and backfills; a live pipeline adds a ``checkpointLocation`` so batch
-    ids are stable across restarts and replays stay idempotent."""
-    from vector_graph_rag_spark.streaming.ingest import file_stream
-
-    n_batches = [0]
-
-    def _write(batch_df, batch_id: int) -> None:
-        write_batch_stats(batch_df, state_dir, batch_id, cols)
-        n_batches[0] += 1
-
-    q = (
-        file_stream(spark, docs_dir)
-        .writeStream.foreachBatch(_write)
-        .trigger(availableNow=True)
-        .start()
+def merge_registers(
+    spark: SparkSession, state_dir: str, ids: list[int] | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The merged sketch of the given batches (every listed batch when
+    ``ids`` is None): ``(col, bucket, rho)`` register maxima and
+    ``(col, n_rows, n_bytes, n_shards)`` counter sums."""
+    rows = shards.read_declared(spark, state_dir, _STATS_SCHEMA, ids)
+    regs = (
+        rows.filter(F.col("bucket") >= 0)
+        .groupBy("col", "bucket")
+        .agg(F.max("rho").alias("rho"))
     )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    return n_batches[0]
+    counters = (
+        rows.filter(F.col("bucket") == -1)
+        .groupBy("col")
+        .agg(
+            F.sum("n_rows").alias("n_rows"),
+            F.sum("n_bytes").alias("n_bytes"),
+            F.count("*").alias("n_shards"),
+        )
+    )
+    return regs, counters
 
 
-def corpus_stats(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Fold the shard tree into per-column corpus statistics:
+def corpus_stats(
+    spark: SparkSession, state_dir: str, ids: list[int] | None = None
+) -> DataFrame:
+    """Fold the given batches (every listed batch when ``ids`` is None)
+    into per-column corpus statistics:
     ``(col, distinct_est, n_rows, n_bytes, n_shards)``.
 
     Register merge is ``max`` per (col, bucket) — associative and
@@ -161,12 +164,7 @@ def corpus_stats(spark: SparkSession, state_dir: str) -> DataFrame:
     corrected HLL: raw ``alpha * m^2 / sum(2^-rho)`` with empty buckets
     contributing 2^0, switched to linear counting ``m * ln(m / zeros)``
     below 2.5m when empty buckets remain."""
-    shards = spark.read.parquet(state_dir)
-    regs = (
-        shards.filter(F.col("bucket") >= 0)
-        .groupBy("col", "bucket")
-        .agg(F.max("rho").alias("rho"))
-    )
+    regs, counters = merge_registers(spark, state_dir, ids)
     est = regs.groupBy("col").agg(
         F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("s_present"),
         F.count("*").alias("occupied"),
@@ -177,15 +175,6 @@ def corpus_stats(spark: SparkSession, state_dir: str) -> DataFrame:
         (raw <= 2.5 * _M) & (zeros > 0),
         F.lit(float(_M)) * F.log(F.lit(float(_M)) / zeros),
     ).otherwise(raw)
-    counters = (
-        shards.filter(F.col("bucket") == -1)
-        .groupBy("col")
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("n_bytes").alias("n_bytes"),
-            F.count("*").alias("n_shards"),
-        )
-    )
     return (
         counters.join(
             est.select("col", F.round(corrected).cast("long").alias("distinct_est")),
@@ -302,24 +291,41 @@ def qbucket_bounds(qb: int) -> tuple[int, int]:
 def write_batch_quantiles(
     batch_df: DataFrame, state_dir: str, batch_id: int, cols: list[str]
 ) -> None:
-    """Bucket-count one micro-batch's numeric columns and overwrite its
-    shard — idempotent per batch id (the corpus_stats shard contract)."""
+    """Bucket-count one micro-batch's numeric columns and replace its
+    shard (the shard store's replay contract)."""
     out = None
     for c in cols:
         p = _qbuckets(batch_df, c).select(
             F.lit(c).alias("col"), "qb", F.col("cnt").cast("long").alias("cnt")
         )
         out = p if out is None else out.unionByName(p)
-    out.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch={batch_id}")
+    shards.write_batch(
+        batch_df.sparkSession,
+        batch_id,
+        [(state_dir, lambda path: out.write.parquet(path))],
+    )
+
+
+def merge_quantiles(
+    spark: SparkSession, state_dir: str, ids: list[int] | None = None
+) -> DataFrame:
+    """``(col, qb, cnt)`` — the summed bucket counts of the given batches
+    (every listed batch when ``ids`` is None)."""
+    return (
+        shards.read_declared(spark, state_dir, _QUANTILE_SCHEMA, ids)
+        .groupBy("col", "qb")
+        .agg(F.sum("cnt").alias("cnt"))
     )
 
 
 def corpus_quantiles(
-    spark: SparkSession, state_dir: str, qs: tuple = (0.5, 0.9, 0.99)
+    spark: SparkSession,
+    state_dir: str,
+    qs: tuple = (0.5, 0.9, 0.99),
+    ids: list[int] | None = None,
 ) -> DataFrame:
-    """Fold the quantile-shard tree into per-column percentile bounds:
-    ``(col, q, lo, hi, n_rows)``.
+    """Fold the given quantile shards (every listed batch when ``ids`` is
+    None) into per-column percentile bounds: ``(col, q, lo, hi, n_rows)``.
 
     Merge = SUM of bucket counts per (col, qb) — additive, so the merged
     histogram is EXACTLY the single-pass histogram for any sharding or
@@ -328,12 +334,7 @@ def corpus_quantiles(
     the true q-quantile: the reported bucket provably contains the value
     of rank ceil(q * n) (nearest-rank definition), so hi/lo <= 1 +
     2^-SUBBITS."""
-    merged = (
-        spark.read.parquet(state_dir)
-        .groupBy("col", "qb")
-        .agg(F.sum("cnt").alias("cnt"))
-        .collect()
-    )
+    merged = merge_quantiles(spark, state_dir, ids).collect()
     by_col: dict[str, list] = {}
     for r in merged:
         by_col.setdefault(r["col"], []).append((int(r["qb"]), int(r["cnt"])))

@@ -139,24 +139,21 @@ def _bands_root(state_dir: str) -> str:
 def append_to_index(
     sig: DataFrame, state_dir: str, batch_id: int
 ) -> None:
-    """Persist one batch's signatures + band keys — overwrite-idempotent
-    per batch id (a replay deletes the batch's shards first).
-
-    Crash consistency: the ``batch=<id>`` directory holding the sigs is
-    the batch's commit marker — it is what :func:`list_batch_ids` lists
-    and therefore what a probe reads.  So the marker goes first on
-    replay and comes last on write: delete the sigs, delete the bands,
-    write the bands, write the sigs.  A probe therefore never lists a
-    batch whose bands shard is missing; a sigs write that dies leaves an
-    empty ``sigs`` directory, whose band rows find no signature to join
-    and add no pair."""
-    spark = sig.sparkSession
-    base = shards.batch_path(state_dir, batch_id)
-    bands = shards.batch_path(_bands_root(state_dir), batch_id)
-    shards.clear(spark, base)
-    shards.clear(spark, bands)
-    _bands_of(sig).write.parquet(bands)
-    sig.write.parquet(os.path.join(base, "sigs"))
+    """Persist one batch's signatures + band keys in the shard store's
+    commit order (``shards.write_batch``): the ``batch=<id>`` directory
+    holding the sigs is the batch's commit marker — it is what
+    :func:`list_batch_ids` lists and therefore what a probe reads — so
+    the bands shard is replaced first and the sigs are published last.
+    A probe therefore never lists a batch whose bands shard is missing,
+    and a replayed batch id is exactly-once."""
+    shards.write_batch(
+        sig.sparkSession,
+        batch_id,
+        [
+            (_bands_root(state_dir), lambda path: _bands_of(sig).write.parquet(path)),
+            (state_dir, lambda path: sig.write.parquet(os.path.join(path, "sigs"))),
+        ],
+    )
 
 
 def read_signatures(

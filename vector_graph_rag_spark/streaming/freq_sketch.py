@@ -11,8 +11,9 @@ shard with the two standard guarantees:
 
 - **Count-Min counters** (Cormode & Muthukrishnan 2005): d=4 hash rows ×
   w=2048 counters per tracked column.  Counters are ADDITIVE, so shard
-  merge is a SUM — exactly sharding- and replay-invariant (the
-  ``corpus_stats`` shard contract), and the counter table reproduces
+  merge is a SUM — exactly sharding-invariant, and replay-invariant
+  under the ``streaming/shards`` contract (a replayed batch id replaces
+  its own shard).  The counter table reproduces
   bit-for-bit in DuckDB (md5-derived universal hashes, the minhash
   parameter family).  ``min`` over the d rows upper-bounds any value's
   true count; the bound exceeds truth by ≤ εN w.h.p. (ε ≈ e/w).
@@ -32,8 +33,6 @@ downstream consumers see honest brackets, not point guesses.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,10 +41,17 @@ from vector_graph_rag_spark.functions.hashing import (
     hash60,
     seeded_hash60_from_base,
 )
+from vector_graph_rag_spark.streaming import shards
+# the store's listing IS the shard store's
+from vector_graph_rag_spark.streaming.shards import list_batch_ids
 
 CM_DEPTH = 4
 CM_WIDTH = 2048
 HH_M = 64  # candidate threshold divisor: shard count > rows/m
+
+_FREQ_SCHEMA = (
+    "col string, kind string, row long, pos long, value string, cnt long"
+)
 
 
 def _cm_counts(df: DataFrame, col: str) -> DataFrame:
@@ -72,8 +78,9 @@ def _cm_counts(df: DataFrame, col: str) -> DataFrame:
 def write_batch_freq(
     batch_df: DataFrame, state_dir: str, batch_id: int, cols: list[str]
 ) -> None:
-    """One shard per micro-batch (overwrite-idempotent): the CM counter
-    rows plus the shard's >rows/m candidate values.
+    """One shard per micro-batch, replaced on replay (the shard store's
+    contract): the CM counter rows plus the shard's >rows/m candidate
+    values.
 
     Schema: (col, kind, row, pos, value, cnt) — kind='cm' rows carry
     (row, pos, cnt); kind='hh' rows carry (value, cnt)."""
@@ -110,8 +117,21 @@ def write_batch_freq(
         )
         part = cm.unionByName(hh)
         out = part if out is None else out.unionByName(part)
-    out.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch={batch_id}")
+    shards.write_batch(
+        batch_df.sparkSession,
+        batch_id,
+        [(state_dir, lambda path: out.write.parquet(path))],
+    )
+
+
+def cm_counters(spark: SparkSession, state_dir: str) -> DataFrame:
+    """``(col, row, pos, cnt)`` — the merged Count-Min counter table (the
+    SUM over every listed shard)."""
+    return (
+        shards.read_declared(spark, state_dir, _FREQ_SCHEMA)
+        .filter(F.col("kind") == "cm")
+        .groupBy("col", "row", "pos")
+        .agg(F.sum("cnt").alias("cnt"))
     )
 
 
@@ -121,10 +141,8 @@ def cm_estimate(spark: SparkSession, state_dir: str, col: str, values: list[str]
     table is ≤ d·w rows per column."""
     merged = {
         (int(r["row"]), int(r["pos"])): int(r["cnt"])
-        for r in spark.read.parquet(state_dir)
-        .filter((F.col("col") == col) & (F.col("kind") == "cm"))
-        .groupBy("row", "pos")
-        .agg(F.sum("cnt").alias("cnt"))
+        for r in cm_counters(spark, state_dir)
+        .filter(F.col("col") == col)
         .collect()
     }
     import hashlib
@@ -157,9 +175,9 @@ def corpus_heavy_hitters(
     Ranked by ``cm_upper`` desc, ties by value; ``top`` per column.  All
     driver-side arithmetic runs over bounded state (≤ m values and d·w
     counters per shard per column)."""
-    shards = spark.read.parquet(state_dir)
     cand = (
-        shards.filter(F.col("kind") == "hh")
+        shards.read_declared(spark, state_dir, _FREQ_SCHEMA)
+        .filter(F.col("kind") == "hh")
         .groupBy("col", "value")
         .agg(F.sum("cnt").alias("cnt_lower"))
         .collect()

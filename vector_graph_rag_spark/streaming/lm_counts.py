@@ -9,20 +9,18 @@ counts, aggregate at model-build time.
 
 Design (append-only shard layout, not read-modify-write):
 
-- Each micro-batch writes its unigram/bigram count tables to
-  ``state_dir/{uni,bi}/batch=<batch_id>`` with ``mode=overwrite`` — a
-  REPLAYED batch id overwrites its own shard, so delivery is idempotent
-  under the stream's checkpoint (the same guarantee Structured Streaming's
-  file sink gives; a read-modify-write merge would double-count on
-  replay).
-- ``lm_from_counts`` reads the shard tree and aggregates (``groupBy`` sum)
-  into exactly the tables ``train_bigram_lm`` builds — counts are
+- Each micro-batch writes its unigram and bigram count tables as
+  ``streaming/shards`` batch shards, ``state_dir/{uni,bi}/batch=<id>``,
+  under that module's contract: a replayed batch id replaces its own
+  shards, and the unigram shard is the batch's commit marker (bigrams
+  are written first), so ``lm_from_counts`` never sees half a batch.
+  A stream drives the writer through ``shards.stream_batches``.
+- ``lm_from_counts`` reads the marked batches and aggregates (``groupBy``
+  sum) into exactly the tables ``train_bigram_lm`` builds — counts are
   integers, so the derived model is BIT-IDENTICAL to batch training on the
   union corpus (test-pinned: cross-entropy scores equal exactly, not
   approximately).
-- Shard files are vocab-sized, not corpus-sized; compaction (periodically
-  rewriting the shard tree as one aggregated table under a new batch dir)
-  is the same maintenance shape as ``sources/catalog.compact_graph``.
+- Shard files are vocab-sized, not corpus-sized.
 
 Scale: per micro-batch cost is one map-side-combined count over the batch;
 model-build cost is a vocab-sized aggregation over shards.  The corpus is
@@ -37,73 +35,46 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_graph_rag_spark.operators.lm_filter import _bigrams, _unigrams
+from vector_graph_rag_spark.streaming import shards
+
+
+_UNI_SCHEMA = "tok string, c_uni long"
+_BI_SCHEMA = "prev string, tok string, c_bi long"
+
+
+def _roots(state_dir: str) -> tuple[str, str]:
+    return os.path.join(state_dir, "uni"), os.path.join(state_dir, "bi")
+
+
+def list_batch_ids(spark: SparkSession, state_dir: str) -> list[int]:
+    """Committed batch ids: the listing of the unigram (marker) tree."""
+    return shards.list_batch_ids(spark, _roots(state_dir)[0])
 
 
 def write_batch_counts(
     batch_df: DataFrame, state_dir: str, batch_id: int, text_col: str = "text"
 ) -> None:
-    """Count one micro-batch and overwrite its shard — idempotent per
-    batch id (exposed for tests and backfills; the stream calls this).
-    The unigram and bigram count writes land in DISJOINT dirs with no
-    read between them — overlapped (guide §2.6, r18) so the second
-    count's scan back-fills the first write's committer tail."""
-    from vector_graph_rag_spark.functions.concurrency import run_overlapped
-
+    """Count one micro-batch and replace its shards in the shard store's
+    commit order (bigrams, then the unigram marker)."""
+    uni_root, bi_root = _roots(state_dir)
     uni = _unigrams(batch_df, text_col).groupBy("tok").agg(
         F.count("*").alias("c_uni")
     )
     bi = _bigrams(batch_df, text_col).groupBy("prev", "tok").agg(
         F.count("*").alias("c_bi")
     )
-    run_overlapped(
+    shards.write_batch(
+        batch_df.sparkSession,
+        batch_id,
         [
-            lambda: uni.write.mode("overwrite").parquet(
-                os.path.join(state_dir, "uni", f"batch={batch_id}")
-            ),
-            lambda: bi.write.mode("overwrite").parquet(
-                os.path.join(state_dir, "bi", f"batch={batch_id}")
-            ),
-        ]
+            (bi_root, lambda path: bi.write.parquet(path)),
+            (uni_root, lambda path: uni.write.parquet(path)),
+        ],
     )
-
-
-def stream_lm_counts(
-    spark: SparkSession,
-    docs_dir: str,
-    state_dir: str,
-    text_col: str = "text",
-    max_files_per_trigger: int = 1,
-) -> int:
-    """Stream parquet document files into the count-shard tree; returns
-    micro-batches processed.  Bounded drain (``availableNow``) for tests
-    and backfills; a live pipeline adds a ``checkpointLocation`` so batch
-    ids are stable across restarts and replays stay idempotent.
-    """
-    schema = spark.read.parquet(docs_dir).schema
-    n_batches = [0]
-
-    def _write(batch_df, batch_id: int) -> None:
-        write_batch_counts(batch_df, state_dir, batch_id, text_col)
-        n_batches[0] += 1
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-        .writeStream.foreachBatch(_write)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    return n_batches[0]
 
 
 def lm_from_counts(spark: SparkSession, state_dir: str, alpha: float = 0.1) -> dict:
-    """Aggregate the shard tree into the exact ``train_bigram_lm`` model
+    """Aggregate the committed shards into the exact ``train_bigram_lm`` model
     dict — same tables, same smoothing arithmetic, bit-identical scores."""
     # lazy checkpoints (r17): uni_counts feeds the totals collect AND the
     # p_uni projection; bi feeds the context agg AND the join side — each
@@ -111,14 +82,16 @@ def lm_from_counts(spark: SparkSession, state_dir: str, alpha: float = 0.1) -> d
     # ngram_jaccard_pairs repeated-subtree finding).  The totals collect
     # below (still inside this call, before any scratch cleanup)
     # materializes uni_counts; the caller's first action materializes bi.
+    uni_root, bi_root = _roots(state_dir)
+    ids = list_batch_ids(spark, state_dir)
     uni_counts = (
-        spark.read.parquet(os.path.join(state_dir, "uni"))
+        shards.read_declared(spark, uni_root, _UNI_SCHEMA, ids)
         .groupBy("tok")
         .agg(F.sum("c_uni").alias("c_uni"))
         .localCheckpoint(eager=False)
     )
     bi = (
-        spark.read.parquet(os.path.join(state_dir, "bi"))
+        shards.read_declared(spark, bi_root, _BI_SCHEMA, ids)
         .groupBy("prev", "tok")
         .agg(F.sum("c_bi").alias("c_bi"))
         .localCheckpoint(eager=False)

@@ -1,12 +1,14 @@
 """Batch-shard store — the one owner of the shard-tree format and its
-lifecycle behind the incremental dedup, IVF-PQ and term indexes (the
-Milvus sealed-segment / delete-delta / compaction lifecycle, PAPER.md
-§1.2).  The stores decide WHAT a shard holds; this module decides where
-it lives and how it is replaced, deleted and folded.
+lifecycle behind the incremental dedup, IVF-PQ and term indexes and the
+LM-count, corpus-stats and frequency sketch registers (the Milvus
+sealed-segment / delete-delta / compaction lifecycle, PAPER.md §1.2).
+The stores decide WHAT a shard holds; this module decides where it
+lives and how it is written, replaced, deleted and folded.
 
 Layout:
 
     index_dir/batch=<id>/...               one sealed shard per batch id
+    index_dir/_staging/batch=<id>/...      a commit marker being written
     index_dir/tombstones/batch=<id>/...    id-only delete shards
     index_dir/_stream_checkpoint/          the stream driver's checkpoint
 
@@ -16,6 +18,14 @@ Contract (pinned by the store tests):
   exists first PHYSICALLY deletes the old shard (:func:`clear`).  A
   metadata-only overwrite would let stale files resurface and
   double-count the batch, so a replayed batch id is exactly-once.
+- **one commit order** (:func:`write_batch`): a batch whose rows span
+  several shard trees has ONE commit marker, the shard the store lists.
+  The marker is cleared first, the other shards are replaced, and the
+  marker is written last — staged under ``_staging/`` and renamed into
+  place, so a listed marker is always a complete one.  Readers read
+  only the listed ids, so a write of a new id that dies at any step
+  leaves the before-state, a dying replay leaves its batch unlisted,
+  and replaying the id again converges to the one-shot result.
 - **fails loudly, never "empty"**: every probe goes through the Hadoop
   FileSystem API (:func:`hadoop_fs`), so an object-store root behaves
   like a local one; a ``batch=`` directory whose id is not an integer
@@ -110,6 +120,44 @@ def read_batches(spark: SparkSession, index_dir: str, ids: list[int]) -> DataFra
     return spark.read.option("basePath", index_dir).parquet(
         *[batch_path(index_dir, i) for i in ids]
     )
+
+
+def read_declared(
+    spark: SparkSession, index_dir: str, schema: str, ids: list[int] | None = None
+) -> DataFrame:
+    """The data columns of the given batch shards (every listed batch when
+    ``ids`` is None), read with the store's DECLARED schema: a shard
+    directory a dead write left empty reads as no rows, and an empty
+    store as an empty frame rather than a schema-inference error."""
+    if ids is None:
+        ids = list_batch_ids(spark, index_dir)
+    return spark.read.schema(schema).parquet(
+        *[batch_path(index_dir, i) for i in ids]
+    )
+
+
+def write_batch(
+    spark: SparkSession,
+    batch_id: int,
+    writes: list[tuple[str, Callable[[str], None]]],
+) -> None:
+    """Write batch ``batch_id`` in the commit order (module docstring).
+    ``writes`` holds one ``(root, write)`` per shard tree, ``write(path)``
+    writing that tree's shard at ``path``; the LAST entry is the commit
+    marker, the tree whose listing the store reads."""
+    *parts, (marker_root, write_marker) = writes
+    marker = batch_path(marker_root, batch_id)
+    staged = batch_path(os.path.join(marker_root, "_staging"), batch_id)
+    clear(spark, marker)
+    for root, write in parts:
+        path = batch_path(root, batch_id)
+        clear(spark, path)
+        write(path)
+    clear(spark, staged)
+    write_marker(staged)
+    fs, src = hadoop_fs(spark, staged)
+    if not fs.rename(src, hadoop_fs(spark, marker)[1]):
+        raise OSError(f"could not publish {staged} as {marker}")
 
 
 def write_tombstones(
