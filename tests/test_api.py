@@ -271,6 +271,105 @@ def test_search_topk_mode(client, search_graph):
     assert len(hits) == 2 and hits[1]["rank"] == 2
 
 
+def test_search_topk_py4j_round_trips_are_bounded(client, search_graph, monkeypatch):
+    """A warm /search topk request builds its plan in a bounded number of
+    py4j round trips: the embedding, cosine and window trees are built
+    once per app, not per request (about 3,900 round trips when they
+    were rebuilt every time)."""
+    import gc
+
+    import py4j.clientserver as cs
+
+    body = {
+        "graph_name": "gsearch",
+        "queries": ["alpha owns beta beta feeds gamma gamma likes delta"],
+        "mode": "topk",
+        "top_k": 2,
+    }
+    assert client.post("/search", json=body).status_code == 200  # warm
+    calls = [0]
+    real = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += 1
+        return real(self, command)
+
+    gc.collect()
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+    r = client.post("/search", json=body)
+    monkeypatch.undo()
+    assert r.status_code == 200 and r.get_json()["hits"][0]["passage_id"] == "d1"
+    assert 0 < calls[0] <= 500, calls[0]
+
+
+# Spark sort keys of each /search mode's hits (response field names)
+_SEARCH_ORDER = {
+    "topk": ("query", "rank"),
+    "range": ("query", "-score", "passage_id"),
+    "grouping": ("query", "rank"),
+    "mmr": ("query", "rank"),
+    "maxsim": ("query", "rank"),
+}
+
+
+def test_search_modes_return_hits_in_spark_sort_order(spark, client):
+    """Every mode sorts its bounded result on the driver; the order must
+    be exactly the one a Spark orderBy on the mode's keys gives, with
+    tied scores broken by passage id."""
+    from pyspark.sql import Row
+    from pyspark.sql import functions as F
+
+    twin = "sigma binds tau tau lifts upsilon upsilon guards phi"
+    docs = [
+        {"doc_id": f"t{i}", "text": twin, "source": "web"} for i in (3, 1, 2)
+    ] + [
+        {"doc_id": "u1", "text": "phi warms chi chi shades psi psi cools omega", "source": "web"},
+        {"doc_id": "u0", "text": "tau meets psi psi hears sigma sigma greets chi", "source": "web"},
+    ]
+    assert client.post(
+        "/add_documents", json={"graph_name": "gorder", "documents": docs}
+    ).status_code == 200
+    queries = ["phi warms chi chi shades psi psi cools omega", twin]
+    for mode, keys in _SEARCH_ORDER.items():
+        hits = client.post(
+            "/search",
+            json={"graph_name": "gorder", "queries": queries, "mode": mode,
+                  "top_k": 4, "radius": -1.0},
+        ).get_json()["hits"]
+        assert {h["query"] for h in hits} == {0, 1}, mode
+        order = [F.desc(k[1:]) if k.startswith("-") else F.asc(k) for k in keys]
+        want = spark.createDataFrame([Row(**h) for h in hits]).orderBy(*order).collect()
+        assert hits == [r.asDict() for r in want], mode
+        if mode in ("topk", "range"):
+            by_score = sorted(hits, key=lambda h: (h["query"], -h["score"], h["passage_id"]))
+            assert hits == by_score, mode
+            tied = [h["passage_id"] for h in hits if h["query"] == 1 and h["score"] == 1.0]
+            assert tied == ["t1", "t2", "t3"], mode
+
+
+def test_add_response_counts_equal_the_stats_route(client):
+    """/add_documents answers with the counts its own write observed; after
+    an add that re-upserts a passage they equal the stats route's
+    re-read."""
+    assert client.post(
+        "/add_documents", json={"graph_name": "gcount", "documents": DOCS}
+    ).status_code == 200
+    again = client.post(
+        "/add_documents",
+        json={
+            "graph_name": "gcount",
+            "documents": [
+                {"doc_id": "d1", "text": "alpha owns beta beta feeds iota iota likes kappa", "source": "web"},
+                {"doc_id": "d4", "text": "lambda rules mu mu sees nu nu meets xi", "source": "web"},
+            ],
+        },
+    )
+    assert again.status_code == 200
+    stats = client.get("/graph/gcount/stats").get_json()
+    assert again.get_json() == stats
+    assert stats["passages"] == 4
+
+
 def test_search_range_mode_band_is_exclusive_inclusive(client, search_graph):
     """mode=range: radius is exclusive, range_filter inclusive — querying a
     passage's own text with range_filter just under 1.0 must exclude the

@@ -396,3 +396,49 @@ def test_ensure_parallel_scan_leaves_exchange_frames_unplanned(spark, tmp_path):
     assert scan.rdd.getNumPartitions() == 1
     spread = ensure_parallel_scan(scan)
     assert spread.rdd.getNumPartitions() == sc.defaultParallelism
+
+
+def test_gateway_memo_shares_constant_trees_and_builds_column_args_fresh(
+    spark, monkeypatch
+):
+    """A memoized builder returns the same Column for the same name/int
+    arguments, builds fresh for a Column argument (unhashable, e.g. a
+    lambda variable) and for a new JVM gateway, and rows computed through
+    the shared tree equal a fresh build's."""
+    from pyspark import SparkContext
+
+    from vector_graph_rag_spark.functions.embedding import mock_embedding
+    from vector_graph_rag_spark.functions.memo import gateway_memo
+    from vector_graph_rag_spark.functions.vector import cosine
+
+    assert mock_embedding("text") is mock_embedding("text")
+    assert cosine("a", "b") is cosine("a", "b")
+    assert mock_embedding("text") is not mock_embedding("text", 4)
+    assert mock_embedding(F.col("text")) is not mock_embedding(F.col("text"))
+
+    builds = []
+
+    @gateway_memo
+    def toy(col, n=1):
+        builds.append((col, n))
+        return F.lit(n) if isinstance(col, str) else col
+
+    toy("x")
+    toy("x")
+    toy("x", n=2)
+    toy(F.col("x"))
+    toy(F.col("x"))
+    assert len(builds) == 4  # one per distinct hashable key, each Column fresh
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    toy("x")
+    assert len(builds) == 5  # a new gateway never sees the old JVM's tree
+    monkeypatch.undo()
+
+    texts = spark.createDataFrame(
+        [("alpha beta",), ("",), ("   ",), ("gamma",), (None,)], "text string"
+    )
+    other = spark.createDataFrame([("gamma",), ("delta",)], "text string")
+    fresh = mock_embedding.__wrapped__("text")
+    for df in (texts, other, texts):  # one shared tree across plans
+        shared = [r[0] for r in df.select(mock_embedding("text")).collect()]
+        assert shared == [r[0] for r in df.select(fresh).collect()]

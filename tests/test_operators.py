@@ -223,19 +223,39 @@ def test_rerank_parse_and_repair():
 # --- multimodal stubs -------------------------------------------------------
 
 
+def _assets(docs):
+    """Deterministic assets derived from the documents table, a stand-in
+    for a binaryFile scan: content = UTF-8 bytes of the text, metadata
+    derived from doc fields."""
+    return docs.select(
+        F.concat(F.lit("asset_"), F.col("doc_id").cast("string")).alias("asset_id"),
+        F.element_at(F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
+                     (F.col("doc_id") % 3 + 1).cast("int")).alias("modality"),
+        F.encode("text", "utf-8").alias("content"),
+        (F.col("n_chars") % 1920).cast("int").alias("width"),
+        (F.col("n_chars") % 1080).cast("int").alias("height"),
+        (F.col("n_chars") * 10).cast("int").alias("duration_ms"),
+    )
+
+
 def test_multimodal_decode_fake_kernel(spark):
     from vector_graph_rag_spark.operators.multimodal import (
         decode_assets,
-        fake_kernel,
         resize_images,
         sample_frames,
-        synthetic_assets,
     )
     from vector_graph_rag_spark.sources.tables import load_table
 
+    # nested, so it pickles by value into the Python workers
+    def _mean_byte_kernel(modality: str, content: bytes) -> dict:
+        """Deterministic decode kernel: feature = normalized first-byte mean."""
+        if not content:
+            return {"feature": 0.0}
+        return {"feature": sum(content[:64]) / (255.0 * min(len(content), 64))}
+
     docs = load_table(spark, SF_SMOKE, "documents").limit(30)
-    assets = synthetic_assets(spark, docs)
-    decoded = decode_assets(assets, kernel=fake_kernel).collect()
+    assets = _assets(docs)
+    decoded = decode_assets(assets, kernel=_mean_byte_kernel).collect()
     assert len(decoded) == 30
     assert all(0.0 <= r.feature <= 1.0 for r in decoded)
     assert all(len(r.checksum) == 32 for r in decoded)
@@ -251,74 +271,15 @@ def test_multimodal_decode_fake_kernel(spark):
 
 
 def test_multimodal_decode_default_raises(spark):
-    from vector_graph_rag_spark.operators.multimodal import (
-        decode_assets,
-        synthetic_assets,
-    )
+    from vector_graph_rag_spark.operators.multimodal import decode_assets
     from vector_graph_rag_spark.sources.tables import load_table
 
     docs = load_table(spark, SF_SMOKE, "documents").limit(2)
     with pytest.raises(Exception) as exc_info:
-        decode_assets(synthetic_assets(spark, docs)).collect()
+        decode_assets(_assets(docs)).collect()
     assert "NotImplementedError" in str(exc_info.value) or "decode for modality" in str(
         exc_info.value
     )
-
-
-def test_cosine_topk_matmul_equals_jvm_path(spark):
-    from pyspark.sql import functions as F
-
-    from tests.conftest import SF_SMOKE
-    from vector_graph_rag_spark.operators.topk import cosine_topk, cosine_topk_matmul
-    from vector_graph_rag_spark.sources.tables import load_table
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
-    )
-    jvm = cosine_topk(emb, queries, k=10, corpus_id="vec_id", corpus_vec="embedding")
-    mm = cosine_topk_matmul(
-        emb, queries, k=10, corpus_id="vec_id", corpus_vec="embedding"
-    )
-    jvm_rows = sorted(map(tuple, jvm.collect()))
-    mm_rows = sorted(map(tuple, mm.collect()))
-    assert len(jvm_rows) == 500
-    assert jvm_rows == mm_rows
-
-
-def test_asof_join_semantics(spark):
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from vector_graph_rag_spark.operators.timeseries import asof_join
-
-    t = lambda s: dt.datetime(2024, 1, 1, 0, 0, s)  # noqa: E731
-    left = spark.createDataFrame(
-        [(1, "u", t(10)), (2, "u", t(20)), (3, "v", t(10))],
-        "lid int, user string, ts timestamp",
-    )
-    right = spark.createDataFrame(
-        [("u", t(5), 1, 50.0), ("u", t(10), 2, 100.0), ("u", t(10), 3, 200.0),
-         ("u", t(15), 4, 300.0)],
-        "user string, ts timestamp, rid int, value double",
-    )
-    got = {
-        r["lid"]: r["asof_value"]
-        for r in asof_join(
-            left, right, on=["user"], right_vals=("value",), right_order="rid"
-        ).collect()
-    }
-    # lid=1: ties at ts=10 broken by rid -> 200; lid=2: latest at 15; lid=3: no match.
-    assert got == {1: 200.0, 2: 300.0, 3: None}
-    strict = {
-        r["lid"]: r["asof_value"]
-        for r in asof_join(
-            left, right, on=["user"], right_vals=("value",), right_order="rid",
-            allow_exact=False,
-        ).collect()
-    }
-    assert strict[1] == 50.0  # exact-ts row excluded
 
 
 def test_range_join_bucket_boundary(spark):

@@ -249,11 +249,11 @@ def test_column_pruning_reaches_scan(spark):
 
 
 def test_predicate_pushdown_reaches_scan(spark):
-    # The as-of join filters event_type twice (clicks, purchases); both
-    # predicates must reach the parquet scan.
+    # A click-to-purchase range join filters event_type twice (clicks,
+    # purchases); both predicates must reach the parquet scan.
     from pyspark.sql import functions as F
 
-    from vector_graph_rag_spark.operators.timeseries import asof_join
+    from vector_graph_rag_spark.operators.timeseries import range_join_bucketed
     from vector_graph_rag_spark.sources.tables import load_table
 
     e = load_table(spark, SF_SMOKE, "events")
@@ -261,9 +261,7 @@ def test_predicate_pushdown_reaches_scan(spark):
     purchases = e.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "event_id", "value"
     )
-    df = asof_join(
-        clicks, purchases, on=["user_id"], right_vals=("value",), right_order="event_id"
-    )
+    df = range_join_bucketed(clicks, purchases, on=["user_id"], width_seconds=3600)
     plan = _explain(df)
     assert "EqualTo(event_type,click)" in plan
     assert "EqualTo(event_type,purchase)" in plan

@@ -69,6 +69,23 @@ def _store_case(spark, store):
                 for r in probe_index(spark, state, everything).collect()
             },
         )
+    if store == "term_index":
+        from vector_graph_rag_spark.streaming.term_index import (
+            append_term_batch,
+            read_term_index,
+            search_term_index,
+        )
+
+        queries = docs.filter(F.col("doc_id") % 7 == 0).select(
+            F.col("doc_id").alias("query_id"), "text"
+        )
+        return (
+            lambda state, b: append_term_batch(batch(b), state, b),
+            lambda state: (
+                rows(read_term_index(spark, state)),
+                rows(search_term_index(spark, state, queries, k=5)),
+            ),
+        )
     if store == "lm_counts":
         from vector_graph_rag_spark.streaming.lm_counts import (
             lm_from_counts,
@@ -126,6 +143,7 @@ def _store_case(spark, store):
         pytest.param("corpus_stats", "batch=2", id="corpus_stats"),
         pytest.param("quantiles", "batch=2", id="quantiles"),
         pytest.param("freq_sketch", "batch=2", id="freq_sketch"),
+        pytest.param("term_index", "batch=2", id="term_index"),
     ],
 )
 def test_failed_append_is_invisible_and_replay_converges(

@@ -50,14 +50,13 @@ ALLOWED_DRIVER_MATERIALIZATION = {
     ("queries/pipeline.py", "ann_pq_adc_topk_q", "collect"): "the fixed 3-vector query batch",
     ("queries/pipeline.py", "ann_ivfpq_topk_q", "collect"): "the fixed 5-vector query batch",
     ("queries/pipeline.py", "source_temperature_mix_q", "collect"): "per-source counts (|sources| rows)",
-    ("operators/topk.py", "cosine_topk_matmul", "collect"): "the broadcast query-vector block (|queries| x dim)",
     ("queries/curation.py", "_train_centroids", "collect"): "k centroids per k-means iteration",
     ("queries/sampling.py", "rebalance_source_mix", "collect"): "per-source counts (|sources| rows)",
     ("sources/versioned.py", "merge", "collect"): "duplicate-source-key guard, limit(1)",
     ("sources/catalog.py", "graph_stats", "collect"): "one (table, count) row per node table: 3 rows",
     ("streaming/lm_counts.py", "lm_from_counts", "collect"): "2 scalar totals",
     ("streaming/vector_index.py", "search_index", "collect"): "|queries| x nprobe probe-cell ids + the bounded quantized query batch (the ivfpq_search contract)",
-    ("api/app.py", "search", "collect"): "HTTP response rows: k-bounded (topk/grouping) or limit-capped (range, default 1000) hits serialized to JSON — the API serving boundary",
+    ("api/app.py", "search", "collect"): "HTTP response rows: k-bounded (topk/grouping/mmr/maxsim) or limit-capped (range, default 1000) hits, sorted on the driver and serialized to JSON — the API serving boundary",
     ("streaming/corpus_stats.py", "corpus_quantiles", "collect"): "merged bucket table, <= 2048 rows per column by construction",
     ("streaming/freq_sketch.py", "cm_estimate", "collect"): "merged CM counter table, <= d*w rows per column by construction",
     ("streaming/freq_sketch.py", "corpus_heavy_hitters", "collect"): "union of shard candidate sets, <= m values per shard per column",
@@ -199,3 +198,23 @@ def test_graph_crud_runs_no_driver_collect():
     tables; an id frame is joined as it is, never collected."""
     src = open(os.path.join(SRC_ROOT, "graph", "crud.py")).read()
     assert ".collect(" not in src
+
+
+def test_bounded_route_results_are_sorted_on_the_driver():
+    """Every route's collect is bounded (k, a limit or one page), so its
+    order comes from a Python sort of the collected rows.  A global
+    ``.orderBy(...)`` chained into ``.collect()`` adds a range-sampling
+    job and a shuffle to the request.  (``orderBy(...).limit(n)`` plans
+    as a top-n, not a global sort, and is allowed.)"""
+    tree = ast.parse(open(os.path.join(SRC_ROOT, "api", "app.py")).read())
+    offenders = [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "collect"
+        and isinstance(node.func.value, ast.Call)
+        and isinstance(node.func.value.func, ast.Attribute)
+        and node.func.value.func.attr == "orderBy"
+    ]
+    assert not offenders, f"api/app.py chains .orderBy( into .collect() at lines {offenders}"

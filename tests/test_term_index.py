@@ -6,6 +6,9 @@ show when the replayed batch differs)."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -105,6 +108,35 @@ def test_list_batch_ids_missing_dir_is_empty(spark, tmp_path):
     from vector_graph_rag_spark.streaming.term_index import list_batch_ids
 
     assert list_batch_ids(spark, str(tmp_path / "nope")) == []
+
+
+def test_first_append_that_dies_leaves_an_empty_index(spark, tmp_path, monkeypatch):
+    """A first append whose parquet write dies (leaving its output
+    directory empty, as an aborted Spark write job does) lists no batch,
+    and a search returns the empty before-state instead of failing to
+    infer a schema from the empty shard."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from vector_graph_rag_spark.streaming.term_index import (
+        append_term_batch,
+        list_batch_ids,
+        search_term_index,
+    )
+
+    docs = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
+    idx = str(tmp_path / "idx")
+
+    def dying_parquet(self, path, *args, **kwargs):
+        os.makedirs(path)
+        raise RuntimeError(f"injected failure writing {path}")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", dying_parquet)
+    with pytest.raises(RuntimeError, match="injected"):
+        append_term_batch(docs, idx, batch_id=0)
+    monkeypatch.undo()
+    assert list_batch_ids(spark, idx) == []
+    queries = docs.select(F.col("doc_id").alias("query_id"), "text")
+    assert search_term_index(spark, idx, queries, k=3).collect() == []
 
 
 def test_stream_built_term_index_equals_batch_built(spark, tmp_path):

@@ -46,6 +46,19 @@ struct cells for triplets), so no request string is ever part of SQL
 text.
 ``tests/test_source_hygiene.py`` keeps ``createDataFrame`` calls out of
 this package and ``graph/``.
+
+Request expressions: a route builds its plan over py4j, one round trip
+per expression node, and on a request path that cost is paid on every
+request.  ``/search``'s constant trees (the two mock embeddings, the
+cosine score and the ranking windows) are built once per app in
+``create_app``, and the Column builders under them are memoized per JVM
+(``functions/memo``), so a topk request makes a few hundred round trips
+instead of about 3,900.  Every route's result is bounded (k, a limit or
+one page), so a route sorts its collected rows in Python instead of
+chaining a global ``orderBy`` into ``collect``, which would add a
+range-sampling job and a shuffle (``tests/test_source_hygiene.py``).
+``/add_documents`` answers with the row counts its own write observed
+(``GraphCatalog.replace_graph``), not with a re-read of the graph.
 """
 
 from __future__ import annotations
@@ -53,11 +66,13 @@ from __future__ import annotations
 import dataclasses
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 from vector_graph_rag_spark.config import DEFAULT_CONFIG, EngineConfig
+from vector_graph_rag_spark.functions.embedding import mock_embedding
 from vector_graph_rag_spark.functions.literals import arrow_rows
+from vector_graph_rag_spark.functions.vector import cosine
 from vector_graph_rag_spark.graph.builder import build_graph, synthetic_triplet_docs
 from vector_graph_rag_spark.graph.crud import delete_passages, upsert_passages
 from vector_graph_rag_spark.graph.expand import expand_subgraph
@@ -129,6 +144,14 @@ def create_app(
 
     catalog = GraphCatalog(catalog_root or os.path.join(config.storage_root, "graphs"))
     app = Flask("vector_graph_rag_spark")
+    # /search's constant expressions, built once per app (module notes)
+    qvec = mock_embedding("qtext").alias("qvec")
+    pvec = mock_embedding("text").alias("pvec")
+    score = F.round(cosine("pvec", "qvec"), 6)
+    by_score = Window.partitionBy("query_idx").orderBy(F.desc("score"), F.asc("id"))
+    by_entity_score = Window.partitionBy("query_idx").orderBy(
+        F.desc("score"), F.asc("entity_id")
+    )
 
     def _not_found(name: str):
         return jsonify({"error": f"graph '{name}' not found"}), 404
@@ -173,16 +196,17 @@ def create_app(
         documents = body.get("documents") or []
         if not documents:
             return jsonify({"error": "no documents"}), 400
-        _index_docs(name, documents)
-        return jsonify({"graph_name": name, **catalog.graph_stats(spark, name)})
+        # the counts come from the write itself, not from a re-read
+        return jsonify({"graph_name": name, **_index_docs(name, documents)})
 
-    def _index_docs(name: str, documents: list[dict]):
+    def _index_docs(name: str, documents: list[dict]) -> dict[str, int]:
+        """Index ``documents`` into graph ``name``; returns its node counts."""
         docs = _docs_dataframe(spark, documents)
         if catalog.exists(name):
             tables = upsert_passages(catalog.read_graph(spark, name), docs)
         else:
             tables = build_graph(docs)
-        catalog.replace_graph(name, tables)
+        return catalog.replace_graph(name, tables)
 
     def _doc_from_text(path: str, text: str) -> dict:
         import hashlib
@@ -504,13 +528,9 @@ def create_app(
         the registered mmr_diversity_rerank kernel), and ``maxsim``
         (late-interaction multi-vector scoring over per-token embeddings,
         the registered colbert_maxsim_topk kernel).  Query texts ride
-        the same deterministic embedding the indexing side uses."""
-        from pyspark.sql import Window
-
-        from vector_graph_rag_spark.functions.embedding import mock_embedding
-        from vector_graph_rag_spark.functions.vector import cosine
-        from pyspark.sql import functions as F
-
+        the same deterministic embedding the indexing side uses.  Every
+        mode's result is bounded (|queries| x k, or x limit), so it is
+        sorted on the driver, not by a global Spark sort."""
         body = request.get_json(force=True)
         name = body.get("graph_name", "default")
         if not catalog.exists(name):
@@ -544,18 +564,16 @@ def create_app(
         if k < 1 or limit < 1:
             return jsonify({"error": "top_k and limit must be >= 1"}), 400
         g = catalog.read_graph(spark, name)
-        qdf = _queries_dataframe(spark, qtexts).select(
-            "query_idx", mock_embedding("qtext").alias("qvec")
-        )
+        qdf = _queries_dataframe(spark, qtexts).select("query_idx", qvec)
         scored = (
             # NULL-text exclusion in lockstep with the registered
             # grouping_search_topk: a NULL text embeds to a NULL score,
             # which would win grouping mode's min(struct(-score, id))
             # reduce and pays the crossJoin for nothing in topk mode.
             g.passages.filter(F.col("text").isNotNull())
-            .select("id", mock_embedding("text").alias("pvec"))
+            .select("id", pvec)
             .crossJoin(F.broadcast(qdf))
-            .withColumn("score", F.round(cosine("pvec", "qvec"), 6))
+            .withColumn("score", score)
         )
         if mode == "range":
             # Milvus range search still honors a limit, applied PER QUERY —
@@ -566,18 +584,15 @@ def create_app(
             # keeps each query's own best in-band hits (a single global
             # LIMIT ordered by query_idx would let an early query's weakest
             # hits crowd later queries out entirely).
-            w_r = Window.partitionBy("query_idx").orderBy(
-                F.desc("score"), F.asc("id")
-            )
-            rows = (
+            rows = sorted(
                 scored.filter(
                     (F.col("score") > radius) & (F.col("score") <= range_filter)
                 )
-                .withColumn("rank", F.row_number().over(w_r))
+                .withColumn("rank", F.row_number().over(by_score))
                 .filter(F.col("rank") <= limit)
                 .select("query_idx", "id", "score")
-                .orderBy("query_idx", F.desc("score"), F.asc("id"))
-                .collect()
+                .collect(),
+                key=lambda r: (r["query_idx"], -r["score"], r["id"]),
             )
             hits = [
                 {"query": int(r["query_idx"]), "passage_id": r["id"], "score": r["score"]}
@@ -588,9 +603,6 @@ def create_app(
                 best_hit_per_group,
             )
 
-            w_q = Window.partitionBy("query_idx").orderBy(
-                F.desc("score"), F.asc("entity_id")
-            )
             # one kernel with the registered grouping_search_topk query:
             # map-side-combined min(struct(-score, id)), never a
             # corpus-wide window; only the group-reduced frame is ranked.
@@ -603,11 +615,11 @@ def create_app(
                 ["query_idx", "entity_id"],
                 id_col="id",
             )
-            rows = (
-                best.withColumn("group_rank", F.row_number().over(w_q))
+            rows = sorted(
+                best.withColumn("group_rank", F.row_number().over(by_entity_score))
                 .filter(F.col("group_rank") <= k)
-                .orderBy("query_idx", "group_rank")
-                .collect()
+                .collect(),
+                key=lambda r: (r["query_idx"], r["group_rank"]),
             )
             hits = [
                 {
@@ -640,11 +652,8 @@ def create_app(
                 )
 
             pool = max(20, 4 * k)
-            w_c = Window.partitionBy("query_idx").orderBy(
-                F.desc("score"), F.asc("id")
-            )
             cand = (
-                scored.withColumn("cand_idx", F.row_number().over(w_c))
+                scored.withColumn("cand_idx", F.row_number().over(by_score))
                 .filter(F.col("cand_idx") <= pool)
                 .select(
                     F.col("query_idx").alias("query_id"),
@@ -668,10 +677,9 @@ def create_app(
                 cand.select("query_id", "vec_id", "rel", "qv"), k
             )
             back = cand.select("query_id", "vec_id", "id")
-            rows = (
-                sel.join(back, ["query_id", "vec_id"])
-                .orderBy("query_id", "sel_rank")
-                .collect()
+            rows = sorted(
+                sel.join(back, ["query_id", "vec_id"]).collect(),
+                key=lambda r: (r["query_id"], r["sel_rank"]),
             )
             hits = [
                 {
@@ -706,10 +714,11 @@ def create_app(
             q_toks = _queries_dataframe(spark, qtexts).select(
                 "query_idx", F.posexplode(qtok).alias("qpos", "tok")
             ).select("query_idx", "qpos", mock_embedding("tok").alias("qv"))
-            rows = (
-                maxsim_topk(d_toks, q_toks, k, doc_id="id", query_id="query_idx")
-                .orderBy("query_idx", "rank")
-                .collect()
+            rows = sorted(
+                maxsim_topk(
+                    d_toks, q_toks, k, doc_id="id", query_id="query_idx"
+                ).collect(),
+                key=lambda r: (r["query_idx"], r["rank"]),
             )
             hits = [
                 {
@@ -724,17 +733,14 @@ def create_app(
             # Milvus-style pagination: `offset` skips that many best hits
             # per query, then `top_k` are returned (rank stays absolute so
             # pages compose).  Collect bounded at |queries| x top_k.
-            w = Window.partitionBy("query_idx").orderBy(
-                F.desc("score"), F.asc("id")
-            )
-            rows = (
-                scored.withColumn("rank", F.row_number().over(w))
+            rows = sorted(
+                scored.withColumn("rank", F.row_number().over(by_score))
                 .filter(
                     (F.col("rank") > offset) & (F.col("rank") <= offset + k)
                 )
                 .select("query_idx", "id", "score", "rank")
-                .orderBy("query_idx", "rank")
-                .collect()
+                .collect(),
+                key=lambda r: (r["query_idx"], r["rank"]),
             )
             hits = [
                 {

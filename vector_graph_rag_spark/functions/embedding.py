@@ -28,14 +28,17 @@ from vector_graph_rag_spark.functions.hashing import (
     seeded_hash60,
     seeded_hash60_sql,
 )
+from vector_graph_rag_spark.functions.memo import gateway_memo
 from vector_graph_rag_spark.functions.vector import l2_normalize
 
 
+@gateway_memo
 def mock_embedding(col: Column | str, dim: int = 8) -> Column:
     """Deterministic unit vector from text (JVM-side, oracle-checkable).
 
     Empty/blank text → zero vector (OpenAI guard, embeddings.py:180-203).
-    Element i hashes "{i}|{text}" so dimensions are independent.
+    Element i hashes "{i}|{text}" so dimensions are independent.  Built
+    once per JVM for a column name (``functions/memo``).
     """
     c = F.col(col) if isinstance(col, str) else col
     raw = F.array(

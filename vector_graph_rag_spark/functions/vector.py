@@ -9,6 +9,9 @@ no Python in the hot path.
 Determinism note: all accumulation is left-to-right over the array (Spark's
 ``aggregate`` is a sequential fold), and elements are cast to double first,
 so results are bitwise-reproducible and match a sequential DuckDB oracle.
+
+Each builder is memoized per JVM (``functions/memo``): called with column
+names, it returns one shared tree instead of rebuilding it over py4j.
 """
 
 from __future__ import annotations
@@ -16,11 +19,14 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from vector_graph_rag_spark.functions.memo import gateway_memo
+
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+@gateway_memo
 def dot(a: Column | str, b: Column | str) -> Column:
     """Dot product of two array<numeric> columns, computed in double."""
     prods = F.zip_with(
@@ -31,10 +37,12 @@ def dot(a: Column | str, b: Column | str) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
+@gateway_memo
 def l2_norm(a: Column | str) -> Column:
     return F.sqrt(dot(a, a))
 
 
+@gateway_memo
 def l2_normalize(a: Column | str) -> Column:
     """x / ||x||, zero vectors passed through unchanged (matches the
     reference's empty-text zero-vector guard, embeddings.py:180-203).
@@ -63,6 +71,7 @@ def l2_normalize(a: Column | str) -> Column:
     return F.transform(F.array(arr), _one)[0]
 
 
+@gateway_memo
 def cosine(a: Column | str, b: Column | str) -> Column:
     """Cosine similarity; 0.0 if either side has zero norm."""
     na, nb = l2_norm(a), l2_norm(b)

@@ -10,8 +10,8 @@ training-data-pipeline brief.  Design:
   `mapInPandas` operators.  The actual codec work needs PIL/ffmpeg etc.
   (not in this container): each operator carries a real, tested Spark-side
   contract (schema, batching, partition parallelism) with the codec kernel
-  pluggable; the default kernel is either a clearly-marked
-  NotImplementedError or the deterministic fake used by tests.
+  pluggable; the default kernel is a clearly-marked
+  NotImplementedError.
 - at 100 TB: assets are read via the binaryFile source (or parquet with a
   binary column), partitioned by asset_id hash; every operator below is
   embarrassingly partition-parallel with no shuffle.
@@ -23,7 +23,7 @@ import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 ASSET_SCHEMA = (
@@ -32,27 +32,13 @@ ASSET_SCHEMA = (
 )
 
 
-def synthetic_assets(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """Deterministic fake assets derived from the documents table — the
-    test stand-in for a binaryFile scan: content = UTF-8 bytes of the text,
-    metadata derived from doc fields."""
-    return docs.select(
-        F.concat(F.lit("asset_"), F.col("doc_id").cast("string")).alias("asset_id"),
-        F.element_at(F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-                     (F.col("doc_id") % 3 + 1).cast("int")).alias("modality"),
-        F.encode("text", "utf-8").alias("content"),
-        (F.col("n_chars") % 1920).cast("int").alias("width"),
-        (F.col("n_chars") % 1080).cast("int").alias("height"),
-        (F.col("n_chars") * 10).cast("int").alias("duration_ms"),
-    )
-
-
 def decode_assets(assets: DataFrame, kernel=None) -> DataFrame:
     """binary → decoded feature summary via mapInPandas.
 
     `kernel(modality: str, content: bytes) -> dict` is the pluggable codec;
     default raises NotImplementedError for real modalities (PIL/ffmpeg not
-    in this container, per the task brief) — tests inject `fake_kernel`.
+    in this container, per the task brief) — callers inject a kernel,
+    e.g. ``stdlib_kernel`` below.
     Output: (asset_id, modality, n_bytes, checksum, feature)."""
 
     def _default_kernel(modality: str, content: bytes) -> dict:
@@ -84,13 +70,6 @@ def decode_assets(assets: DataFrame, kernel=None) -> DataFrame:
         _decode,
         "asset_id string, modality string, n_bytes long, checksum string, feature double",
     )
-
-
-def fake_kernel(modality: str, content: bytes) -> dict:
-    """Deterministic decode fake: feature = normalized first-byte mean."""
-    if not content:
-        return {"feature": 0.0}
-    return {"feature": sum(content[:64]) / (255.0 * min(len(content), 64))}
 
 
 def resize_images(assets: DataFrame, max_side: int = 512, kernel=None) -> DataFrame:

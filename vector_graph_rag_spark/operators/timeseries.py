@@ -1,16 +1,8 @@
-"""Time-series joins Spark lacks as built-ins: as-of join, bounded range join.
+"""Time-series join Spark lacks as a built-in: the bounded range join.
 
-Both are expressed as compositions of existing DataFrame ops (task-brief
-custom-operator tier (a)) — no Python in the hot path, no O(n^2)
-candidate sets:
+It is a composition of existing DataFrame ops (task-brief custom-operator
+tier (a)) — no Python in the hot path, no O(n^2) candidate set:
 
-- ``asof_join``: pandas ``merge_asof`` / DuckDB ``ASOF JOIN`` semantics
-  via the union+window trick: tag right rows 0 and left rows 1, union,
-  sort within key by (ts, tag, order), and carry the last non-null right
-  value forward.  ONE shuffle (the window) — a naive inequality join is a
-  per-key cross product.  At 100 TB the window sort is per-key and
-  spill-safe; a key hot enough to be a problem (one user = billions of
-  rows) would need time-chunked salting, which composes on top.
 - ``range_join_bucketed``: "rows of `right` within (ts, ts+width] of each
   `left` row" via epoch bucketing: a left row can only match right rows
   in its own or the next time bucket, so exploding left into 2 bucket
@@ -21,50 +13,8 @@ candidate sets:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_vals: tuple[str, ...] = ("value",),
-    right_order: str | None = None,
-    allow_exact: bool = True,
-) -> DataFrame:
-    """For each left row, the latest right row with ``right.ts <= left.ts``
-    (strictly ``<`` when ``allow_exact=False``) per ``on`` key.
-
-    Returns ``left.*`` plus one ``asof_<v>`` column per ``right_vals``
-    (null when no prior right row exists).  ``right_order`` breaks ties
-    among right rows sharing a timestamp (latest wins); required for
-    determinism when such ties are possible.
-    """
-    rv = {v: f"asof_{v}" for v in right_vals}
-    r = right.select(
-        *on,
-        F.col(right_ts).alias("__ts"),
-        (F.col(right_order) if right_order else F.lit(0)).alias("__ro"),
-        *[F.col(v).alias(rv[v]) for v in right_vals],
-    ).withColumn("__tag", F.lit(0 if allow_exact else 2))
-    l = (
-        left.withColumn("__ts", F.col(left_ts))
-        .withColumn("__ro", F.lit(0))
-        .withColumn("__tag", F.lit(1))
-    )
-    unioned = l.unionByName(r, allowMissingColumns=True)
-    w = (
-        Window.partitionBy(*on)
-        .orderBy("__ts", "__tag", "__ro")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = unioned
-    for v, alias in rv.items():
-        out = out.withColumn(alias, F.last(alias, ignorenulls=True).over(w))
-    return out.filter(F.col("__tag") == 1).drop("__ts", "__tag", "__ro")
 
 
 def range_join_bucketed(

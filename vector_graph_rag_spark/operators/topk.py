@@ -70,90 +70,6 @@ def cosine_topk(
     )
 
 
-def cosine_topk_matmul(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    corpus_id: str = "id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_embedding",
-    score_decimals: int = 6,
-) -> DataFrame:
-    """Block-matmul variant of :func:`cosine_topk` — the large-batch scale path.
-
-    The per-row ``aggregate`` dot product in :func:`cosine_topk` is O(d) of
-    codegen per (corpus row × query); once the query batch is hundreds+ of
-    vectors, a vectorized matrix multiply wins by an order of magnitude.
-    Shape: collect the (bounded) query batch to a numpy matrix, closure-
-    broadcast it into a ``mapInPandas`` scorer that computes the full
-    Arrow-batch × query-matrix product and emits only each batch's LOCAL
-    top-k per query, so the final global window ranks ≤ k·n_batches rows
-    per query instead of the whole corpus.  Scores are rounded INSIDE the
-    kernel before the local cut so local and global orderings agree —
-    results are row-identical to :func:`cosine_topk` (same rounding, same
-    id tie-break).
-    """
-    import numpy as np
-    import pandas as pd
-
-    # Null query vectors are unsearchable (same rule as cosine_topk's query
-    # side) and would make np.asarray build a ragged object array below.
-    qrows = (
-        queries.select(query_id, query_vec)
-        .filter(F.col(query_vec).isNotNull())
-        .collect()
-    )
-    if not qrows:
-        return cosine_topk(
-            corpus.limit(0), queries.limit(0), k,
-            corpus_id=corpus_id, corpus_vec=corpus_vec,
-            query_id=query_id, query_vec=query_vec,
-        )
-    qids = [r[0] for r in qrows]
-    Q = np.asarray([r[1] for r in qrows], dtype=np.float64)  # (nq, d)
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = np.divide(Q, qn, out=np.zeros_like(Q), where=qn != 0)
-
-    def _score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.asarray(pdf[corpus_vec].tolist(), dtype=np.float64)
-            cn = np.linalg.norm(C, axis=1, keepdims=True)
-            Cn = np.divide(C, cn, out=np.zeros_like(C), where=cn != 0)
-            S = np.round(Cn @ Qn.T, score_decimals)  # (nc, nq)
-            ids = pdf[corpus_id].to_numpy()
-            out_q, out_id, out_s = [], [], []
-            for j, qid in enumerate(qids):
-                s = S[:, j]
-                # Local top-k on (score desc, id asc) — the same total order
-                # as the global window, so the local cut can't drop a winner.
-                order = np.lexsort((ids, -s))[:k]
-                out_q.extend([qid] * len(order))
-                out_id.extend(ids[order])
-                out_s.extend(s[order])
-            yield pd.DataFrame(
-                {"__qid": out_q, corpus_id: out_id, "score": out_s}
-            )
-
-    qid_type = dict(queries.dtypes)[query_id]
-    cid_type = dict(corpus.dtypes)[corpus_id]
-    # Null embeddings are unsearchable (and would break the ragged→matrix
-    # conversion inside the kernel) — same skip rule as cosine_topk.
-    scored = (
-        corpus.select(corpus_id, corpus_vec)
-        .filter(F.col(corpus_vec).isNotNull())
-        .mapInPandas(_score, f"__qid {qid_type}, {corpus_id} {cid_type}, score double")
-    )
-    w = Window.partitionBy("__qid").orderBy(F.desc("score"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("__qid").alias(query_id), corpus_id, "score", "rank")
-    )
-
-
 def score_threshold_first_seen_dedup(
     hits: DataFrame,
     threshold: float,

@@ -1070,8 +1070,8 @@ def knn_graph_incell(spark: SparkSession, sf_dir: str) -> DataFrame:
     n*CAP, linear in the corpus (the raw in-cell join's ~n^1.5 measured
     4.5x wall at the 10x smoke).  Small cells get n_sub=1 and are
     untouched.  The group-local search itself is an Arrow-batched
-    ``applyInPandas`` kernel (the sanctioned pandas scale path, same as
-    cosine_topk_matmul): one CAP²-bounded numpy gram matrix per group emits
+    ``applyInPandas`` kernel (the sanctioned pandas scale path): one
+    CAP²-bounded numpy gram matrix per group emits
     each member's top-k directly, so the corpus-sized pair frame and its
     rank window never materialize — the only corpus exchange is the
     group-key shuffle of n rows.  Scores are dot/(nrm_a*nrm_b) rounded to

@@ -3,9 +3,8 @@ round-7 registry swap (r6 verdict, Next #1).
 
 Four operators landed in round 6 as twin-tested library code and had no
 driver CORRECTNESS row; this module puts each behind the DuckDB hash gate.
-The registry stays at exactly 100: four redundant near-sibling queries are
-retired in their place (``customers_above_mean``, ``lineitem_rollup``,
-``events_tumbling_1h``, ``knn_cosine_topk_matmul`` — see COVERAGE.md
+The registry stayed at exactly 100: four redundant near-sibling queries
+were retired in their place, and have since been deleted (COVERAGE.md
 §"retired queries").
 
 - **bpe_train_merges** (`operators/bpe.py`): the distributed Sennrich BPE

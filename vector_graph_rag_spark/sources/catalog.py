@@ -43,7 +43,7 @@ import shutil
 import threading
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -63,6 +63,8 @@ GRAPH_SCHEMAS = {
     "entity_passage": "entity_id string, passage_id string",
 }
 TABLE_NAMES = list(GRAPH_SCHEMAS)
+# the node tables whose row counts ``graph_stats`` reports
+COUNTED_TABLES = ("entities", "relations", "passages")
 
 # repartition key per table when ``write_graph`` is given ``partitions``
 PARTITION_KEYS = {
@@ -165,46 +167,61 @@ class GraphCatalog:
         shutil.rmtree(self._graph_dir(name))
         return True
 
-    def write_graph(self, name: str, tables: GraphTables, partitions: int | None = None) -> None:
+    def write_graph(
+        self, name: str, tables: GraphTables, partitions: int | None = None
+    ) -> dict[str, int]:
         """Overwrite-write all six tables in place (add_documents
         semantics, rag.py:354-356).  With ``partitions``, each table is
         repartitioned by its ``PARTITION_KEYS`` column.  Raises
         ``ValueError`` before writing anything if a table's columns differ
         from ``GRAPH_SCHEMAS``, and ``GraphNameError`` for a name the
-        catalog cannot store."""
-        self._write_tables(self._graph_dir(name), tables, partitions)
+        catalog cannot store.  Returns the written row counts of
+        ``COUNTED_TABLES``, the figures ``graph_stats`` reads back."""
+        return self._write_tables(self._graph_dir(name), tables, partitions)
 
-    def _write_tables(self, d: str, tables: GraphTables, partitions: int | None) -> None:
+    def _write_tables(
+        self, d: str, tables: GraphTables, partitions: int | None
+    ) -> dict[str, int]:
+        """Write the six tables under ``d``.  The node tables are counted
+        by an ``Observation`` on their own write, so the counts cost no
+        extra job and no re-read."""
         for t in TABLE_NAMES:
             got = getattr(tables, t).schema.simpleString()
             want = StructType.fromDDL(GRAPH_SCHEMAS[t]).simpleString()
             if got != want:
                 raise ValueError(f"write_graph: table {t} is {got}, declared {want}")
         os.makedirs(d, exist_ok=True)
+        observed = {}
         for t in TABLE_NAMES:
             df = getattr(tables, t)
+            if t in COUNTED_TABLES:
+                observed[t] = Observation()
+                df = df.observe(observed[t], F.count(F.lit(1)).alias("rows"))
             if partitions:
                 df = df.repartition(partitions, PARTITION_KEYS[t])
             df.write.mode("overwrite").parquet(os.path.join(d, f"{t}.parquet"))
+        return {t: obs.get["rows"] for t, obs in observed.items()}
 
     def replace_graph(
         self, name: str, tables: GraphTables, partitions: int | None = None
-    ) -> None:
+    ) -> dict[str, int]:
         """Make ``tables`` the graph ``name`` with a crash-safe swap (module
         notes).  ``tables`` may be a lazy plan over the live graph: it is
-        fully written before the live directory moves."""
+        fully written before the live directory moves.  Returns the new
+        graph's ``COUNTED_TABLES`` row counts, as ``write_graph`` does."""
         live = self._graph_dir(name)
         staging, aside = live + STAGING, live + ASIDE
         with _SWAP_LOCK:
             self._recover(name)
             if os.path.isdir(staging):
                 shutil.rmtree(staging)
-            self._write_tables(staging, tables, partitions)
+            counts = self._write_tables(staging, tables, partitions)
             if os.path.isdir(live):
                 os.rename(live, aside)
             os.rename(staging, live)
             if os.path.isdir(aside):
                 shutil.rmtree(aside)
+        return counts
 
     def compact_graph(
         self, spark: SparkSession, name: str, target_files: int = 1
@@ -257,10 +274,9 @@ class GraphCatalog:
         """Row counts of the node tables (get_collection_stats,
         milvus.py:980-1014), counted in one query."""
         g = self.read_graph(spark, name)
-        counted = ("entities", "relations", "passages")
         tagged = functools.reduce(
             DataFrame.unionByName,
-            (getattr(g, t).select(F.lit(t).alias("table")) for t in counted),
+            (getattr(g, t).select(F.lit(t).alias("table")) for t in COUNTED_TABLES),
         )
         rows = tagged.groupBy("table").count().collect()
-        return {t: 0 for t in counted} | {r["table"]: r["count"] for r in rows}
+        return {t: 0 for t in COUNTED_TABLES} | {r["table"]: r["count"] for r in rows}

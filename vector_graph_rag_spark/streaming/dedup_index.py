@@ -47,7 +47,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_graph_rag_spark.functions.hashing import (
@@ -56,6 +56,7 @@ from vector_graph_rag_spark.functions.hashing import (
     seeded_hash60_from_base,
 )
 from vector_graph_rag_spark.functions.literals import inline_rows
+from vector_graph_rag_spark.functions.memo import gateway_memo
 from vector_graph_rag_spark.functions.text import tokens
 from vector_graph_rag_spark.queries.dedup import (
     N_BANDS,
@@ -76,7 +77,20 @@ def batch_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     16 hashes affine transforms of the reduced base).  Documents with
     fewer than 3 tokens have no shingles and produce no row — they cannot
     near-dup by shingle overlap."""
+    shingle_arr, hbase, aggs, sig = _signature_exprs()
     t = docs.select("doc_id", tokens(text_col).alias("toks"))
+    sh = t.select("doc_id", F.explode(shingle_arr).alias("shingle")).select(
+        "doc_id", hbase
+    )
+    return sh.groupBy("doc_id").agg(*aggs).select("doc_id", sig)
+
+
+@gateway_memo
+def _signature_exprs() -> tuple:
+    """batch_signatures' constant expressions, built once per JVM
+    (``functions/memo``): the shingle array over ``toks``, the reduced md5
+    base of a ``shingle``, the N_MINHASH ``min`` aggregates and the
+    signature array over their ``m<i>`` results."""
     shingle_arr = F.when(
         F.size("toks") >= 3,
         F.expr(
@@ -84,18 +98,13 @@ def batch_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
             " i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"
         ),
     ).otherwise(F.array().cast("array<string>"))
-    sh = t.select(
-        "doc_id", F.explode(shingle_arr).alias("shingle")
-    ).select("doc_id", (hash60("shingle") % F.lit(MERSENNE_P)).alias("hbase"))
-    aggs = [
+    hbase = (hash60("shingle") % F.lit(MERSENNE_P)).alias("hbase")
+    aggs = tuple(
         F.min(seeded_hash60_from_base(F.col("hbase"), i)).alias(f"m{i}")
         for i in range(N_MINHASH)
-    ]
-    wide = sh.groupBy("doc_id").agg(*aggs)
-    return wide.select(
-        "doc_id",
-        F.array(*[F.col(f"m{i}") for i in range(N_MINHASH)]).alias("sig"),
     )
+    sig = F.array(*[F.col(f"m{i}") for i in range(N_MINHASH)]).alias("sig")
+    return shingle_arr, hbase, aggs, sig
 
 
 def _bands_of(sig: DataFrame) -> DataFrame:
@@ -103,6 +112,15 @@ def _bands_of(sig: DataFrame) -> DataFrame:
     (same key text as queries/dedup._bands_df).  ONE scan + row-local
     explode of the 4 band structs (r17) instead of a 4-way union that
     re-scanned the signature frame per band (guide §2.4)."""
+    return sig.select("doc_id", F.explode(_band_entries()).alias("__e")).select(
+        "doc_id", "__e.band", "__e.band_key"
+    )
+
+
+@gateway_memo
+def _band_entries() -> Column:
+    """array<struct<band, band_key>> over a ``sig`` column, built once per
+    JVM (``functions/memo``)."""
     entries = []
     for b in range(N_BANDS):
         key = F.md5(
@@ -117,11 +135,10 @@ def _bands_of(sig: DataFrame) -> DataFrame:
         entries.append(
             F.struct(F.lit(b).alias("band"), key.alias("band_key"))
         )
-    return sig.select(
-        "doc_id", F.explode(F.array(*entries)).alias("__e")
-    ).select("doc_id", "__e.band", "__e.band_key")
+    return F.array(*entries)
 
 
+@gateway_memo
 def _est_jaccard(a: str, b: str):
     """Fraction of agreeing minhashes between two sig arrays."""
     eq = F.aggregate(

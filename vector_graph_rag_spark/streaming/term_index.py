@@ -42,7 +42,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vector_graph_rag_spark.functions.literals import inline_rows
 from vector_graph_rag_spark.functions.partitioning import ensure_parallel_scan
 from vector_graph_rag_spark.functions.text import tokens
 from vector_graph_rag_spark.streaming import shards
@@ -63,23 +62,33 @@ def append_term_batch(
     """Tokenize ONE batch and write its posting shard.  The only shuffle
     is the batch-local tf aggregation + the term-major repartition that
     co-locates each term's batch postings (bounded by BATCH tokens, never
-    the accumulated corpus — the whole point)."""
+    the accumulated corpus — the whole point).  The shard is the batch's
+    commit marker in the shard store's commit order
+    (``shards.write_batch``): a write that dies leaves no listed batch."""
     # a one-file micro-batch scans as one task and serializes the tokenize
     # map side; the tf groupBy re-parallelizes only after that scan
     docs = ensure_parallel_scan(docs)
-    batch_dir = shards.batch_path(index_dir, batch_id)
-    shards.clear(docs.sparkSession, batch_dir)
     tf = (
         docs.select("doc_id", F.explode(tokens(text_col)).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    _write_postings(tf, batch_dir)
+    shards.write_batch(
+        docs.sparkSession, batch_id, [(index_dir, lambda path: _write_postings(tf, path))]
+    )
+
+
+# declared beside the writer: readers never infer it, and a store with no
+# listed batch reads as no rows
+_POSTING_SCHEMA = "doc_id long, term string, w long"
 
 
 def _write_postings(rows: DataFrame, path: str) -> None:
-    """One posting shard, term-major (co-locates each term's postings)."""
-    rows.repartition(F.col("term")).write.mode("overwrite").parquet(path)
+    """One posting shard of ``_POSTING_SCHEMA``, term-major (co-locates
+    each term's postings)."""
+    rows.select(
+        F.col("doc_id").cast("long").alias("doc_id"), "term", "w"
+    ).repartition(F.col("term")).write.mode("overwrite").parquet(path)
 
 
 def append_doc_tombstones(
@@ -102,24 +111,25 @@ def append_doc_tombstones(
 def read_term_index(
     spark: SparkSession, index_dir: str, exclude_tombstoned: bool = True
 ) -> DataFrame:
-    """The logical posting table across all batches — (doc_id, term, w)
-    plus the ``batch`` partition column (dropped: consumers aggregate over
-    postings and must see the one-shot schema).  Batch shards are read by
-    EXPLICIT path (a ``tombstones/`` sibling under the index root must not
-    enter partition discovery).  Tombstoned documents are anti-joined out
-    of the logical table by default, so downstream statistics (df, dl,
-    avgdl) as well as scores reflect the post-delete corpus — the
-    correctness property a BM25-style consumer needs from deletes."""
-    ids = list_batch_ids(spark, index_dir)
-    if not ids:
-        return inline_rows(spark, [], "doc_id long, term string, w long")
-    return _postings(spark, index_dir, ids, exclude_tombstoned)
+    """The logical posting table across all batches — (doc_id, term, w),
+    the one-shot schema consumers aggregate over.  The listed batch shards
+    are read by EXPLICIT path with the declared schema
+    (``shards.read_declared``): no schema-inference job, and a store with
+    no listed batch reads as no rows.  Tombstoned documents are
+    anti-joined out of the logical table by default, so downstream
+    statistics (df, dl, avgdl) as well as scores reflect the post-delete
+    corpus — the correctness property a BM25-style consumer needs from
+    deletes."""
+    return _postings(spark, index_dir, None, exclude_tombstoned)
 
 
 def _postings(
-    spark: SparkSession, index_dir: str, ids: list[int], exclude_tombstoned: bool
+    spark: SparkSession,
+    index_dir: str,
+    ids: list[int] | None,
+    exclude_tombstoned: bool,
 ) -> DataFrame:
-    rows = shards.read_batches(spark, index_dir, ids).select("doc_id", "term", "w")
+    rows = shards.read_declared(spark, index_dir, _POSTING_SCHEMA, ids)
     if exclude_tombstoned:
         rows = shards.drop_tombstoned(spark, index_dir, rows, "doc_id")
     return rows
